@@ -3,11 +3,12 @@ decode kernel as a table function so plain-SQL sessions can do
 
     SELECT f.* FROM tiles, LATERAL decode_mvt(zoom, x, y, mvt) AS f
 
-The UDTF is a thin per-row wrapper over the same strict kernel the
-DataFrame path uses (kernels.mvt.decode_tile); the DataFrame API
-(`sources.tiles.decode_tiles`) remains the hot path — it is
-whole-Arrow-batch vectorized, while a UDTF yields row-at-a-time and is
-meant for ad-hoc SQL exploration, not the 100 TB pipeline.
+The UDTF is a thin per-row wrapper over the per-tile decoder
+(kernels.mvt.decode_tile, the strict oracle the DataFrame path names its
+rejections by); the DataFrame API (`sources.tiles.decode_tiles`) remains
+the hot path — it is whole-Arrow-batch vectorized, while a UDTF yields
+row-at-a-time and is meant for ad-hoc SQL exploration, not the 100 TB
+pipeline.
 """
 
 from __future__ import annotations

@@ -1,7 +1,13 @@
-"""Mapbox Vector Tile (spec 2.x) decode + encode kernel.
+"""Mapbox Vector Tile (spec 2.x) per-tile strict oracle, encoder and
+shared helpers.
 
-Brand-new implementation from the public MVT spec, replicating the
-reference's observable semantics (and documented quirks):
+Role: the Spark decode path runs on the batch kernel
+(kernels/mvt_batch.py), which reuses this module's layer walk
+(:func:`read_layer`), value decode and constants. ``decode_tile`` here
+stays as the per-tile strict oracle: the batch kernel names each tile it
+rejects in strict mode by the exception this decoder raises, and
+functions/sql_udtf.py serves it row-at-a-time. Semantics follow the
+public MVT spec and the reference's observable behaviour (and quirks):
 
 - root message: repeated Layer at tag 3
                   (ref: src/PbfReader/Constants.cs:36-39)
@@ -30,9 +36,8 @@ reference's observable semantics (and documented quirks):
 Value model: each decoded value is a (type_tag, python_value) pair so
 re-encode is lossless (type_tag ∈ 1..7 per Constants.cs:74-80).
 
-Decoding walks bytes with a per-TILE Python loop (amortized across
-thousands of features per tile); the hot geometry stream is handed to
-vectorized numpy (kernels.geom / kernels.pbf).
+Decoding walks bytes with a per-TILE Python loop; geometry command
+streams are kept packed (kernels.geom decodes them).
 """
 
 from __future__ import annotations
@@ -206,9 +211,13 @@ def decode_feature(buf: memoryview, validate: bool, layer: Layer) -> Feature:
     return f
 
 
-def decode_layer(buf: memoryview, validate: bool) -> Layer:
-    """ref: src/VectorTileReader/VectorTileReader.cs:134-252."""
+def read_layer(buf: memoryview, validate: bool) -> tuple[Layer, list[tuple[int, int]]]:
+    """Walk one layer message → (Layer without features, the (start, end)
+    span of each feature message in ``buf``, clipped to the layer as a
+    memoryview slice would be). ``validate`` applies the layer checks.
+    ref: src/VectorTileReader/VectorTileReader.cs:134-252."""
     layer = Layer()
+    keys, values = layer.keys, layer.values
     feature_spans: list[tuple[int, int]] = []
     pos = 0
     n = len(buf)
@@ -224,16 +233,17 @@ def decode_layer(buf: memoryview, validate: bool) -> Layer:
             layer.extent, pos = read_varint(buf, pos)
         elif tag == L_KEYS:
             ln, pos = read_varint(buf, pos)
-            layer.keys.append(bytes(buf[pos : pos + ln]).decode("utf-8"))
+            keys.append(bytes(buf[pos : pos + ln]).decode("utf-8"))
             pos += ln
         elif tag == L_VALUES:
             ln, pos = read_varint(buf, pos)
-            layer.values.append(_decode_value(buf[pos : pos + ln]))
+            values.append(_decode_value(buf[pos : pos + ln]))
             pos += ln
         elif tag == L_FEATURES:
             ln, pos = read_varint(buf, pos)
-            feature_spans.append((pos, pos + ln))  # lazy — decoded below
-            pos += ln
+            end = pos + ln
+            feature_spans.append((pos, end if end < n else n))  # lazy
+            pos = end
         else:
             pos = skip(buf, pos, wt)
     if validate:
@@ -248,24 +258,29 @@ def decode_layer(buf: memoryview, validate: bool) -> Layer:
             raise MvtError("layer has no features")
         if len({v for _, v in layer.values}) != len(layer.values):
             raise MvtError("layer values are not distinct")
+    return layer, feature_spans
+
+
+def decode_layer(buf: memoryview, validate: bool) -> Layer:
+    """ref: src/VectorTileReader/VectorTileReader.cs:134-252."""
+    layer, feature_spans = read_layer(buf, validate)
     for s, e in feature_spans:
         layer.features.append(decode_feature(buf[s:e], validate, layer))
     return layer
 
 
-def decode_tile(data: bytes, validate: bool = False) -> dict[str, Layer]:
-    """Decode a full tile → ordered {layer_name: Layer}.
+def iter_layers(data: bytes, validate: bool):
+    """Walk a tile's top-level fields → (start, memoryview) of each layer
+    message, raising on the tile-level faults.
 
     ref lifecycle: src/VectorTileReader/VectorTile.cs:23-26 +
-    VectorTileReader.cs:31-100 (incl. gzip guard :39-42 and unique layer
-    names :82-92).
+    VectorTileReader.cs:31-100 (incl. gzip guard :39-42).
     """
     if data is None or len(data) == 0:
         raise MvtError("tile data is empty")
     if len(data) >= 2 and data[0] == 0x1F and data[1] == 0x8B:
         raise MvtError("tile data is gzipped")  # VectorTileReader.cs:39-42
     buf = memoryview(data)
-    layers: dict[str, Layer] = {}
     pos = 0
     n = len(buf)
     while pos < n:
@@ -274,15 +289,23 @@ def decode_tile(data: bytes, validate: bool = False) -> dict[str, Layer]:
             ln, pos = read_varint(buf, pos)
             if pos + ln > n:  # a memoryview slice would silently truncate
                 raise MvtError("layer length overruns tile")
-            layer = decode_layer(buf[pos : pos + ln], validate)
+            yield pos, buf[pos : pos + ln]
             pos += ln
-            if layer.name in layers:
-                raise MvtError(f"duplicate layer name {layer.name}")
-            layers[layer.name] = layer
         else:
             if validate:
                 raise MvtError(f"unknown tile tag {tag}")  # VectorTileReader.cs:58-64
             pos = skip(buf, pos, wt)
+
+
+def decode_tile(data: bytes, validate: bool = False) -> dict[str, Layer]:
+    """Decode a full tile → ordered {layer_name: Layer}; layer names are
+    unique (VectorTileReader.cs:82-92)."""
+    layers: dict[str, Layer] = {}
+    for _, lbuf in iter_layers(data, validate):
+        layer = decode_layer(lbuf, validate)
+        if layer.name in layers:
+            raise MvtError(f"duplicate layer name {layer.name}")
+        layers[layer.name] = layer
     return layers
 
 

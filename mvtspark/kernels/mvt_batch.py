@@ -21,12 +21,15 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import mvt as mk
 from . import pbf
 from .geom import (
     CMD_CLOSE_PATH, CMD_LINE_TO, CMD_MOVE_TO,
     GEOM_POINT, GEOM_POLYGON, GeometryError,
 )
-from .pbf import varint_lengths, zigzag_decode, zigzag_encode
+from .pbf import (
+    read_key, read_varint, skip, varint_lengths, zigzag_decode, zigzag_encode,
+)
 
 
 def _gather_concat(src: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -322,14 +325,18 @@ def encode_features_batch(
 def decode_geometries_batch(
     geom_streams: np.ndarray,  # uint64, all command ints concatenated
     feat_span: np.ndarray,     # int64 (nfeat+1) spans into geom_streams
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, dict[int, str]]:
     """Decode command streams for nfeat features at once.
 
-    Returns (xs, ys, part_off_global, feat_part_off) in the closed-ring
-    convention of kernels.geom.decode_commands.
+    Returns (xs, ys, part_off_global, feat_part_off, faults) in the
+    closed-ring convention of kernels.geom.decode_commands. ``faults``
+    maps each feature whose stream decode_commands would reject to its
+    message; such a feature decodes to no parts, so the caller can drop
+    its tile instead of losing the whole batch.
     """
     nfeat = feat_span.size - 1
     g = geom_streams
+    faults: dict[int, str] = {}
     # --- per-feature header walk (cheap: few headers per feature)
     unit_feat: list[int] = []
     unit_cmd: list[int] = []
@@ -354,13 +361,25 @@ def decode_geometries_batch(
                 unit_count.append(0)
                 unit_pstart.append(p)
             else:
-                raise GeometryError(f"unknown command {cmd}")
-        if p != end:
-            raise GeometryError("command stream overruns buffer")
+                faults[f] = f"unknown command {cmd}"
+                break
+        else:
+            if p != end:
+                faults[f] = "command stream overruns buffer"
     uf = np.asarray(unit_feat, dtype=np.int64)
     uc = np.asarray(unit_cmd, dtype=np.int64)
     un = np.asarray(unit_count, dtype=np.int64)
     ups = np.asarray(unit_pstart, dtype=np.int64)
+    # a ClosePath opening its feature or following another ClosePath has
+    # no open part (MoveTo and LineTo both open one)
+    close = uc == CMD_CLOSE_PATH
+    orphan = close.copy()
+    orphan[1:] &= close[:-1] | (uf[1:] != uf[:-1])
+    for f in uf[orphan].tolist():
+        faults.setdefault(f, "ClosePath with no open part")
+    if faults:
+        ok = ~np.isin(uf, np.fromiter(faults, dtype=np.int64, count=len(faults)))
+        uf, uc, un, ups = uf[ok], uc[ok], un[ok], ups[ok]
     n_units = uf.size
 
     # --- extract + decode all params (vectorized)
@@ -421,9 +440,7 @@ def decode_geometries_batch(
             if cur < 0:
                 cur = w
             w += int(un[i])
-        else:  # ClosePath
-            if cur < 0:
-                raise GeometryError("ClosePath with no open part")
+        else:  # ClosePath (orphans were dropped above)
             part_start.append(cur); part_end.append(w)
             part_closed.append(True); part_feat.append(f)
             cur = -1
@@ -453,60 +470,12 @@ def decode_geometries_batch(
     np.add.at(parts_per_feat, pf, 1)
     feat_part_off = np.zeros(nfeat + 1, dtype=np.int64)
     np.cumsum(parts_per_feat, out=feat_part_off[1:])
-    return xs, ys, out_off, feat_part_off
+    return xs, ys, out_off, feat_part_off, faults
 
 
 # ---------------------------------------------------------------------------
 # whole-batch tile encode/decode (the Spark-facing entry points)
 # ---------------------------------------------------------------------------
-
-def encode_tile_rows(
-    tile_bounds: np.ndarray,   # int64 (ntiles+1) — feature spans per tile
-    feature_id: np.ndarray,
-    geom_type: np.ndarray,
-    part_offsets: list,        # per-feature int arrays (local offsets)
-    xs_list: list, ys_list: list,
-    props_json: list,          # per-feature JSON string or None
-    layer_name: str,
-    extents: np.ndarray,       # int64 per tile
-    version: int = 2,
-    props_typed: list | None = None,  # per-feature list of tagged-union
-    # structs {k, tag, s, f, d, i, u, si, b}; overrides props_json and
-    # preserves Float/Double/UInt/SInt/Bool type identity that a JSON
-    # round-trip cannot (SURVEY §1.3; VectorTileReader.cs:166-214)
-) -> list[bytes]:
-    """Encode features (sorted + grouped by tile via tile_bounds) into one
-    MVT blob per tile. Geometry/varint/assembly is batch-vectorized across
-    ALL tiles; only dictionary building (props) is per-feature Python.
-
-    Byte-identical to the per-tile path (mvt.encode_tile over
-    mvt.Layer/Feature built by sources.tiles.encode_tiles' original
-    implementation)."""
-    nfeat = feature_id.size
-
-    # --- flatten ragged vertices/parts (global indexing)
-    vcounts = np.fromiter((len(a) for a in xs_list), dtype=np.int64, count=nfeat)
-    vert_off = np.zeros(nfeat + 1, dtype=np.int64)
-    np.cumsum(vcounts, out=vert_off[1:])
-    xs = np.concatenate([np.asarray(a, dtype=np.int64) for a in xs_list]) if nfeat else np.empty(0, np.int64)
-    ys = np.concatenate([np.asarray(a, dtype=np.int64) for a in ys_list]) if nfeat else np.empty(0, np.int64)
-    pcounts = np.fromiter(
-        (max(len(p) - 1, 0) for p in part_offsets), dtype=np.int64, count=nfeat
-    )
-    feat_part_off = np.zeros(nfeat + 1, dtype=np.int64)
-    np.cumsum(pcounts, out=feat_part_off[1:])
-    part_off = np.empty(int(feat_part_off[-1]), dtype=np.int64)
-    w = 0
-    for i, p in enumerate(part_offsets):
-        k = max(len(p) - 1, 0)
-        if k:
-            part_off[w : w + k] = np.asarray(p[:-1], dtype=np.int64) + vert_off[i]
-            w += k
-    return _encode_from_flat(
-        tile_bounds, feature_id, geom_type, xs, ys, vert_off, part_off,
-        feat_part_off, props_json, props_typed, layer_name, extents, version,
-    )
-
 
 def encode_tile_rows_flat(
     tile_bounds: np.ndarray,
@@ -517,15 +486,23 @@ def encode_tile_rows_flat(
     vert_off: np.ndarray,      # int64 (nfeat+1) vertex spans
     po_flat: np.ndarray,       # flat LOCAL part offsets incl. trailing end
     po_off: np.ndarray,        # int64 (nfeat+1) spans into po_flat
-    props_json: list,
+    props_json: list,          # per-feature JSON string or None
     layer_name: str,
-    extents: np.ndarray,
+    extents: np.ndarray,       # int64 per tile
     version: int = 2,
+    props_typed: list | None = None,  # per-feature list of tagged-union
+    # structs {k, tag, s, f, d, i, u, si, b}; overrides props_json and
+    # preserves Float/Double/UInt/SInt/Bool type identity that a JSON
+    # round-trip cannot (SURVEY §1.3; VectorTileReader.cs:166-214)
 ) -> list[bytes]:
-    """Arrow fast path: same encode as :func:`encode_tile_rows` but fed
-    directly from ListArray value/offset buffers — the global part-offset
-    table is built by vector ops instead of a per-feature Python loop.
-    Byte-identical output (asserted in tests)."""
+    """Encode features (sorted + grouped by tile via tile_bounds) into one
+    MVT blob per tile, fed directly from ListArray value/offset buffers.
+    Geometry/varint/assembly is batch-vectorized across ALL tiles (the
+    global part-offset table too); only dictionary building (props) is
+    per-feature Python. Byte-identical to mvt.encode_tile over the same
+    layers (asserted in tests)."""
+    import json as _json
+
     nfeat = feature_id.size
     pc = np.diff(po_off)
     pcounts = np.maximum(pc - 1, 0)
@@ -540,23 +517,8 @@ def encode_tile_rows_flat(
         )[keep]
     else:
         part_off = np.empty(0, np.int64)
-    return _encode_from_flat(
-        tile_bounds, feature_id, geom_type,
-        xs.astype(np.int64, copy=False), ys.astype(np.int64, copy=False),
-        vert_off, part_off, feat_part_off, props_json, None,
-        layer_name, extents, version,
-    )
-
-
-def _encode_from_flat(
-    tile_bounds, feature_id, geom_type, xs, ys, vert_off, part_off,
-    feat_part_off, props_json, props_typed, layer_name, extents, version,
-) -> list[bytes]:
-    import json as _json
-
-    from . import mvt as mk
-
-    nfeat = feature_id.size
+    xs = xs.astype(np.int64, copy=False)
+    ys = ys.astype(np.int64, copy=False)
     ntiles = tile_bounds.size - 1
 
     # --- per-tile dictionaries + per-feature tags (Python, cheap dict ops)
@@ -699,16 +661,19 @@ _MAX_FEATURE_FIELDS = 64  # parser round cap; real features have <= ~6 fields
 
 
 def _parse_feature_headers(
-    allbuf: np.ndarray, fstart: np.ndarray, fend: np.ndarray
-) -> tuple:
+    allbuf: np.ndarray, fstart: np.ndarray, fend: np.ndarray, strict: bool
+) -> tuple[dict, np.ndarray]:
     """Vectorized walk of ALL feature messages at once (the per-feature
     Python loop dominated decode profiles at ~22us/feature; this replaces
     it with ~(#fields) masked numpy rounds over the whole batch).
 
-    Returns (fid u64, gt i64, tag_start, tag_end, geom_start, geom_end,
-    err bool) — spans are absolute offsets into ``allbuf``; rows with
-    ``err`` must invalidate their whole tile (same semantics as the
-    per-tile exception in the scalar path)."""
+    Returns ({fid u64, gt i64, tstart, tend, gstart, gend, rstart, rend},
+    err bool): spans are absolute offsets into ``allbuf`` (tags, geometry,
+    raster; ``rstart`` is -1 where the feature has no tag-5 raster field);
+    rows with ``err`` must invalidate their whole tile (same semantics as
+    the per-tile exception in the scalar path). ``strict`` also errs on
+    what the per-tile reader would read differently: a field tag outside
+    0 < tag < 19000, or a known field with the wrong wire type."""
     n = fstart.size
     fid = np.zeros(n, dtype=np.uint64)
     gt = np.zeros(n, dtype=np.int64)
@@ -716,6 +681,8 @@ def _parse_feature_headers(
     tend = np.zeros(n, dtype=np.int64)
     gstart = np.zeros(n, dtype=np.int64)
     gend = np.zeros(n, dtype=np.int64)
+    rstart = np.full(n, -1, dtype=np.int64)
+    rend = np.full(n, -1, dtype=np.int64)
     err = np.zeros(n, dtype=bool)
     p = fstart.astype(np.int64).copy()
     end = fend.astype(np.int64)
@@ -724,10 +691,16 @@ def _parse_feature_headers(
         if not active.any():
             break
         key, p2, e = _vec_varint_at(allbuf, p, active, end)
-        err |= e
-        active &= ~e
         tag = (key >> np.uint64(3)).astype(np.int64)
         wt = (key & np.uint64(7)).astype(np.int64)
+        if strict:
+            e |= active & (
+                (tag == 0) | (tag >= pbf.MAX_TAG)
+                | (((tag == 1) | (tag == 3)) & (wt != 0))
+                | (((tag == 2) | (tag == 4)) & (wt != 2))
+            )
+        err |= e
+        active &= ~e
 
         newp = p2.copy()
         # wire type 0: varint payload (F_ID tag 1, F_TYPE tag 3, unknowns)
@@ -740,7 +713,7 @@ def _parse_feature_headers(
             m = isv & (tag == 3)
             gt[m] = val[m].astype(np.int64)
             newp[isv] = p3[isv]
-        # wire type 2: length-delimited (F_TAGS tag 2, F_GEOMETRY tag 4)
+        # wire type 2: length-delimited (F_TAGS 2, F_GEOMETRY 4, F_RASTER 5)
         isl = active & (wt == 2)
         if isl.any():
             sl, p4, e2 = _vec_varint_at(allbuf, p2, isl, end)
@@ -751,12 +724,10 @@ def _parse_feature_headers(
             err |= isl & (sl > np.uint64(allbuf.size))
             isl &= ~err
             ld_end = p4 + sl.astype(np.int64)
-            m = isl & (tag == 2)
-            tstart[m] = p4[m]
-            tend[m] = ld_end[m]
-            m = isl & (tag == 4)
-            gstart[m] = p4[m]
-            gend[m] = ld_end[m]
+            for t, s0, s1 in ((2, tstart, tend), (4, gstart, gend), (5, rstart, rend)):
+                m = isl & (tag == t)
+                s0[m] = p4[m]
+                s1[m] = ld_end[m]
             newp[isl] = ld_end[isl]
         # fixed-width unknowns
         isf32 = active & (wt == 5)
@@ -769,7 +740,9 @@ def _parse_feature_headers(
         p = newp
         active = active & ~err & (p < end)
     err |= active  # field-count cap exceeded
-    return fid, gt, tstart, tend, gstart, gend, err
+    h = dict(fid=fid, gt=gt, tstart=tstart, tend=tend, gstart=gstart,
+             gend=gend, rstart=rstart, rend=rend)
+    return h, err
 
 
 #: value-union tag → struct field name (SURVEY §1.3 typed property union;
@@ -787,16 +760,12 @@ def typed_value_struct(tag: int, v: object) -> dict:
     return e
 
 
-def _peek_layer_name(buf, lstart: int, lend: int) -> str:
+def _peek_layer_name(buf: memoryview) -> str:
     """Name-only partial parse of one layer message (ref lazy index:
     VectorTileReader.cs:53-100): every non-name field is skipped by
     pointer arithmetic, no string/value decoding."""
-    from .pbf import read_key, read_varint, skip
-
-    from . import mvt as mk
-
-    p = lstart
-    while p < lend:
+    p = 0
+    while p < len(buf):
         t2, w2, p = read_key(buf, p)
         if t2 == mk.L_NAME:
             sl, p = read_varint(buf, p)
@@ -811,41 +780,22 @@ def layers_index(blobs: list) -> tuple[list, list, list, dict]:
     COUNTS from a partial parse — feature bodies, dictionaries, geometry
     and props are never decoded. Returns (tile_idx, names,
     feature_counts, err_tiles)."""
-    from . import mvt as mk
-    from .pbf import read_key, read_varint, skip
-
     t_out: list[int] = []
     n_out: list[str] = []
     c_out: list[int] = []
     errs: dict[int, str] = {}
     for ti, blob in enumerate(blobs):
         try:
-            data = bytes(blob)
-            if len(data) == 0:
-                raise mk.MvtError("tile data is empty")
-            if len(data) >= 2 and data[0] == 0x1F and data[1] == 0x8B:
-                raise mk.MvtError("tile data is gzipped")
-            buf = memoryview(data)
-            pos, n = 0, len(buf)
             seen: set[str] = set()
             # staged: an error on a later layer must not leave earlier
             # index rows for a tile that also gets an error row
             tt: list[str] = []
             tc: list[int] = []
-            while pos < n:
-                tag, wt, pos = read_key(buf, pos)
-                if tag != mk.T_LAYERS:
-                    pos = skip(buf, pos, wt)
-                    continue
-                ln, pos = read_varint(buf, pos)
-                lstart, lend = pos, pos + ln
-                if lend > n:
-                    raise mk.MvtError("layer length overruns tile")
-                pos = lend
+            for _, buf in mk.iter_layers(bytes(blob), False):
                 name = ""
                 nfeat = 0
-                p = lstart
-                while p < lend:
+                p = 0
+                while p < len(buf):
                     t2, w2, p = read_key(buf, p)
                     if t2 == mk.L_NAME:
                         sl, p = read_varint(buf, p)
@@ -870,293 +820,249 @@ def layers_index(blobs: list) -> tuple[list, list, list, dict]:
     return t_out, n_out, c_out, errs
 
 
+def _flag(faults: dict[int, str], mask: np.ndarray, msg: str) -> dict[int, str]:
+    """Record ``msg`` for every feature in ``mask`` that has no fault yet."""
+    for f in np.flatnonzero(mask).tolist():
+        faults.setdefault(f, msg)
+    return faults
+
+
+def _drop_tiles(
+    h: dict, faults: dict[int, str], err_tiles: dict[int, str],
+    keep: np.ndarray | None = None,
+) -> tuple[dict, np.ndarray]:
+    """Error-row every tile holding a faulty feature (``faults``: feature
+    index → message; a tile keeps its first message) and drop all of those
+    tiles' features from the per-feature arrays ``h``, so one bad feature
+    poisons only its own tile; also returns the keep mask applied.
+    ``keep`` drops further features silently."""
+    tile = h["tile"]
+    for f, msg in faults.items():
+        err_tiles.setdefault(int(tile[f]), msg)
+    bad = np.isin(tile, tile[np.fromiter(faults, dtype=np.int64, count=len(faults))])
+    keep = ~bad if keep is None else keep & ~bad
+    return {k: v[keep] for k, v in h.items()}, keep
+
+
+def _keep_spans(
+    vals: np.ndarray, span: np.ndarray, keep: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The values and (n+1) spans of the features ``keep`` selects."""
+    counts = np.diff(span)
+    new = np.zeros(int(keep.sum()) + 1, dtype=np.int64)
+    np.cumsum(counts[keep], out=new[1:])
+    return vals[np.repeat(keep, counts)], new
+
+
+def _batch_varints(
+    allbuf: np.ndarray, starts: np.ndarray, ends: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, dict[int, str]]:
+    """Decode every feature's packed varint field allbuf[starts:ends] in
+    one call → (values u64, per-feature value spans (n+1), faults). A
+    field the per-tile reader rejects (pbf.decode_varint_stream: it does
+    not end on a varint terminator, or holds a varint over 10 bytes) is a
+    fault and decodes as empty, so it can neither fail the batch nor run
+    into the next feature's first value."""
+    lens = ends - starts
+    last = allbuf[np.maximum(ends - 1, 0)]
+    faults = _flag({}, (lens > 0) & (last >= 0x80), "truncated varint at end of stream")
+    lens[list(faults)] = 0
+    seg = _gather_concat(allbuf, starts, lens)
+    try:
+        vals = pbf.decode_varint_stream(seg)
+    except pbf.PbfError:  # a varint over 10 bytes: find its fields
+        for f in np.flatnonzero(lens).tolist():
+            try:
+                pbf.decode_varint_stream(allbuf[starts[f]: starts[f] + lens[f]])
+            except pbf.PbfError as e:
+                faults[f] = str(e)
+                lens[f] = 0
+        seg = _gather_concat(allbuf, starts, lens)
+        vals = pbf.decode_varint_stream(seg)
+    nvals = _reduceat_sums(
+        ((seg & 0x80) == 0).astype(np.int64), np.concatenate(([0], np.cumsum(lens)))
+    )
+    span = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(nvals, out=span[1:])
+    return vals, span, faults
+
+
 def decode_tile_rows(
     blobs: list,
-    typed_props: bool = False,
-    flat: bool = False,
     layer_filter: frozenset | set | None = None,
+    validate: bool = False,
+    typed_props: bool = False,
+    raster: bool = False,
+    flat: bool = True,
 ) -> tuple:
-    """Decode a batch of tile blobs → flat per-feature columns.
+    """Decode a batch of tile blobs → flat per-feature columns, the shape
+    ``pyarrow.ListArray.from_arrays`` wants:
 
-    Returns (tile_idx, layer_names, extents, feature_ids, geom_types,
-    xs_list, ys_list, off_list, props_list, err_tiles) where err_tiles is
-    {tile_idx: error_str} for undecodable tiles (lenient mode). With
-    ``typed_props=True`` an 11th element is appended: per-feature
-    ``list[dict]`` rows of the tagged union struct
-    (k, tag, s, f, d, i, u, si, b) preserving Float/Double/UInt/SInt/Bool
-    type identity end-to-end (VectorTileReader.cs:166-214).
-
-    ``flat=True`` (the mapInArrow fast path) replaces the three ragged
-    per-feature array lists with FLAT arrays + offset vectors — built by
-    pure vector ops, no per-feature slicing loop — returning
     (tile_idx i64, layer_names, extents, feature_ids i64, geom_types,
-    xs_flat, ys_flat, vert_off (nfeat+1), parts_flat i32,
-    parts_cnt (per-feature), props_list, err_tiles); exactly the shape
-    ``pyarrow.ListArray.from_arrays`` wants.
+    xs_flat, ys_flat, vert_off (nfeat+1), parts_flat i32, parts_cnt
+    (per-feature), props_list, [props_t], [raster], err_tiles)
+
+    ``props_t`` (only with ``typed_props=True``) holds per-feature
+    ``list[dict]`` rows of the tagged union struct (k, tag, s, f, d, i, u,
+    si, b), preserving Float/Double/UInt/SInt/Bool type identity
+    (VectorTileReader.cs:166-214); ``raster`` (only with ``raster=True``)
+    the Feature.Raster (tag 5) payload bytes or None. ``err_tiles`` is
+    {tile_idx: error} for the tiles that yield no features: a bad tile
+    never fails the batch.
+
+    ``layer_filter`` keeps only the named layers; lenient mode skips the
+    others after a name-only peek. ``validate=True`` adds the reference's
+    strict checks (VectorTileReader.cs:58-64, 224-252, 331-372) on every
+    layer, selected or not, and names each rejected tile by the exception
+    of the per-tile oracle ``mvt.decode_tile(blob, validate=True)``.
 
     Tile/layer structure walk is per-tile Python (few iterations);
     feature headers, varint streams and geometry are batch-vectorized
     across ALL features of ALL tiles in the batch."""
-    import json as _json
-
-    from . import mvt as mk
-    from .pbf import read_key, read_varint, skip
-
-    # per-layer records from the python tile/layer walk
-    lay_tile: list[int] = []
-    lay_buf: list[int] = []
-    lay_name: list[str] = []
-    lay_ext: list[int] = []
-    lay_keys: list[list[str]] = []
-    lay_vals: list[list] = []
-    lay_fs: list[list[tuple[int, int]]] = []  # local feature spans
+    if not flat:
+        # the keyword stays only because perfbench/ passes flat=True;
+        # the flat layout is the only one
+        raise ValueError("decode_tile_rows: only flat=True is supported")
     err_tiles: dict[int, str] = {}
-    bufs: list[np.ndarray] = []
+    cols = _decode_flat(blobs, layer_filter, validate, typed_props, raster, err_tiles)
+    if validate:
+        # rejections are rare: name each by the per-tile oracle. A tile the
+        # oracle reads (a geometry command fault — it leaves command
+        # streams packed) keeps the batch's message.
+        for ti in err_tiles:
+            try:
+                mk.decode_tile(bytes(blobs[ti]), validate=True)
+            except Exception as e:
+                err_tiles[ti] = str(e)
+    return cols + (err_tiles,)
 
+
+def _decode_flat(
+    blobs: list, layer_filter, validate: bool, typed_props: bool,
+    raster: bool, err_tiles: dict[int, str],
+) -> tuple:
+    """decode_tile_rows without its error naming; fills ``err_tiles``."""
+    import json as _json
+    from itertools import chain
+
+    # strict mode checks every layer, so it walks them all
+    peek = None if layer_filter is None or validate else frozenset(layer_filter)
+    layers: list = []
+    lay_tile: list[int] = []
+    lay_base: list[int] = []  # layer start in the batch buffer
+    lay_fs: list[list[tuple[int, int]]] = []  # feature spans in the layer
+    bufs: list[np.ndarray] = []
+    base = 0
     for ti, blob in enumerate(blobs):
+        # staged: a fault on a later layer must leave no layer of this tile
+        walked: list = []  # (mk.Layer, start in the tile, feature spans)
+        seen: set[str] = set()
         try:
             data = bytes(blob)
-            if len(data) == 0:
-                raise mk.MvtError("tile data is empty")
-            if len(data) >= 2 and data[0] == 0x1F and data[1] == 0x8B:
-                raise mk.MvtError("tile data is gzipped")
-            buf = memoryview(data)
-            buf_id = len(bufs)
-            seen_names: set[str] = set()
-            # STAGED per-tile records: committed to lay_* only after the
-            # whole tile walks cleanly — an exception on a LATER layer
-            # (duplicate name, overrun) must not leave earlier layers
-            # referencing a buf_id that bufs.append never backs (that
-            # decoded features from the NEXT tile's bytes, or crashed
-            # the whole batch)
-            t_name: list[str] = []
-            t_ext: list[int] = []
-            t_keys: list[list[str]] = []
-            t_vals: list[list] = []
-            t_fs: list[list[tuple[int, int]]] = []
-            pos, n = 0, len(buf)
-            while pos < n:
-                tag, wt, pos = read_key(buf, pos)
-                if tag != mk.T_LAYERS:
-                    pos = skip(buf, pos, wt)
-                    continue
-                ln, pos = read_varint(buf, pos)
-                lstart, lend = pos, pos + ln
-                if lend > n:
-                    raise mk.MvtError("layer length overruns tile")
-                pos = lend
-                if layer_filter is not None:
-                    # lazy layer skip (ref layers_index name-only scan,
-                    # VectorTileReader.cs:53-100): peek ONLY the name —
-                    # for unselected layers the dictionary strings,
-                    # feature headers, varint streams, geometry and
-                    # props are never touched
-                    nm = _peek_layer_name(buf, lstart, lend)
-                    if nm not in layer_filter:
-                        if nm in seen_names:
-                            raise mk.MvtError(f"duplicate layer name {nm}")
-                        seen_names.add(nm)
-                        continue
-                name = ""
-                extent = mk.DEFAULT_EXTENT
-                keys: list[str] = []
-                values: list = []
-                fspans: list[tuple[int, int]] = []
-                p = lstart
-                while p < lend:
-                    t2, w2, p = read_key(buf, p)
-                    if t2 == mk.L_VERSION:
-                        _, p = read_varint(buf, p)
-                    elif t2 == mk.L_NAME:
-                        sl, p = read_varint(buf, p)
-                        name = bytes(buf[p : p + sl]).decode("utf-8")
-                        p += sl
-                    elif t2 == mk.L_EXTENT:
-                        extent, p = read_varint(buf, p)
-                    elif t2 == mk.L_KEYS:
-                        sl, p = read_varint(buf, p)
-                        keys.append(bytes(buf[p : p + sl]).decode("utf-8"))
-                        p += sl
-                    elif t2 == mk.L_VALUES:
-                        sl, p = read_varint(buf, p)
-                        values.append(mk._decode_value(buf[p : p + sl]))
-                        p += sl
-                    elif t2 == mk.L_FEATURES:
-                        sl, p = read_varint(buf, p)
-                        fspans.append((p, p + sl))
-                        p += sl
-                    else:
-                        p = skip(buf, p, w2)
-                if name in seen_names:
+            for lstart, lbuf in mk.iter_layers(data, validate):
+                # lazy layer skip (ref layers_index name-only scan,
+                # VectorTileReader.cs:53-100): for unselected layers the
+                # dictionaries, feature headers, varint streams, geometry
+                # and props are never touched
+                if peek is None or (name := _peek_layer_name(lbuf)) in peek:
+                    layer, spans = mk.read_layer(lbuf, validate)
+                    name = layer.name
+                    walked.append((layer, lstart, spans))
+                if name in seen:
                     raise mk.MvtError(f"duplicate layer name {name}")
-                seen_names.add(name)
-                t_name.append(name)
-                t_ext.append(extent)
-                t_keys.append(keys)
-                t_vals.append(values)
-                t_fs.append(fspans)
-            # commit the whole tile atomically
-            lay_tile.extend([ti] * len(t_name))
-            lay_buf.extend([buf_id] * len(t_name))
-            lay_name.extend(t_name)
-            lay_ext.extend(t_ext)
-            lay_keys.extend(t_keys)
-            lay_vals.extend(t_vals)
-            lay_fs.extend(t_fs)
-            bufs.append(np.frombuffer(data, dtype=np.uint8))
+                seen.add(name)
         except Exception as e:  # lenient: tile-level error row
             err_tiles[ti] = str(e)
+            continue
+        for layer, lstart, spans in walked:
+            layers.append(layer)
+            lay_tile.append(ti)
+            lay_base.append(base + lstart)
+            lay_fs.append(spans)
+        bufs.append(np.frombuffer(data, dtype=np.uint8))
+        base += len(data)
 
-    nlayers = len(lay_name)
-    counts = np.fromiter(
-        (len(f) for f in lay_fs), dtype=np.int64, count=nlayers
-    )
-    if flat and typed_props:
-        raise ValueError(
-            "decode_tile_rows: flat mode does not carry props_t — "
-            "use the pandas path for typed properties"
-        )
+    nlayers = len(layers)
+    counts = np.fromiter((len(f) for f in lay_fs), dtype=np.int64, count=nlayers)
     nfeat = int(counts.sum())
-    if flat:
-        empty = (
-            np.empty(0, np.int64), [], [], np.empty(0, np.int64),
-            np.empty(0, np.int64), np.empty(0, np.int64),
-            np.empty(0, np.int64), np.zeros(1, np.int64),
-            np.empty(0, np.int32), np.empty(0, np.int64), [], err_tiles,
-        )
-    else:
-        empty = ([], [], [], [], [], [], [], [], [], err_tiles)
-        if typed_props:
-            empty = empty + ([],)
-    if nfeat == 0:
-        return empty
-
-    buf_base = np.zeros(len(bufs) + 1, dtype=np.int64)
-    np.cumsum(
-        np.fromiter((b.size for b in bufs), dtype=np.int64, count=len(bufs)),
-        out=buf_base[1:],
-    )
     allbuf = np.concatenate(bufs) if bufs else np.empty(0, np.uint8)
-
-    # flatten feature spans to absolute offsets
     feat_layer = np.repeat(np.arange(nlayers, dtype=np.int64), counts)
-    lay_base = buf_base[np.asarray(lay_buf, dtype=np.int64)]
-    feat_base = lay_base[feat_layer]
-    fstart = feat_base + np.fromiter(
-        (s for fs in lay_fs for s, _ in fs), dtype=np.int64, count=nfeat
-    )
-    fend = feat_base + np.fromiter(
-        (e for fs in lay_fs for _, e in fs), dtype=np.int64, count=nfeat
-    )
+    spans = np.fromiter(
+        chain.from_iterable(chain.from_iterable(lay_fs)), dtype=np.int64,
+        count=2 * nfeat,
+    ).reshape(nfeat, 2) + np.asarray(lay_base, dtype=np.int64)[feat_layer, None]
 
-    fid_u, gt_a, tstart, tend, gstart, gend, ferr = _parse_feature_headers(
-        allbuf, fstart, fend
-    )
+    h, herr = _parse_feature_headers(allbuf, spans[:, 0], spans[:, 1], validate)
+    h["layer"] = feat_layer
+    h["tile"] = np.asarray(lay_tile, dtype=np.int64)[feat_layer]
+    faults = _flag({}, herr, "malformed feature message")
+    if validate:  # ref: VectorTileReader.cs:331-340
+        _flag(faults, h["gt"] == 0, "feature has no geometry type")
+        _flag(faults, h["gend"] == h["gstart"], "feature has no geometry")
+    if faults:
+        h, _ = _drop_tiles(h, faults, err_tiles)
 
-    # a malformed feature invalidates its whole tile (scalar-path parity)
-    feat_tile = np.asarray(lay_tile, dtype=np.int64)[feat_layer]
-    if ferr.any():
-        for ti in np.unique(feat_tile[ferr]):
-            err_tiles[int(ti)] = "malformed feature message"
-        keep = ~np.isin(feat_tile, feat_tile[ferr])
-        if not keep.any():
-            return empty
-        feat_layer = feat_layer[keep]
-        feat_tile = feat_tile[keep]
-        fid_u, gt_a = fid_u[keep], gt_a[keep]
-        tstart, tend = tstart[keep], tend[keep]
-        gstart, gend = gstart[keep], gend[keep]
-        nfeat = int(feat_layer.size)
-
-    # --- batch varint decode of all geometry + tag streams
-    def _batch_varints(starts: np.ndarray, ends: np.ndarray):
-        lens = ends - starts
-        seg = _gather_concat(allbuf, starts, lens)
-        vals = pbf.decode_varint_stream(seg) if seg.size else np.empty(0, np.uint64)
-        term = (seg & 0x80) == 0
-        nvals = _reduceat_sums(
-            term.astype(np.int64),
-            np.concatenate(([0], np.cumsum(lens))),
-        )
-        span = np.zeros(nfeat + 1, dtype=np.int64)
-        np.cumsum(nvals, out=span[1:])
-        return vals, span
-
-    tag_vals, tag_span = _batch_varints(tstart, tend)
-
-    # lenient tag-dictionary bounds check: an out-of-range tag index
-    # would crash the whole batch at props assembly (IndexError into the
-    # per-layer key/value fragment lists) — poison ONLY its tile, the
-    # same contract as malformed feature headers above
+    # --- tag streams of every walked layer (strict checks them all)
+    tag_vals, tag_span, faults = _batch_varints(allbuf, h["tstart"], h["tend"])
+    tcounts = np.diff(tag_span)
+    if validate:  # ref: VectorTileReader.cs:341-344
+        _flag(faults, tcounts % 2 == 1, "uneven number of feature tags")
     if tag_vals.size:
-        nk = np.fromiter((len(k) for k in lay_keys), dtype=np.int64, count=nlayers)
-        nv = np.fromiter((len(v) for v in lay_vals), dtype=np.int64, count=nlayers)
-        tcounts = np.diff(tag_span)
-        tfeat = np.repeat(np.arange(nfeat, dtype=np.int64), tcounts)
-        toff = np.arange(tag_vals.size, dtype=np.int64) - np.repeat(
-            tag_span[:-1], tcounts
-        )
-        lim = np.where(
-            toff % 2 == 0, nk[feat_layer][tfeat], nv[feat_layer][tfeat]
-        ).astype(np.uint64)
-        badt = tag_vals >= lim
-        if badt.any():
-            bad_tiles = np.unique(feat_tile[np.unique(tfeat[badt])])
-            for ti in bad_tiles:
-                err_tiles[int(ti)] = "tag index out of range"
-            keep = ~np.isin(feat_tile, bad_tiles)
-            if not keep.any():
-                return empty
-            feat_layer, feat_tile = feat_layer[keep], feat_tile[keep]
-            fid_u, gt_a = fid_u[keep], gt_a[keep]
-            gstart, gend = gstart[keep], gend[keep]
-            tag_vals = tag_vals[np.repeat(keep, tcounts)]
-            tcounts = tcounts[keep]
-            nfeat = int(feat_layer.size)
-            tag_span = np.zeros(nfeat + 1, dtype=np.int64)
-            np.cumsum(tcounts, out=tag_span[1:])
+        # a tag index past its layer's dictionary would crash props
+        # assembly with an IndexError: poison only its tile
+        # (strict: VectorTileReader.cs:345-371)
+        nk = np.fromiter((len(l.keys) for l in layers), dtype=np.int64, count=nlayers)
+        nv = np.fromiter((len(l.values) for l in layers), dtype=np.int64, count=nlayers)
+        tfeat = np.repeat(np.arange(tcounts.size, dtype=np.int64), tcounts)
+        toff = np.arange(tag_vals.size, dtype=np.int64) - tag_span[tfeat]
+        tl = h["layer"][tfeat]
+        lim = np.where(toff % 2 == 0, nk[tl], nv[tl]).astype(np.uint64)
+        bad = np.zeros(tcounts.size, dtype=bool)
+        bad[tfeat[tag_vals >= lim]] = True
+        _flag(faults, bad, "tag index out of range")
+    keep = None
+    if validate and layer_filter is not None:  # drop the unselected layers
+        keep = np.fromiter(
+            (l.name in layer_filter for l in layers), dtype=bool, count=nlayers
+        )[h["layer"]]
+    if faults or keep is not None:
+        h, keep = _drop_tiles(h, faults, err_tiles, keep)
+        tag_vals, tag_span = _keep_spans(tag_vals, tag_span, keep)
 
-    geom_vals, geom_span = _batch_varints(gstart, gend)
-    xs, ys, part_off_g, feat_part_off = decode_geometries_batch(geom_vals, geom_span)
+    # --- geometry of the selected layers
+    def _geometry(h: dict) -> tuple[tuple, dict[int, str]]:
+        vals, span, faults = _batch_varints(allbuf, h["gstart"], h["gend"])
+        *geo, cfaults = decode_geometries_batch(vals, span)
+        faults.update(cfaults)
+        return geo, faults
+
+    (xs, ys, part_off_g, feat_part_off), faults = _geometry(h)
+    if faults:  # rare: drop those tiles and decode the rest again
+        h, keep = _drop_tiles(h, faults, err_tiles)
+        tag_vals, tag_span = _keep_spans(tag_vals, tag_span, keep)
+        (xs, ys, part_off_g, feat_part_off), _ = _geometry(h)
     part_off_g32 = part_off_g.astype(np.int32)
+    nfeat = h["tile"].size
+    feat_layer = h["layer"].tolist()
 
     # per-layer pre-encoded JSON fragments: one dumps per dictionary
     # entry instead of one dict-dumps per FEATURE (shared dictionaries
     # amortize across all their features)
-    key_frags = [[_json.dumps(k) for k in ks] for ks in lay_keys]
-    val_frags = [
-        [_json.dumps(v[1], default=str) for v in vs] for vs in lay_vals
-    ]
+    key_frags = [[_json.dumps(k) for k in l.keys] for l in layers]
+    val_frags = [[_json.dumps(v, default=str) for _, v in l.values] for l in layers]
     # typed union: one struct template per dictionary VALUE, shared
     # across all features that reference it (then per-pair dict merge)
     val_structs = (
-        [[typed_value_struct(t, v) for t, v in vs] for vs in lay_vals]
+        [[typed_value_struct(t, v) for t, v in l.values] for l in layers]
         if typed_props else None
     )
+    lnames = [layers[l].name for l in feat_layer]
+    exts = [layers[l].extent for l in feat_layer]
 
-    tidx = feat_tile.tolist() if not flat else feat_tile
-    lnames = [lay_name[l] for l in feat_layer]
-    exts = [lay_ext[l] for l in feat_layer]
-    fids = fid_u.view(np.int64).tolist() if not flat else fid_u.view(np.int64)
-    gtypes = gt_a.tolist() if not flat else gt_a
-
-    xs_list: list[np.ndarray] = []
-    ys_list: list[np.ndarray] = []
-    off_list: list[np.ndarray] = []
     props_list: list = []
     props_t_list: list = []
     tag_pairs = tag_vals.astype(np.int64)
     for f in range(nfeat):
-        if not flat:
-            p0, p1 = int(feat_part_off[f]), int(feat_part_off[f + 1])
-            v0 = int(part_off_g[p0]) if p0 < p1 else 0
-            v1 = int(part_off_g[p1]) if p0 < p1 else 0
-            xs_list.append(xs[v0:v1])
-            ys_list.append(ys[v0:v1])
-            off_list.append(
-                (part_off_g32[p0 : p1 + 1] - np.int32(v0))
-                if p0 < p1 else np.zeros(1, np.int32)
-            )
         lid = feat_layer[f]
         kf = key_frags[lid]
         vf = val_frags[lid]
@@ -1176,30 +1082,32 @@ def decode_tile_rows(
         else:
             props_list.append("{}")
         if typed_props:
-            ks = lay_keys[lid]
+            ks = layers[lid].keys
             vt = val_structs[lid]
             props_t_list.append([
                 {"k": ks[int(tag_pairs[j])], **vt[int(tag_pairs[j + 1])]}
                 for j in range(t0, t1 - 1, 2)
             ])
-    if flat:
-        # per-feature vertex spans: contiguous and ordered by feature,
-        # so the offsets vector is a single gather
-        vert_off = part_off_g[feat_part_off]
-        pd_diff = np.diff(feat_part_off)
-        sizes = np.where(pd_diff > 0, pd_diff + 1, 1)
-        pb = np.zeros(nfeat + 1, dtype=np.int64)
-        np.cumsum(sizes, out=pb[1:])
-        within = np.arange(int(pb[-1]), dtype=np.int64) - np.repeat(
-            pb[:-1], sizes
-        )
-        src = np.repeat(feat_part_off[:-1], sizes) + within
-        parts_flat = part_off_g32[src] - np.repeat(
-            part_off_g32[feat_part_off[:-1]], sizes
-        )
-        return (
-            tidx, lnames, exts, fids, gtypes, xs, ys, vert_off,
-            parts_flat, sizes, props_list, err_tiles,
-        )
-    out = (tidx, lnames, exts, fids, gtypes, xs_list, ys_list, off_list, props_list, err_tiles)
-    return out + (props_t_list,) if typed_props else out
+
+    # per-feature vertex spans: contiguous and ordered by feature, so the
+    # offsets vector is a single gather
+    vert_off = part_off_g[feat_part_off]
+    pd_diff = np.diff(feat_part_off)
+    sizes = np.where(pd_diff > 0, pd_diff + 1, 1)
+    pb = np.zeros(nfeat + 1, dtype=np.int64)
+    np.cumsum(sizes, out=pb[1:])
+    within = np.arange(int(pb[-1]), dtype=np.int64) - np.repeat(pb[:-1], sizes)
+    src = np.repeat(feat_part_off[:-1], sizes) + within
+    parts_flat = part_off_g32[src] - np.repeat(part_off_g32[feat_part_off[:-1]], sizes)
+    out = (
+        h["tile"], lnames, exts, h["fid"].view(np.int64), h["gt"], xs, ys,
+        vert_off, parts_flat, sizes, props_list,
+    )
+    if typed_props:
+        out += (props_t_list,)
+    if raster:
+        out += ([
+            allbuf[s:e].tobytes() if s >= 0 else None
+            for s, e in zip(h["rstart"].tolist(), h["rend"].tolist())
+        ],)
+    return out

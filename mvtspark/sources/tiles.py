@@ -7,10 +7,10 @@
   (ref: src/Bench/Program.cs:41-63)
 - ``tile_polygons``: rectangular tile-boundary rings in tile units
   (FIXTURES.md §2) — the spatial-join dimension table
-- ``decode_tiles``: tiles DF → features DF via the MVT kernel
-  (mapInPandas; one Python iteration per TILE, vectorized inside)
+- ``decode_tiles``: tiles DF → features DF via the batch MVT kernel
+  (mapInArrow; one kernel call per Arrow BATCH, every mode)
 - ``encode_tiles``: per-(zoom,x,y) feature groups → MVT binary
-  (applyInPandas; S9)
+  (mapInArrow over the batch encoder; S9)
 - ``to_geojson``: per-tile GeoJSON FeatureCollection strings
   (ref: src/ExtensionMethods/VectorTile.cs:33-207)
 """
@@ -146,160 +146,37 @@ def decode_tiles(
     layers: set | frozenset | None = None,
     raster: bool = False,
 ) -> DataFrame:
-    """tiles (zoom,x,y,mvt) → one row per feature (lenient mode puts the
-    error in ``decode_error`` instead of failing the job — engine-side
-    replacement for the reference's throw-on-invalid, SURVEY §1.3).
+    """tiles (zoom,x,y,mvt) → one row per feature; an undecodable tile
+    gives one row carrying ``decode_error`` instead of failing the job
+    (engine-side replacement for the reference's throw-on-invalid,
+    SURVEY §1.3).
 
-    Whole-batch vectorized: one kernels.mvt_batch.decode_tile_rows call
-    per Arrow batch (varints + geometry decoded for ALL features at once);
-    ``validate=True`` routes through the strict per-tile kernel
-    (kernels.mvt.decode_tile) which enforces the full reference
-    validation suite. ``typed_props=True`` appends a ``props_t`` column —
-    the SURVEY §1.3 tagged 7-way union preserving Float/Double/UInt/SInt/
-    Bool type identity (VectorTileReader.cs:166-214) that the JSON
-    ``props`` string loses; opt-in so the hot path pays nothing.
+    One ``mapInArrow`` for every mode (SURVEY §2.9): one
+    kernels.mvt_batch.decode_tile_rows call per Arrow batch decodes the
+    varints and geometry of ALL its features at once, and the ragged
+    xs/ys/part_offsets columns are built directly as Arrow ListArrays
+    from the kernel's flat arrays + offsets — no pandas conversion, no
+    per-feature Python slicing.
+
+    ``validate=True`` applies the reference validation suite to every
+    layer; a rejected tile's ``decode_error`` is the message of the
+    per-tile strict oracle (kernels.mvt.decode_tile). ``typed_props=True``
+    appends a ``props_t`` column — the SURVEY §1.3 tagged 7-way union
+    preserving Float/Double/UInt/SInt/Bool type identity
+    (VectorTileReader.cs:166-214) that the JSON ``props`` string loses.
+    ``raster=True`` appends the Feature.Raster (tag 5) payload as a
+    nullable ``raster binary`` column — the field the reference declares
+    but never decodes (Constants.cs:59-66). Both are opt-in so the hot
+    path pays nothing.
 
     ``layers`` restricts decoding to the named layers via the kernel's
     lazy name-only peek (ref layers_index, VectorTileReader.cs:53-100) —
     unselected layers never decode their dictionaries, features or
-    geometry.
-
-    ``raster=True`` appends the Feature.Raster (tag 5) payload as a
-    nullable ``raster binary`` column — the field the reference declares
-    but never decodes (Constants.cs:59-66); opt-in like ``typed_props``
-    so the hot path pays nothing, and routed through the per-tile kernel
-    (raster tiles are rare by construction).
-
-    The plain lenient mode (no validate, no typed_props, no raster —
-    the hot path) is served by :func:`decode_tiles_arrow`, which skips
-    both pandas conversions entirely (verified row-identical; ~1.4x on
-    the decode bench, more as features/batch grow)."""
-    if not validate and not typed_props and not raster:
-        return decode_tiles_arrow(tiles, layers=layers)
+    geometry (strict mode still checks them)."""
     lf = frozenset(layers) if layers is not None else None
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from mvtspark.kernels import geom as gk
-        from mvtspark.kernels import mvt as mk
-        from mvtspark.kernels.mvt_batch import (
-            decode_tile_rows,
-            typed_value_struct,
-        )
-
-        cols = [
-            "zoom", "x", "y", "layer", "extent", "feature_id", "geom_type",
-            "part_offsets", "xs", "ys", "props", "decode_error",
-        ]
-        if typed_props:
-            cols = cols + ["props_t"]
-        if raster:
-            cols = cols + ["raster"]
-        for pdf in batches:
-            if validate or raster:
-                # per-tile kernel: strict check suite and/or tag-5 payload
-                out: list[dict] = []
-                for zoom, x, y, blob in zip(pdf["zoom"], pdf["x"], pdf["y"], pdf["mvt"]):
-                    base = dict(zoom=int(zoom), x=int(x), y=int(y))
-                    try:
-                        layers = mk.decode_tile(bytes(blob), validate=validate)
-                    except Exception as e:
-                        out.append(dict(base, layer=None, extent=None,
-                                        feature_id=None, geom_type=None,
-                                        part_offsets=None, xs=None, ys=None,
-                                        props=None, props_t=None, raster=None,
-                                        decode_error=str(e)))
-                        continue
-                    for lname, layer in layers.items():
-                        if lf is not None and lname not in lf:
-                            continue
-                        vstructs = (
-                            [typed_value_struct(t, v) for t, v in layer.values]
-                            if typed_props else None
-                        )
-                        for f in layer.features:
-                            xs, ys, off = gk.decode_commands(f.geometry, f.geom_type)
-                            pt = None
-                            if typed_props:
-                                t_ = f.tags
-                                pt = [
-                                    {"k": layer.keys[int(t_[j])], **vstructs[int(t_[j + 1])]}
-                                    for j in range(0, len(t_) - 1, 2)
-                                ]
-                            out.append(dict(
-                                base, layer=lname, extent=layer.extent,
-                                feature_id=int(f.id), geom_type=int(f.geom_type),
-                                part_offsets=off.astype(np.int32), xs=xs, ys=ys,
-                                props=json.dumps(layer.properties(f), default=str),
-                                props_t=pt, raster=f.raster,
-                                decode_error=None))
-                yield pd.DataFrame(out, columns=cols)
-                continue
-
-            blobs = [bytes(b) for b in pdf["mvt"]]
-            decoded = decode_tile_rows(
-                blobs, typed_props=typed_props, layer_filter=lf
-            )
-            (tix, lnames, exts, fids, gts, xsl, ysl, offl, props, errs) = (
-                decoded[:10]
-            )
-            props_t = decoded[10] if typed_props else None
-            zoom_a = pdf["zoom"].to_numpy()
-            x_a = pdf["x"].to_numpy()
-            y_a = pdf["y"].to_numpy()
-            ti = np.asarray(tix, dtype=np.int64)
-            out_pdf = pd.DataFrame(
-                {
-                    "zoom": zoom_a[ti] if ti.size else np.empty(0, zoom_a.dtype),
-                    "x": x_a[ti] if ti.size else np.empty(0, x_a.dtype),
-                    "y": y_a[ti] if ti.size else np.empty(0, y_a.dtype),
-                    "layer": lnames,
-                    "extent": exts,
-                    "feature_id": fids,
-                    "geom_type": gts,
-                    "part_offsets": offl,
-                    "xs": xsl,
-                    "ys": ysl,
-                    "props": props,
-                    "decode_error": None,
-                }
-            )
-            if typed_props:
-                out_pdf["props_t"] = props_t
-            if errs:  # lenient: one error row per undecodable tile
-                err_rows = pd.DataFrame(
-                    {
-                        "zoom": zoom_a[list(errs)],
-                        "x": x_a[list(errs)],
-                        "y": y_a[list(errs)],
-                        "layer": None, "extent": None, "feature_id": None,
-                        "geom_type": None, "part_offsets": None, "xs": None,
-                        "ys": None, "props": None, "props_t": None,
-                        "decode_error": list(errs.values()),
-                    }
-                )
-                out_pdf = pd.concat([out_pdf, err_rows], ignore_index=True)
-            yield out_pdf[cols]
-
     schema = FEATURES_SCHEMA + (", " + PROPS_T_FIELD if typed_props else "")
     if raster:
         schema += ", raster binary"
-    return tiles.mapInPandas(_decode, schema=schema)
-
-
-def decode_tiles_arrow(
-    tiles: DataFrame, layers: set | frozenset | None = None
-) -> DataFrame:
-    """Lenient tile decode over ``mapInArrow`` (SURVEY §2.9): the batch
-    comes in and goes out as Arrow RecordBatches, skipping BOTH pandas
-    conversions — the binary blobs are never copied into a pandas object
-    Series, and the ragged xs/ys/part_offsets columns are built directly
-    as Arrow ListArrays from the kernel's flat arrays + offsets (no
-    per-feature Python slicing at all; kernels/mvt_batch flat mode).
-    Output schema identical to :func:`decode_tiles` lenient mode;
-    ``layers`` applies the kernel's lazy name-only layer skip."""
-    lf = frozenset(layers) if layers is not None else None
 
     def _decode(batches):
         import numpy as np
@@ -307,12 +184,23 @@ def decode_tiles_arrow(
 
         from mvtspark.kernels.mvt_batch import decode_tile_rows
 
+        extra = []  # (name, arrow type) of the opt-in columns, as in schema
+        if typed_props:
+            extra.append(("props_t", pa.list_(pa.struct([
+                ("k", pa.string()), ("tag", pa.int32()), ("s", pa.string()),
+                ("f", pa.float32()), ("d", pa.float64()), ("i", pa.int64()),
+                ("u", pa.int64()), ("si", pa.int64()), ("b", pa.bool_()),
+            ]))))
+        if raster:
+            extra.append(("raster", pa.binary()))
+        names = [c.split()[0] for c in FEATURES_SCHEMA.split(", ")]
+        names += [n for n, _ in extra]
         for rb in batches:
             gi = rb.schema.get_field_index
-            blobs = rb.column(gi("mvt")).to_pylist()
-            (tix, lnames, exts, fids, gts, xs, ys, vert_off,
-             parts_flat, parts_cnt, props, errs) = decode_tile_rows(
-                blobs, flat=True, layer_filter=lf
+            (tix, lnames, exts, fids, gts, xs, ys, vert_off, parts_flat,
+             parts_cnt, props, *extra_cols, errs) = decode_tile_rows(
+                rb.column(gi("mvt")).to_pylist(), layer_filter=lf,
+                validate=validate, typed_props=typed_props, raster=raster,
             )
             zoom_a = rb.column(gi("zoom")).to_numpy(zero_copy_only=False)
             x_a = rb.column(gi("x")).to_numpy(zero_copy_only=False)
@@ -320,6 +208,7 @@ def decode_tiles_arrow(
             nfeat = len(lnames)
             pb = np.zeros(nfeat + 1, dtype=np.int64)
             np.cumsum(parts_cnt, out=pb[1:])
+            vo = pa.array(vert_off, type=pa.int32())
             arrays = [
                 pa.array(zoom_a[tix], type=pa.int32()),
                 pa.array(x_a[tix], type=pa.int32()),
@@ -332,43 +221,22 @@ def decode_tiles_arrow(
                     pa.array(pb, type=pa.int32()),
                     pa.array(parts_flat, type=pa.int32()),
                 ),
-                pa.ListArray.from_arrays(
-                    pa.array(vert_off, type=pa.int32()),
-                    pa.array(xs.astype(np.int64), type=pa.int64()),
-                ),
-                pa.ListArray.from_arrays(
-                    pa.array(vert_off, type=pa.int32()),
-                    pa.array(ys.astype(np.int64), type=pa.int64()),
-                ),
+                pa.ListArray.from_arrays(vo, pa.array(xs, type=pa.int64())),
+                pa.ListArray.from_arrays(vo, pa.array(ys, type=pa.int64())),
                 pa.array(props, type=pa.string()),
                 pa.nulls(nfeat, type=pa.string()),
-            ]
-            names = [
-                "zoom", "x", "y", "layer", "extent", "feature_id",
-                "geom_type", "part_offsets", "xs", "ys", "props",
-                "decode_error",
-            ]
+            ] + [pa.array(c, type=t) for c, (_, t) in zip(extra_cols, extra)]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
-            if errs:
+            if errs:  # one error row per undecodable tile
                 eidx = np.fromiter(errs.keys(), dtype=np.int64, count=len(errs))
-                n = len(errs)
                 err_arrays = [
-                    pa.array(zoom_a[eidx], type=pa.int32()),
-                    pa.array(x_a[eidx], type=pa.int32()),
-                    pa.array(y_a[eidx], type=pa.int32()),
-                    pa.nulls(n, type=pa.string()),
-                    pa.nulls(n, type=pa.int32()),
-                    pa.nulls(n, type=pa.int64()),
-                    pa.nulls(n, type=pa.int32()),
-                    pa.nulls(n, type=pa.list_(pa.int32())),
-                    pa.nulls(n, type=pa.list_(pa.int64())),
-                    pa.nulls(n, type=pa.list_(pa.int64())),
-                    pa.nulls(n, type=pa.string()),
-                    pa.array(list(errs.values()), type=pa.string()),
-                ]
+                    pa.array(a[eidx], type=pa.int32()) for a in (zoom_a, x_a, y_a)
+                ] + [pa.nulls(len(errs), type=a.type) for a in arrays[3:]]
+                err_arrays[names.index("decode_error")] = pa.array(
+                    list(errs.values()), type=pa.string())
                 yield pa.RecordBatch.from_arrays(err_arrays, names=names)
 
-    return tiles.mapInArrow(_decode, schema=FEATURES_SCHEMA)
+    return tiles.mapInArrow(_decode, schema=schema)
 
 
 def cogroup_tile_parity(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -473,74 +341,20 @@ def encode_tiles(
     """Per-(zoom,x,y) feature groups → MVT binary (S9; inverse of decode).
 
     Plan shape (scale-critical): repartition on the tile key +
-    sortWithinPartitions + mapInPandas with cross-batch group buffering —
+    sortWithinPartitions + mapInArrow with cross-batch group buffering —
     NOT a per-tile applyInPandas, whose per-group overhead dominates when
     tiles are small (sparse zoom levels produce millions of 1-feature
     tiles). Each Arrow batch encodes THOUSANDS of tiles in one
-    kernels.mvt_batch call. Features are ordered by feature_id for a
-    deterministic byte stream (W2); dictionary encoding per tile
-    (ref VectorTileLayer.cs:94-100).
+    kernels.mvt_batch.encode_tile_rows_flat call; ragged xs/ys/
+    part_offsets stay in ListArray buffers end-to-end (no pandas
+    conversion, no per-feature Python in the flatten). Features are
+    ordered by feature_id for a deterministic byte stream (W2);
+    dictionary encoding per tile (ref VectorTileLayer.cs:94-100), from
+    the typed ``props_t`` union when the frame carries one, else from the
+    JSON ``props``.
     """
 
-    def _encode_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        from mvtspark.kernels.mvt_batch import encode_tile_rows
-
-        n = len(pdf)
-        z = pdf["zoom"].to_numpy()
-        x = pdf["x"].to_numpy()
-        y = pdf["y"].to_numpy()
-        change = np.ones(n, dtype=bool)
-        change[1:] = (z[1:] != z[:-1]) | (x[1:] != x[:-1]) | (y[1:] != y[:-1])
-        starts = np.flatnonzero(change)
-        tile_bounds = np.append(starts, n).astype(np.int64)
-        extents = pdf["extent"].to_numpy()[starts].astype(np.int64)
-        blobs = encode_tile_rows(
-            tile_bounds,
-            pdf["feature_id"].to_numpy().astype(np.int64),
-            pdf["geom_type"].to_numpy().astype(np.int64),
-            list(pdf["part_offsets"]),
-            list(pdf["xs"]),
-            list(pdf["ys"]),
-            list(pdf["props"]) if "props" in pdf.columns else [None] * n,
-            layer_name,
-            extents,
-            # typed union beats JSON when both are present: it carries
-            # Float/Double/UInt/SInt/Bool identity losslessly
-            props_typed=list(pdf["props_t"]) if "props_t" in pdf.columns else None,
-        )
-        return pd.DataFrame(
-            {
-                "zoom": z[starts], "x": x[starts], "y": y[starts],
-                "mvt": blobs,
-                "feature_count": np.diff(tile_bounds).astype(np.int32),
-            }
-        )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # group-aware buffering: a tile's rows may straddle Arrow batch
-        # boundaries (they never straddle partitions — we repartitioned on
-        # the key), so hold back the last tile of each batch.
-        held: pd.DataFrame | None = None
-        for pdf in batches:
-            if held is not None and len(held):
-                pdf = pd.concat([held, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            lz = pdf["zoom"].iat[-1]
-            lx = pdf["x"].iat[-1]
-            ly = pdf["y"].iat[-1]
-            tail = (pdf["zoom"] == lz) & (pdf["x"] == lx) & (pdf["y"] == ly)
-            # rows of the (possibly incomplete) final tile
-            split = int(len(pdf) - tail[::-1].cummin()[::-1].sum())
-            held = pdf.iloc[split:]
-            if split:
-                yield _encode_pdf(pdf.iloc[:split])
-        if held is not None and len(held):
-            yield _encode_pdf(held)
-
-    def _encode_tbl_arrow(tbl):
+    def _encode_tbl(tbl):
         import numpy as np
         import pyarrow as pa
 
@@ -574,6 +388,10 @@ def encode_tiles(
             if "props" in tbl.schema.names else [None] * n,
             layer_name,
             tbl.column("extent").to_numpy(zero_copy_only=False)[starts].astype(np.int64),
+            # typed union beats JSON when both are present: it carries
+            # Float/Double/UInt/SInt/Bool identity losslessly
+            props_typed=tbl.column("props_t").to_pylist()
+            if "props_t" in tbl.schema.names else None,
         )
         return pa.RecordBatch.from_arrays(
             [
@@ -586,7 +404,7 @@ def encode_tiles(
             names=["zoom", "x", "y", "mvt", "feature_count"],
         )
 
-    def _encode_arrow(batches):
+    def _encode(batches):
         import pyarrow as pa
 
         held = None
@@ -609,9 +427,9 @@ def encode_tiles(
             split = int(mism[-1]) + 1 if mism.size else 0
             held = tbl.slice(split)
             if split:
-                yield _encode_tbl_arrow(tbl.slice(0, split).combine_chunks())
+                yield _encode_tbl(tbl.slice(0, split).combine_chunks())
         if held is not None and held.num_rows:
-            yield _encode_tbl_arrow(held.combine_chunks())
+            yield _encode_tbl(held.combine_chunks())
 
     out_schema = TILE_SCHEMA + ", feature_count int"
     part_cols = ["zoom", "x", "y"]
@@ -621,13 +439,7 @@ def encode_tiles(
         else features.repartition(*part_cols)
     )
     sorted_df = shuffled.sortWithinPartitions("zoom", "x", "y", "feature_id")
-    if "props_t" in features.columns:
-        # typed-union dictionaries ride the pandas path
-        return sorted_df.mapInPandas(_encode, schema=out_schema)
-    # Arrow fast path: ragged xs/ys/part_offsets stay in ListArray
-    # buffers end-to-end — no pandas object-Series conversion, no
-    # per-feature Python in the flatten (kernels/mvt_batch flat input)
-    return sorted_df.mapInArrow(_encode_arrow, schema=out_schema)
+    return sorted_df.mapInArrow(_encode, schema=out_schema)
 
 
 def _fmt_invariant(arr) -> "pd.Series":

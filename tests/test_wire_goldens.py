@@ -257,6 +257,13 @@ def test_typed_props_from_hand_authored_bytes(spark):
     assert got_strict == got
 
 
+def _feature_xs(out, i, col=5):
+    """Vertices of feature ``i`` from decode_tile_rows' flat columns
+    (col 5 = xs, 6 = ys; vert_off is col 7)."""
+    vert_off = out[7]
+    return out[col][vert_off[i]: vert_off[i + 1]].tolist()
+
+
 def test_batch_kernel_oversized_ld_length_poisons_only_its_tile():
     """A crafted length-delimited field declaring a 2^63-byte payload
     previously went negative after the int64 cast in
@@ -271,13 +278,13 @@ def test_batch_kernel_oversized_ld_length_poisons_only_its_tile():
         + bytes([0x12, len(feature)]) + feature
     )
     hostile = bytes([0x1A, len(layer)]) + layer
-    (tile_idx, names, extents, fids, gtypes,
-     xs_l, ys_l, off_l, props_l, errs) = mvt_batch.decode_tile_rows(
-        [GOLDEN_SINGLE_POINT, hostile, GOLDEN_SINGLE_POINT])
+    out = mvt_batch.decode_tile_rows(
+        [GOLDEN_SINGLE_POINT, hostile, GOLDEN_SINGLE_POINT], flat=True)
+    tile_idx, errs = out[0], out[-1]
     assert set(errs) == {1}
-    assert sorted(set(tile_idx)) == [0, 2]
+    assert sorted(set(tile_idx.tolist())) == [0, 2]
     for i in range(len(tile_idx)):
-        assert np.asarray(xs_l[i]).tolist() == [25]
+        assert _feature_xs(out, i) == [25]
 
 
 def test_batch_kernel_decodes_hand_authored_bytes():
@@ -289,24 +296,25 @@ def test_batch_kernel_decodes_hand_authored_bytes():
         GOLDEN_TYPED_VALUES,
         GOLDEN_TWO_LAYERS,
     ]
-    (tile_idx, names, extents, fids, gtypes,
-     xs_l, ys_l, off_l, props_l, err_tiles) = mvt_batch.decode_tile_rows(blobs)
-    assert err_tiles == {}
-    rows = list(zip(tile_idx, names, extents, fids, gtypes))
+    out = mvt_batch.decode_tile_rows(blobs, flat=True)
+    tile_idx, names, extents, fids, gtypes = out[:5]
+    assert out[-1] == {}
+    rows = list(zip(tile_idx.tolist(), names, extents, fids.tolist(),
+                    gtypes.tolist()))
     # tiles 0 and 1 decode to the identical logical feature
     assert rows[0] == (0, "layer_name", 4096, 123, 1)
     assert rows[1] == (1, "layer_name", 4096, 123, 1)
-    assert np.asarray(xs_l[0]).tolist() == [25]
-    assert np.asarray(xs_l[1]).tolist() == [25]
+    assert _feature_xs(out, 0) == [25]
+    assert _feature_xs(out, 1) == [25]
     # tile 2: spec linestring
     i2 = [i for i, r in enumerate(rows) if r[0] == 2][0]
     assert names[i2] == "types" and gtypes[i2] == 2
-    assert np.asarray(xs_l[i2]).tolist() == [2, 2, 10]
-    assert np.asarray(ys_l[i2]).tolist() == [2, 10, 10]
+    assert _feature_xs(out, i2) == [2, 2, 10]
+    assert _feature_xs(out, i2, col=6) == [2, 10, 10]
     # tile 3: two layers in order, polygon ring re-closed
     i3 = [i for i, r in enumerate(rows) if r[0] == 3]
     assert [names[i] for i in i3] == ["poly", "layer_name"]
-    assert np.asarray(xs_l[i3[0]]).tolist() == [3, 8, 20, 3]
+    assert _feature_xs(out, i3[0]) == [3, 8, 20, 3]
 
 
 def test_invalid_corpus_every_class_detected():
@@ -337,15 +345,15 @@ def test_invalid_corpus_every_class_detected():
 
 def test_invalid_corpus_batch_kernel_poisons_only_bad_tiles():
     """Lenient batch decode of the WHOLE corpus: every invalid tile gets
-    an error entry, the intact tile still decodes. (Batch mode skips the
-    strict per-layer checks, so structurally-readable-but-semantically-
-    invalid classes decode leniently — that is its documented contract;
-    structurally broken ones must still be caught.)"""
+    an error entry, the intact tile still decodes. (Lenient mode skips the
+    strict checks — they run only with ``validate=True`` — so
+    structurally-readable-but-semantically-invalid classes decode
+    leniently; structurally broken ones must still be caught.)"""
     from mvtspark.sources.invalid_corpus import INVALID_CLASSES
 
     blobs = [INVALID_CLASSES[c][1] for c in sorted(INVALID_CLASSES)]
-    out = mvt_batch.decode_tile_rows(blobs)
-    tile_idx, errs = out[0], out[9]
+    out = mvt_batch.decode_tile_rows(blobs, flat=True)
+    tile_idx, errs = out[0], out[-1]
     assert 0 not in errs  # intact control decodes
     assert 0 in tile_idx
     structural = {1, 2, 3, 5, 18}  # unreadable at the wire level
@@ -364,13 +372,14 @@ def test_layers_index_partial_parse():
 
 def test_layer_filter_skips_unselected_layers():
     out = mvt_batch.decode_tile_rows(
-        [GOLDEN_TWO_LAYERS], layer_filter=frozenset({"poly"}))
+        [GOLDEN_TWO_LAYERS], flat=True, layer_filter=frozenset({"poly"}))
     tidx, names = out[0], out[1]
-    assert names == ["poly"] and out[9] == {}
+    assert names == ["poly"] and out[-1] == {}
     # duplicate-name detection still fires for SKIPPED layers
     dup = GOLDEN_TWO_LAYERS + bytes([0x1A, len(_LAYER_D_BODY)]) + _LAYER_D_BODY
-    out2 = mvt_batch.decode_tile_rows([dup], layer_filter=frozenset({"nope"}))
-    assert 0 in out2[9] and "duplicate" in out2[9][0]
+    out2 = mvt_batch.decode_tile_rows(
+        [dup], flat=True, layer_filter=frozenset({"nope"}))
+    assert 0 in out2[-1] and "duplicate" in out2[-1][0]
 
 
 def test_decode_tiles_layer_filter_dataframe(spark):
@@ -397,17 +406,197 @@ def test_batch_decode_mid_walk_error_commits_no_partial_layers():
     the NEXT tile's bytes (or crashing the batch on IndexError)."""
     dup = GOLDEN_TWO_LAYERS + bytes([0x1A, len(_LAYER_D_BODY)]) + _LAYER_D_BODY
     # order 1: bad tile first — previously leaked a garbage feature row
-    out = mvt_batch.decode_tile_rows([dup, GOLDEN_SINGLE_POINT])
-    tidx, errs = out[0], out[9]
+    out = mvt_batch.decode_tile_rows([dup, GOLDEN_SINGLE_POINT], flat=True)
+    tidx, errs = out[0], out[-1]
     assert set(errs) == {0} and "duplicate" in errs[0]
-    assert set(tidx) == {1}
+    assert set(tidx.tolist()) == {1}
     # order 2: bad tile last — previously raised IndexError (batch kill)
-    out2 = mvt_batch.decode_tile_rows([GOLDEN_SINGLE_POINT, dup])
-    assert set(out2[9]) == {1} and set(out2[0]) == {0}
-    # flat (arrow) path: same contract
-    out3 = mvt_batch.decode_tile_rows([GOLDEN_SINGLE_POINT, dup], flat=True)
-    assert set(out3[11]) == {1} and set(out3[0].tolist()) == {0}
+    out2 = mvt_batch.decode_tile_rows([GOLDEN_SINGLE_POINT, dup], flat=True)
+    assert set(out2[-1]) == {1} and set(out2[0].tolist()) == {0}
     # layers_index: no partial index rows for the errored tile
     t, n, c, e = mvt_batch.layers_index([dup, GOLDEN_TWO_LAYERS])
     assert set(e) == {0}
     assert t == [1, 1] and n == ["poly", "layer_name"]
+
+
+def _tile_with_geometry(geometry: list[int]) -> bytes:
+    """The invalid corpus' intact control tile with its POINT feature's
+    geometry stream replaced by ``geometry`` (hand-written command ints)."""
+    from mvtspark.sources.invalid_corpus import _FEATURE, _layer, _tile
+
+    return _tile(_layer(
+        feature=_FEATURE[:8] + bytes([0x22, len(geometry)]) + bytes(geometry)))
+
+
+#: one hand-written command stream per fault kernels.geom.decode_commands
+#: rejects, with its message
+BAD_GEOMETRY = {
+    "unknown command 5": [0x0D, 0x32, 0x22],  # (1 << 3) | 5
+    "command stream overruns buffer": [0x09, 0x32],  # MoveTo(1), one param
+    "ClosePath with no open part": [0x0F, 0x09, 0x32, 0x22],
+}
+
+
+def test_bad_geometry_stream_poisons_only_its_tile(spark):
+    """A tile whose geometry command stream holds an unknown command,
+    overruns its buffer or closes a part it never opened used to raise
+    out of the batch kernel, failing the whole Arrow batch and the task.
+    Each must become its own tile's error row — in lenient and strict
+    mode — while the good tiles of the same batch still decode."""
+    from pyspark.sql import functions as F
+
+    from mvtspark.sources.tiles import decode_tiles
+
+    rows = [(0, 0, 0, bytearray(GOLDEN_SINGLE_POINT))] + [
+        (0, i + 1, 0, bytearray(_tile_with_geometry(g)))
+        for i, g in enumerate(BAD_GEOMETRY.values())
+    ]
+    tiles = spark.createDataFrame(rows, "zoom int, x int, y int, mvt binary")
+    for kwargs in ({}, {"validate": True}):
+        got = decode_tiles(tiles.coalesce(1), **kwargs).orderBy("x").collect()
+        assert [(r.x, r.decode_error) for r in got] == [(0, None)] + [
+            (i + 1, msg) for i, msg in enumerate(BAD_GEOMETRY)
+        ], kwargs
+        assert got[0].feature_id == 123 and list(got[0].xs) == [25]
+    assert decode_tiles(tiles).where(F.col("decode_error").isNull()).count() == 1
+
+
+def test_bad_packed_stream_poisons_only_its_tile():
+    """A packed geometry field ending mid-varint must not run into the
+    next feature's first value (nor fail the batch when it is last), and
+    one holding an 11-byte varint must not fail the batch either; both
+    get the per-tile reader's message, in lenient and strict mode."""
+    truncated = _tile_with_geometry([0x09, 0x32, 0xA2])
+    overlong = _tile_with_geometry([0x09] + [0x80] * 10 + [0x01, 0x22])
+    for validate in (False, True):
+        out = mvt_batch.decode_tile_rows(
+            [truncated, GOLDEN_SINGLE_POINT, overlong, truncated],
+            validate=validate)
+        assert out[-1] == {0: "truncated varint at end of stream",
+                           2: "varint longer than 10 bytes",
+                           3: "truncated varint at end of stream"}
+        assert out[0].tolist() == [1] and _feature_xs(out, 0) == [25]
+
+
+def test_strict_decode_tiles_matches_invalid_suite_oracle(spark):
+    """decode_tiles(validate=True) over all 19 invalid-corpus classes gives
+    exactly the error strings the invalid_tile_suite oracle pins (which
+    are the per-tile strict decoder's), and the intact control decodes
+    its one feature."""
+    from mvtspark.sources.invalid_corpus import INVALID_CLASSES
+    from mvtspark.sources.tiles import decode_tiles
+
+    oracle = {
+        1: "tile data is empty", 2: "tile data is gzipped",
+        3: "truncated varint", 4: "unsupported wire type 3",
+        5: "tag out of range: 0", 6: "unknown tile tag 1",
+        7: "unsupported layer version 1", 8: "layer missing name",
+        9: "layer has no features", 10: "layer has invalid extent 0",
+        11: "duplicate layer name layer_name",
+        12: "layer values are not distinct",
+        13: "feature has no geometry type", 14: "feature has no geometry",
+        15: "uneven number of feature tags",
+        16: "tag key index out of range", 17: "tag value index out of range",
+        18: "layer length overruns tile",
+    }
+    for cls, msg in oracle.items():
+        try:
+            mvt.decode_tile(INVALID_CLASSES[cls][1], validate=True)
+        except Exception as e:
+            assert str(e) == msg, cls
+    tiles = spark.createDataFrame(
+        [(0, c, 0, bytearray(b)) for c, (_, b, _) in INVALID_CLASSES.items()],
+        "zoom int, x int, y int, mvt binary",
+    )
+    got = decode_tiles(tiles, validate=True).collect()
+    assert {r.x: r.decode_error for r in got if r.x > 0} == oracle
+    control = [r for r in got if r.x == 0]
+    assert len(control) == 1 and control[0].decode_error is None
+    assert control[0].feature_id == 123
+
+
+def test_strict_batch_kernel_names_rejections_like_the_oracle():
+    """Strict batch decode rejects exactly the tiles the per-tile oracle
+    rejects and names each by the oracle's message — the whole invalid
+    corpus, plus two feature fields the lenient header walk reads past
+    but the per-tile reader does not: a zero field tag, and an id field
+    written length-delimited."""
+    from mvtspark.sources.invalid_corpus import INVALID_CLASSES, _FEATURE, _layer, _tile
+
+    blobs = [b for _, b, _ in INVALID_CLASSES.values()] + [
+        _tile(_layer(feature=_FEATURE + bytes([0x00, 0x00]))),
+        _tile(_layer(feature=bytes([0x0A, 0x01, 0x00]) + _FEATURE[2:])),
+    ]
+    expected = {}
+    for i, blob in enumerate(blobs):
+        try:
+            mvt.decode_tile(blob, validate=True)
+        except Exception as e:
+            expected[i] = str(e)
+    assert len(expected) == len(blobs) - 1  # all but the intact control
+    lenient = mvt_batch.decode_tile_rows(blobs)
+    assert not {len(blobs) - 2, len(blobs) - 1} & set(lenient[-1])
+    out = mvt_batch.decode_tile_rows(blobs, validate=True)
+    assert out[-1] == expected
+    assert out[0].tolist() == [0]
+
+
+def test_strict_typed_raster_layers_match_per_tile_oracle(spark):
+    """Every opt-in at once — validate, typed_props, raster and a layer
+    filter — on the hand-authored goldens (plus one tile carrying a
+    raster payload) yields exactly the rows the per-tile oracle
+    mvt.decode_tile gives for the selected layers."""
+    import json
+
+    from mvtspark.kernels.mvt_batch import TAG_FIELD
+    from mvtspark.sources.tiles import decode_tiles
+
+    raster_feat = mvt.Feature(
+        id=7, geom_type=geom.GEOM_POINT,
+        geometry=np.array([9, 50, 34], dtype=np.uint32),
+        tags=np.array([0, 0], dtype=np.int64), raster=b"\x00R\xffx",
+    )
+    raster_tile = mvt.encode_tile([mvt.Layer(
+        name="types", version=2, keys=["k"], values=[(mvt.V_DOUBLE, 0.5)],
+        features=[raster_feat],
+    )])
+    blobs = [GOLDEN_SINGLE_POINT, GOLDEN_SPEC_ORDER, GOLDEN_TYPED_VALUES,
+             GOLDEN_TWO_LAYERS, raster_tile]
+    selected = {"layer_name", "types"}
+    expected = []
+    for x, blob in enumerate(blobs):
+        for name, lyr in mvt.decode_tile(blob, validate=True).items():
+            if name not in selected:
+                continue
+            for f in lyr.features:
+                xs, ys, off = geom.decode_commands(f.geometry, f.geom_type)
+                typed = []
+                for k, v in zip(f.tags[0::2], f.tags[1::2]):
+                    tag, val = lyr.values[int(v)]
+                    member = dict.fromkeys(TAG_FIELD.values())
+                    member[TAG_FIELD[tag]] = val
+                    typed.append({"k": lyr.keys[int(k)], "tag": tag, **member})
+                expected.append((
+                    x, name, lyr.extent, int(f.id), int(f.geom_type),
+                    off.tolist(), xs.tolist(), ys.tolist(),
+                    json.dumps(lyr.properties(f), default=str), typed,
+                    f.raster,
+                ))
+    tiles = spark.createDataFrame(
+        [(0, x, 0, bytearray(b)) for x, b in enumerate(blobs)],
+        "zoom int, x int, y int, mvt binary",
+    )
+    got = [
+        (r.x, r.layer, r.extent, r.feature_id, r.geom_type,
+         list(r.part_offsets), list(r.xs), list(r.ys), r.props,
+         [p.asDict() for p in r.props_t],
+         None if r.raster is None else bytes(r.raster))
+        for r in decode_tiles(
+            tiles, validate=True, typed_props=True, raster=True,
+            layers=selected,
+        ).collect()
+    ]
+    assert all(r.decode_error is None for r in decode_tiles(
+        tiles, validate=True).collect())
+    assert sorted(got, key=repr) == sorted(expected, key=repr)
+    assert any(row[-1] == b"\x00R\xffx" for row in got)

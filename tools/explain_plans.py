@@ -38,8 +38,8 @@ AUDITS = {
     "ann_topk": ["MapInPandas", "WindowGroupLimit"],
     "ann_topk_ivf": ["BroadcastHashJoin", "Aggregate"],
     "range_join_px": ["BroadcastNestedLoopJoin"],
-    # tag-5 passthrough rides the per-tile kernel (opt-in pandas path);
-    # md5/length stay codegen-side above the single MapInPandas decode
+    # tag 5 rides the Arrow decode map (MapInArrow); the MapInPandas is
+    # the query's own tile generator. md5/length stay codegen-side
     "raster_passthrough": ["MapInPandas", "codegen id"],
     # span generation must be pure codegen (no Python) with map-side
     # partial aggregation below the one span-key exchange
@@ -68,8 +68,8 @@ AUDITS = {
     # flagship: decoded-count and image-count joins over the tile key +
     # the salted two-stage aggregation; generation/codec ride Python maps
     "flagship_mvt_pipeline": ["HashAggregate", "MapInArrow"],
-    # typed-union round trip rides the pandas path (props_t dictionaries)
-    "mvt_typed_props_roundtrip": ["MapInPandas"],
+    # typed-union round trip: encode and decode both ride Arrow maps
+    "mvt_typed_props_roundtrip": ["MapInArrow"],
     # encode is Arrow-native end-to-end; the index scan itself is a
     # partial parse inside MapInPandas
     "layers_index_scan": ["MapInArrow", "MapInPandas"],
