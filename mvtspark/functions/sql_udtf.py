@@ -18,6 +18,8 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
+INT32_MAX = 2**31 - 1  # the schema's int columns
+
 DECODE_MVT_SCHEMA = (
     "layer string, extent int, feature_id bigint, geom_type int, "
     "part_offsets array<int>, xs array<bigint>, ys array<bigint>, "
@@ -37,26 +39,31 @@ class DecodeMvtUdtf:
 
         if mvt is None:
             return
-        try:
-            layers = mk.decode_tile(bytes(mvt), validate=False)
+        try:  # the whole tile first: a fault anywhere gives one error row
+            rows = []
+            for layer in mk.decode_tile(bytes(mvt), validate=False).values():
+                if layer.extent > INT32_MAX:
+                    raise mk.MvtError(f"layer extent {layer.extent} exceeds int32")
+                for f in layer.features:
+                    if f.geom_type > INT32_MAX:
+                        raise mk.MvtError(f"geometry type {f.geom_type} exceeds int32")
+                    xs, ys, part_offsets = decode_commands(f.geometry, f.geom_type)
+                    props = layer.properties(f)
+                    rows.append((
+                        layer.name,
+                        int(layer.extent),
+                        mk._to_signed(f.id),  # bigint, as decode_tiles reads it
+                        int(f.geom_type),
+                        [int(v) for v in part_offsets],
+                        [int(v) for v in xs],
+                        [int(v) for v in ys],
+                        json.dumps(props, sort_keys=True, default=str) if props else None,
+                        None,
+                    ))
         except Exception as e:  # lenient: error row, don't kill the query
             yield (None, None, None, None, None, None, None, None, str(e))
             return
-        for layer in layers.values():
-            for f in layer.features:
-                xs, ys, part_offsets = decode_commands(f.geometry, f.geom_type)
-                props = layer.properties(f)
-                yield (
-                    layer.name,
-                    int(layer.extent),
-                    int(f.id),
-                    int(f.geom_type),
-                    [int(v) for v in part_offsets],
-                    [int(v) for v in xs],
-                    [int(v) for v in ys],
-                    json.dumps(props, sort_keys=True, default=str) if props else None,
-                    None,
-                )
+        yield from rows
 
 
 def register_sql_functions(spark: SparkSession) -> None:

@@ -2,11 +2,13 @@
 shared helpers.
 
 Role: the Spark decode path runs on the batch kernel
-(kernels/mvt_batch.py), which reuses this module's layer walk
-(:func:`read_layer`), value decode and constants. ``decode_tile`` here
-stays as the per-tile strict oracle: the batch kernel names each tile it
-rejects in strict mode by the exception this decoder raises, and
-functions/sql_udtf.py serves it row-at-a-time. Semantics follow the
+(kernels/mvt_batch.py), which reads every message level with its own
+vectorized field walker and takes only constants, the value encoder and
+strict-mode error names from here. ``decode_tile`` here stays as the
+per-tile strict oracle: the batch kernel names each tile it rejects in
+strict mode by the exception this decoder raises, tests compare the
+batch kernel against it, and functions/sql_udtf.py serves it
+row-at-a-time. Semantics follow the
 public MVT spec and the reference's observable behaviour (and quirks):
 
 - root message: repeated Layer at tag 3

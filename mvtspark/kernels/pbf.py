@@ -93,17 +93,16 @@ def decode_varint_stream(buf: np.ndarray) -> np.ndarray:
     return out
 
 
+#: 128**k for k = 1..9: a value takes one more varint byte per threshold
+#: it reaches (128**9 = 2**63 still fits uint64)
+_VARINT_STEPS = np.uint64(128) ** np.arange(1, 10, dtype=np.uint64)
+
+
 def varint_lengths(values: np.ndarray) -> np.ndarray:
-    """Encoded byte length of each uint64 value (1..10)."""
+    """Encoded byte length of each uint64 value (1..10): one plus the
+    number of thresholds it reaches, counted in one binary search."""
     v = np.asarray(values, dtype=np.uint64)
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    x = v.copy()
-    for shift in (32, 16, 8, 4, 2, 1):  # branchless bit-length
-        mask = x >= (np.uint64(1) << np.uint64(shift))
-        nbits[mask] += shift
-        x[mask] >>= np.uint64(shift)
-    nbits += 1  # bit_length of 0 treated as 1
-    return (nbits + 6) // 7
+    return 1 + np.searchsorted(_VARINT_STEPS, v, side="right").astype(np.int64)
 
 
 def encode_varint_stream(values: np.ndarray) -> bytes:

@@ -152,11 +152,12 @@ def decode_tiles(
     SURVEY §1.3).
 
     One ``mapInArrow`` for every mode (SURVEY §2.9): one
-    kernels.mvt_batch.decode_tile_rows call per Arrow batch decodes the
-    varints and geometry of ALL its features at once, and the ragged
+    kernels.mvt_batch.decode_tile_rows call per Arrow batch reads the
+    ``mvt`` column's buffers in place and decodes ALL its tiles at once;
+    the kernel hands back Arrow string columns, and the ragged
     xs/ys/part_offsets columns are built directly as Arrow ListArrays
-    from the kernel's flat arrays + offsets — no pandas conversion, no
-    per-feature Python slicing.
+    from its flat arrays + offsets — no pandas conversion, no per-tile or
+    per-feature Python.
 
     ``validate=True`` applies the reference validation suite to every
     layer; a rejected tile's ``decode_error`` is the message of the
@@ -184,22 +185,13 @@ def decode_tiles(
 
         from mvtspark.kernels.mvt_batch import decode_tile_rows
 
-        extra = []  # (name, arrow type) of the opt-in columns, as in schema
-        if typed_props:
-            extra.append(("props_t", pa.list_(pa.struct([
-                ("k", pa.string()), ("tag", pa.int32()), ("s", pa.string()),
-                ("f", pa.float32()), ("d", pa.float64()), ("i", pa.int64()),
-                ("u", pa.int64()), ("si", pa.int64()), ("b", pa.bool_()),
-            ]))))
-        if raster:
-            extra.append(("raster", pa.binary()))
         names = [c.split()[0] for c in FEATURES_SCHEMA.split(", ")]
-        names += [n for n, _ in extra]
+        names += ["props_t"] * typed_props + ["raster"] * raster
         for rb in batches:
             gi = rb.schema.get_field_index
             (tix, lnames, exts, fids, gts, xs, ys, vert_off, parts_flat,
              parts_cnt, props, *extra_cols, errs) = decode_tile_rows(
-                rb.column(gi("mvt")).to_pylist(), layer_filter=lf,
+                rb.column(gi("mvt")), layer_filter=lf,
                 validate=validate, typed_props=typed_props, raster=raster,
             )
             zoom_a = rb.column(gi("zoom")).to_numpy(zero_copy_only=False)
@@ -213,7 +205,7 @@ def decode_tiles(
                 pa.array(zoom_a[tix], type=pa.int32()),
                 pa.array(x_a[tix], type=pa.int32()),
                 pa.array(y_a[tix], type=pa.int32()),
-                pa.array(lnames, type=pa.string()),
+                lnames,
                 pa.array(exts, type=pa.int32()),
                 pa.array(fids, type=pa.int64()),
                 pa.array(gts, type=pa.int32()),
@@ -223,9 +215,9 @@ def decode_tiles(
                 ),
                 pa.ListArray.from_arrays(vo, pa.array(xs, type=pa.int64())),
                 pa.ListArray.from_arrays(vo, pa.array(ys, type=pa.int64())),
-                pa.array(props, type=pa.string()),
+                props,
                 pa.nulls(nfeat, type=pa.string()),
-            ] + [pa.array(c, type=t) for c, (_, t) in zip(extra_cols, extra)]
+            ] + extra_cols
             yield pa.RecordBatch.from_arrays(arrays, names=names)
             if errs:  # one error row per undecodable tile
                 eidx = np.fromiter(errs.keys(), dtype=np.int64, count=len(errs))
@@ -384,13 +376,13 @@ def encode_tiles(
             tbl.column("feature_id").to_numpy(zero_copy_only=False).astype(np.int64),
             tbl.column("geom_type").to_numpy(zero_copy_only=False).astype(np.int64),
             xs_f, ys_f, vert_off, po_f, po_off,
-            tbl.column("props").to_pylist()
-            if "props" in tbl.schema.names else [None] * n,
+            tbl.column("props")
+            if "props" in tbl.schema.names else pa.nulls(n, pa.string()),
             layer_name,
             tbl.column("extent").to_numpy(zero_copy_only=False)[starts].astype(np.int64),
             # typed union beats JSON when both are present: it carries
             # Float/Double/UInt/SInt/Bool identity losslessly
-            props_typed=tbl.column("props_t").to_pylist()
+            props_typed=tbl.column("props_t")
             if "props_t" in tbl.schema.names else None,
         )
         return pa.RecordBatch.from_arrays(
@@ -398,7 +390,7 @@ def encode_tiles(
                 pa.array(z[starts], type=pa.int32()),
                 pa.array(x[starts], type=pa.int32()),
                 pa.array(y[starts], type=pa.int32()),
-                pa.array(blobs, type=pa.binary()),
+                blobs,
                 pa.array(np.diff(tile_bounds).astype(np.int32), type=pa.int32()),
             ],
             names=["zoom", "x", "y", "mvt", "feature_count"],

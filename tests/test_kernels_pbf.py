@@ -36,6 +36,15 @@ def test_varint_known_bytes():
     assert dec[0] == 300
 
 
+def test_varint_lengths_at_byte_boundaries():
+    """Every threshold a varint's length steps at, against the scalar
+    encoder's own byte count."""
+    vals = [0, 127, 128, 2**35 - 1, 2**35, 2**63, 2**64 - 1]
+    got = pbf.varint_lengths(np.array(vals, dtype=np.uint64))
+    assert got.tolist() == [len(pbf.encode_varint(v)) for v in vals]
+    assert got.tolist() == [1, 1, 2, 5, 6, 10, 10]
+
+
 def test_varint_truncated_raises():
     with pytest.raises(pbf.PbfError):
         pbf.decode_varint_stream(np.array([0x80], dtype=np.uint8))

@@ -50,3 +50,26 @@ def test_udtf_lenient_error_row(spark):
         "SELECT f.decode_error FROM udtf_bad t, LATERAL decode_mvt(t.mvt) f"
     ).collect()
     assert len(rows) == 1 and rows[0].decode_error
+
+
+def test_udtf_bad_geometry_or_wide_int_gives_error_row(spark):
+    """A geometry stream decode_commands rejects, or an extent or
+    geometry type past the int32 columns, used to raise out of the UDTF
+    and fail the SQL query; each must give its tile's one error row while
+    the other tiles of the query still decode."""
+    from test_wire_goldens import (
+        BAD_GEOMETRY, GOLDEN_SINGLE_POINT, WIDE_INT32_ERRORS, _tile_with_geometry,
+        _wide_int32_tiles,
+    )
+
+    register_sql_functions(spark)
+    bad = [_tile_with_geometry(g) for g in BAD_GEOMETRY.values()] + _wide_int32_tiles()
+    rows = [(0, bytearray(GOLDEN_SINGLE_POINT))] + [
+        (i + 1, bytearray(b)) for i, b in enumerate(bad)]
+    spark.createDataFrame(rows, "x int, mvt binary").createOrReplaceTempView("udtf_faults")
+    got = spark.sql(
+        "SELECT t.x, f.feature_id, f.decode_error "
+        "FROM udtf_faults t, LATERAL decode_mvt(t.mvt) f ORDER BY t.x"
+    ).collect()
+    assert [(r.x, r.feature_id, r.decode_error) for r in got] == [(0, 123, None)] + [
+        (i + 1, None, msg) for i, msg in enumerate(list(BAD_GEOMETRY) + WIDE_INT32_ERRORS)]

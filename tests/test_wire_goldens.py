@@ -298,6 +298,7 @@ def test_batch_kernel_decodes_hand_authored_bytes():
     ]
     out = mvt_batch.decode_tile_rows(blobs, flat=True)
     tile_idx, names, extents, fids, gtypes = out[:5]
+    names = names.to_pylist()  # the layer column comes back as Arrow strings
     assert out[-1] == {}
     rows = list(zip(tile_idx.tolist(), names, extents, fids.tolist(),
                     gtypes.tolist()))
@@ -374,7 +375,7 @@ def test_layer_filter_skips_unselected_layers():
     out = mvt_batch.decode_tile_rows(
         [GOLDEN_TWO_LAYERS], flat=True, layer_filter=frozenset({"poly"}))
     tidx, names = out[0], out[1]
-    assert names == ["poly"] and out[-1] == {}
+    assert names.to_pylist() == ["poly"] and out[-1] == {}
     # duplicate-name detection still fires for SKIPPED layers
     dup = GOLDEN_TWO_LAYERS + bytes([0x1A, len(_LAYER_D_BODY)]) + _LAYER_D_BODY
     out2 = mvt_batch.decode_tile_rows(
@@ -600,3 +601,37 @@ def test_strict_typed_raster_layers_match_per_tile_oracle(spark):
         tiles, validate=True).collect())
     assert sorted(got, key=repr) == sorted(expected, key=repr)
     assert any(row[-1] == b"\x00R\xffx" for row in got)
+
+
+def _wide_int32_tiles() -> list[bytes]:
+    """The intact control tile with its layer extent, then its feature's
+    geometry type, written as a varint past int32."""
+    from mvtspark.kernels import pbf
+    from mvtspark.sources.invalid_corpus import _FEATURE, _layer, _tile
+
+    return [
+        _tile(_layer(extent=bytes([0x28]) + pbf.encode_varint(2**32))),
+        _tile(_layer(feature=_FEATURE[:6] + bytes([0x18]) + pbf.encode_varint(2**31)
+                     + _FEATURE[8:])),
+    ]
+
+
+WIDE_INT32_ERRORS = ["layer extent 4294967296 exceeds int32",
+                     "geometry type 2147483648 exceeds int32"]
+
+
+def test_extent_or_geometry_type_past_int32_poisons_only_its_tile(spark):
+    """A layer extent or geometry type that does not fit the int32
+    ``extent`` / ``geom_type`` columns used to make the Arrow batch
+    conversion raise, failing the task. It must become its own tile's
+    error row, in lenient and strict mode."""
+    from mvtspark.sources.tiles import decode_tiles
+
+    rows = [(0, 0, 0, bytearray(GOLDEN_SINGLE_POINT))] + [
+        (0, i + 1, 0, bytearray(b)) for i, b in enumerate(_wide_int32_tiles())]
+    tiles = spark.createDataFrame(rows, "zoom int, x int, y int, mvt binary").coalesce(1)
+    for kwargs in ({}, {"validate": True}):
+        got = decode_tiles(tiles, **kwargs).orderBy("x").collect()
+        assert [(r.x, r.decode_error) for r in got] == [(0, None)] + [
+            (i + 1, msg) for i, msg in enumerate(WIDE_INT32_ERRORS)], kwargs
+        assert got[0].feature_id == 123 and got[0].extent == 4096
