@@ -4,13 +4,18 @@ cluster at two cluster sizes").
 
 Cluster usage:
 
-    cd /root/repo && zip -r /tmp/mvtspark.zip mvtspark
+    zip -r /tmp/mvtspark.zip mvtspark
     spark-submit --py-files /tmp/mvtspark.zip \
         --conf spark.sql.adaptive.enabled=true \
         --conf spark.sql.shuffle.partitions=<3x total cores> \
         jobs/run_pipeline.py \
         --images <iceberg-or-parquet path | synth:N> --zoom 10 \
         --tiles-out /data/tiles --checkpoint /data/ckpt [--resume]
+
+The Python workers start from the ``mvtspark.daemon`` daemon module, so
+``mvtspark`` must be on the executors' PYTHONPATH when the first task
+starts (for instance through ``spark.executorEnv.PYTHONPATH``), not only
+added per task.
 
 Local (sandbox) smoke:
 
@@ -44,6 +49,8 @@ os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 from pyspark.sql import SparkSession, functions as F
 
+from mvtspark.session import PYTHON_DAEMON_CONF
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -58,7 +65,8 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("mvtspark-pipeline").getOrCreate()
+    spark = (SparkSession.builder.appName("mvtspark-pipeline")
+             .config(*PYTHON_DAEMON_CONF).getOrCreate())
 
     from mvtspark.operators.spatial import (
         assign_tiles, salted_tile_counts, spatial_join_pip,

@@ -64,7 +64,8 @@ def decode_commands(
       `count` cursor positions to one part; DecodeGeometry.cs:52-66);
     - the cursor (running sum of zigzag deltas) persists across parts;
     - ClosePath appends the part's first vertex (rings come back explicitly
-      closed, first == last; DecodeGeometry.cs:76-82).
+      closed, first == last; DecodeGeometry.cs:76-82), so a ClosePath with
+      no open part, or on a part with no vertex, raises GeometryError.
 
     The per-header loop is over command *headers* (a handful per feature);
     all parameter decoding (zigzag + cumsum) is vectorized.
@@ -75,6 +76,8 @@ def decode_commands(
     headers: list[tuple[int, int, int]] = []  # (cmd, count, param_start)
     p = 0
     total_params = 0
+    open_verts = -1  # vertices of the open part; -1: no part is open
+    close_fault = None  # the first ClosePath fault, raised after the walk
     while p < n:
         ci = int(g[p])
         cmd = ci & 0x7
@@ -84,12 +87,19 @@ def decode_commands(
             headers.append((cmd, count, p))
             p += 2 * count
             total_params += count
+            open_verts = count + max(open_verts, 0) if cmd == CMD_LINE_TO else count
         elif cmd == CMD_CLOSE_PATH:
             headers.append((cmd, count, p))
+            if open_verts <= 0 and close_fault is None:
+                close_fault = ("ClosePath with no open part" if open_verts < 0
+                               else "ClosePath on an empty part")
+            open_verts = -1
         else:
             raise GeometryError(f"unknown command {cmd}")  # DecodeGeometry.cs:84-87
     if p != n:
         raise GeometryError("command stream overruns buffer")
+    if close_fault is not None:
+        raise GeometryError(close_fault)
 
     if total_params == 0:
         return (
@@ -129,9 +139,7 @@ def decode_commands(
             if cur_start < 0:
                 cur_start = w
             w += count
-        else:  # ClosePath
-            if cur_start < 0:
-                raise GeometryError("ClosePath with no open part")
+        else:  # ClosePath (the first pass checked that a part is open)
             part_slices.append((cur_start, w))
             closed.append(True)
             cur_start = -1

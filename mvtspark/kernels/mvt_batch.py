@@ -860,18 +860,26 @@ def decode_geometries_batch(
     ok = np.ones(up.size, dtype=bool)
     ok[lastu[unknown]] = False  # an unknown command opens no unit
     uf, uc, un, up = uf[ok], uc[ok], un[ok], up[ok]
-    # a ClosePath opening its feature or following another ClosePath has
-    # no open part (MoveTo and LineTo both open one)
+    # parts: a MoveTo, or a LineTo with no open part, opens one; a
+    # ClosePath opening its feature or following another ClosePath has
+    # no open part, and one whose part has no vertex has nothing to close
     close = uc == CMD_CLOSE_PATH
     first = _firsts(uf)
-    orphan = close & (first | np.r_[False, close[:-1]])
-    for f in uf[orphan].tolist():
-        faults.setdefault(f, "ClosePath with no open part")
+    no_open = first | np.r_[False, close[:-1]]  # no part is open before the unit
+    orphan = close & no_open
+    opens = (uc == CMD_MOVE_TO) | ((uc == CMD_LINE_TO) & no_open)
+    un = np.where(close, 0, un)
+    pid = np.cumsum(opens) - 1
+    part_verts = np.bincount(pid[~close], weights=un[~close], minlength=pid.size)
+    empty = close & ~orphan & (part_verts[pid] == 0)
+    bad = orphan | empty
+    for f, o in zip(uf[bad].tolist(), orphan[bad].tolist()):
+        faults.setdefault(f, "ClosePath with no open part" if o else "ClosePath on an empty part")
     if faults:
         ok = ~np.isin(uf, np.fromiter(faults, dtype=np.int64, count=len(faults)))
         uf, uc, un, up = uf[ok], uc[ok], un[ok], up[ok]
-        close, first = close[ok], _firsts(uf)
-    un = np.where(close, 0, un)
+        close, opens = close[ok], opens[ok]
+        pid = np.cumsum(opens) - 1
 
     # --- extract + decode all params (vectorized)
     pv_units = np.flatnonzero(~close)
@@ -892,12 +900,10 @@ def decode_geometries_batch(
     xs_all = cx - carry_x
     ys_all = cy - carry_y
 
-    # --- parts (mirror decode_commands): a MoveTo, or a LineTo with no
-    # open part, opens one; a ClosePath closes it with an appended first
-    # vertex; each part runs until the next one opens or its feature ends
-    opens = (uc == CMD_MOVE_TO) | ((uc == CMD_LINE_TO) & (first | np.r_[False, close[:-1]]))
+    # --- parts (mirror decode_commands): a ClosePath closes its part with
+    # an appended first vertex; each part runs until the next one opens or
+    # its feature ends
     w0 = np.cumsum(un) - un  # first vertex of each unit
-    pid = np.cumsum(opens) - 1
     ps = w0[opens]
     pe = ps + np.bincount(pid, weights=un, minlength=ps.size).astype(np.int64)
     pc = np.zeros(ps.size, dtype=bool)

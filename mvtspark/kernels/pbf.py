@@ -108,23 +108,34 @@ def varint_lengths(values: np.ndarray) -> np.ndarray:
 def encode_varint_stream(values: np.ndarray) -> bytes:
     """Encode uint64 values as a concatenated varint byte stream.
 
-    Vectorized: bounded loop over ≤10 byte positions, numpy inside.
+    Vectorized, with no loop over byte positions: ``rest`` holds, for
+    each output byte, its value shifted down to that byte's 7 bits, so
+    a byte is ``rest & 0x7F`` with the continuation bit set while
+    ``rest`` has bits above them. Streams of 1- and 2-byte varints use a
+    (values × width) matrix and take out each value's first byte and
+    every byte with bits left; wider ones repeat each value once per
+    byte of its own length, so one wide id among small values does not
+    widen every row.
     """
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
         return b""
-    lens = varint_lengths(v)
-    total = int(lens.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    starts = np.zeros(v.size, dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    maxlen = int(lens.max())
-    for k in range(maxlen):
-        sel = lens > k
-        limb = ((v[sel] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (lens[sel] > k + 1).astype(np.uint8) << 7
-        out[starts[sel] + k] = limb | cont
-    return out.tobytes()
+    width = int(varint_lengths(v.max()))
+    if width <= 2:
+        rest = v[:, None] >> (np.uint64(7) * np.arange(width, dtype=np.uint64))
+        keep = rest != 0
+        keep[:, 0] = True
+    else:
+        lens = varint_lengths(v)
+        rest = np.repeat(v, lens)
+        shift = np.full(rest.size, 7, dtype=np.int64)  # 7 per byte, 0 at each value's first
+        shift[0] = 0
+        shift[np.cumsum(lens[:-1])] = 7 - 7 * lens[:-1]
+        rest >>= np.cumsum(shift).astype(np.uint64)
+        keep = None
+    out = (rest & np.uint64(0x7F)).astype(np.uint8)
+    out |= (rest > np.uint64(0x7F)).view(np.uint8) << np.uint8(7)
+    return (out if keep is None else out[keep]).tobytes()
 
 
 def encode_varint(value: int) -> bytes:

@@ -7,6 +7,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Python worker daemon with the zip-import fix (``mvtspark/daemon.py``);
+#: ``get_spark`` and ``jobs/run_pipeline.py`` both set it
+PYTHON_DAEMON_CONF = ("spark.python.daemon.module", "mvtspark.daemon")
+
+
+def _default_driver_mem() -> str:
+    """24g, or half the host's memory where that is less: the driver JVM
+    grows its heap lazily toward the limit, and a limit above the host's
+    memory lets a long session grow until the kernel kills the JVM."""
+    host_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(24, host_gib // 2))}g"
+
 
 def get_spark(
     app: str = "mvtspark",
@@ -21,6 +33,9 @@ def get_spark(
     - shuffle partitions ~ cores (local) — on a real cluster, pass
       ``shuffle_partitions ≈ 2-3 × total executor cores``
     - UTC session TZ for DuckDB-oracle comparability
+    - the ``mvtspark.daemon`` Python worker daemon, which stops every
+      task from re-reading ``pyspark.zip`` (the workers must be able to
+      import ``mvtspark``, as every UDF here already requires)
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
@@ -47,9 +62,11 @@ def get_spark(
         # bytecode interpreter — observed as 10-60x slowdowns on
         # expression-heavy stages (many regex/string features per row)
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
-        .config("spark.driver.memory", os.environ.get("MVTSPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("MVTSPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config(*PYTHON_DAEMON_CONF)
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -19,6 +19,7 @@ Reference parity targets:
 """
 
 import numpy as np
+import pytest
 
 from mvtspark.kernels import geom, mvt, mvt_batch
 
@@ -435,6 +436,7 @@ BAD_GEOMETRY = {
     "unknown command 5": [0x0D, 0x32, 0x22],  # (1 << 3) | 5
     "command stream overruns buffer": [0x09, 0x32],  # MoveTo(1), one param
     "ClosePath with no open part": [0x0F, 0x09, 0x32, 0x22],
+    "ClosePath on an empty part": [0x01, 0x0F],  # MoveTo(0), ClosePath
 }
 
 
@@ -477,6 +479,37 @@ def test_bad_packed_stream_poisons_only_its_tile():
                            2: "varint longer than 10 bytes",
                            3: "truncated varint at end of stream"}
         assert out[0].tolist() == [1] and _feature_xs(out, 0) == [25]
+
+
+def test_closepath_on_an_empty_part_poisons_only_its_tile():
+    """A ClosePath closing a part with no vertex (MoveTo(0), then
+    ClosePath; here also as a feature's second part) used to take its
+    closing vertex from whatever vertex followed in the batch (the next
+    tile decoded as xs [25, 25]) and to raise IndexError, failing the
+    whole batch, when no vertex followed. It is its tile's fault now, in
+    lenient and strict mode and in either position."""
+    empty = _tile_with_geometry([0x01, 0x0F])
+    second = _tile_with_geometry([0x09, 0x32, 0x22, 0x0F, 0x01, 0x0F])
+    msg = "ClosePath on an empty part"
+    for validate in (False, True):
+        for blobs, bad in (([empty, GOLDEN_SINGLE_POINT], 0),
+                           ([GOLDEN_SINGLE_POINT, empty], 1),
+                           ([GOLDEN_SINGLE_POINT, second], 1)):
+            out = mvt_batch.decode_tile_rows(blobs, validate=validate)
+            assert out[-1] == {bad: msg}, (validate, bad)
+            assert out[0].tolist() == [1 - bad] and _feature_xs(out, 0) == [25]
+
+
+def test_decode_commands_rejects_closepath_on_an_empty_part():
+    """The strict oracle's decoder raises a ValueError for the same
+    streams, including one with no parameters at all."""
+    for stream, msg in (([0x01, 0x0F], "ClosePath on an empty part"),
+                        ([0x09, 0x32, 0x22, 0x0F, 0x01, 0x0F], "ClosePath on an empty part"),
+                        ([0x0F], "ClosePath with no open part")):
+        with pytest.raises(geom.GeometryError, match=msg):
+            geom.decode_commands(stream, 3)
+    xs, ys, off = geom.decode_commands([0x09, 0x32, 0x22, 0x0F], 3)  # one closed vertex
+    assert xs.tolist() == [25, 25] and ys.tolist() == [17, 17] and off.tolist() == [0, 2]
 
 
 def test_strict_decode_tiles_matches_invalid_suite_oracle(spark):
