@@ -2,11 +2,16 @@
 timed runs — src/Bench/Program.cs:68-114 applied per item; population
 stddev per BASELINE.md).
 
-Default mode: run the headline suite at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...} plus throughput extras
-(rows_per_sec / tiles_per_sec for the north-star spatial job).
+Default mode: run the headline suite at $SPARK_GRAFT_SF_DIR (default:
+SF_DIR below) on local[$SPARK_GRAFT_CPUS], write the full report
+({"metric": ..., "value": total_sec, "unit": "sec", "queries": {name:
+sec}, "sf": ...} plus throughput extras and the calibration samples) to
+bench_report.json next to this file, and print ONE compact JSON line
+(see ``summary``): the headline value, rows_per_sec / tiles_per_sec of
+the north-star spatial job, image_mb_per_sec, ref_decode_tiles_per_sec,
+the calibration median and the rerun count. Its size does not grow with
+the query count, so a log that keeps only the last 2,000 characters of
+the output still holds it whole.
 
 Noise self-evidencing: a fixed constant-work calibration query (pure
 codegen sum over spark.range — zero I/O, zero shuffle beyond the final
@@ -48,6 +53,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 POINTS_DEFAULT = "/tmp/mvtspark_bench/points.parquet"
+REPORT_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_report.json")
 
 # north-star spatial job size: ~2M points at sf0.1
 N_POINTS = {"0.001": 20_000, "0.01": 200_000, "0.1": 2_000_000}
@@ -677,7 +683,7 @@ def main() -> None:
     _cal_probe(spark, cal, "_end")
     cal_vals = list(cal.values())
     total = round(sum(q.values()), 3)
-    print(json.dumps({
+    report = {
         "metric": "tile-assignment + spatial-join + headline-suite elapsed",
         "value": total,
         "unit": "sec",
@@ -728,7 +734,24 @@ def main() -> None:
             # ~0.38); within-run drift shows in steady_ratio instead.
             "reference_sec_at_32_cores": 0.16,
         },
-    }))
+    }
+    with open(REPORT_PATH, "w") as f:
+        json.dump(report, f, indent=1)
+    print(json.dumps(summary(report)))
+
+
+def summary(report: dict) -> dict:
+    """The headline figures of a default-mode report, for its one stdout
+    line: no per-query or per-probe entries, so its size does not grow
+    with the suite."""
+    keys = ("metric", "value", "unit", "rows_per_sec", "tiles_per_sec",
+            "image_mb_per_sec", "ref_decode_tiles_per_sec")
+    return {
+        **{k: report[k] for k in keys},
+        "calibration_median": report["calibration"]["median"],
+        "reruns": sum(report["reruns"].values()),
+        "report": os.path.basename(REPORT_PATH),
+    }
 
 
 def _mp_burn_task(n):

@@ -146,175 +146,171 @@ def decode_image(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # MRJ — from-scratch LOSSY image codec (the image twin of kernels/video.py's
-# MRV): BT.601 YCbCr (4:4:4) → 8x8 orthonormal DCT-II per block → uniform
-# quantization (qstep) → zlib. Exists to make the BASELINE input_hint's
-# "PSNR >= 40 dB for lossy" invariant REAL (raw/PNG are lossless, where it
-# held vacuously): at the default qstep=4 the synthetic corpus measures
-# >= 41.7 dB worst-case. The synth images are uniform noise — the
-# information-theoretic worst case, which barely compresses (~1.05x);
-# smooth/natural content compresses 10x+ (pinned in tests). No external
-# libs; pure numpy, deterministic.
+# MRV): BT.601 YCbCr → 8x8 orthonormal DCT-II per block → uniform
+# quantization (qstep) → zlib, in two modes: 4:4:4 (magic MRJ1) and 4:2:0
+# (MRJ2: full-resolution Y, 2x2 box-averaged Cb/Cr). Exists to make the
+# BASELINE input_hint's "PSNR >= 40 dB for lossy" invariant REAL
+# (raw/PNG are lossless, where it held vacuously): at the default qstep=4
+# the synthetic corpus measures >= 41.7 dB worst-case. The synth images
+# are uniform noise — the information-theoretic worst case, which barely
+# compresses (~1.05x); smooth/natural content compresses 10x+ (pinned in
+# tests). No external libs; pure numpy, deterministic.
+#
+# One stacked core computes both modes over (n, h, w, 3) stacks: the color
+# pair (_ycbcr/_rgb8), the block DCT pair (block_dct/block_idct) and the
+# chroma pair (chroma_down/_chroma_up); the JFIF codec in kernels/jpeg.py
+# reuses block_dct, block_idct and chroma_down. The per-image entry points
+# are its n = 1 calls. The bytes are pinned by payload digests
+# (tests/test_mrj_frozen.py) and the frozen lossy_roundtrip_psnr and
+# lossy_420_psnr goldens: the einsum summation order is part of the
+# format (a reassociated DCT, e.g. flattened block axes or a BLAS matmul,
+# moves coefficients across round() boundaries).
 # ---------------------------------------------------------------------------
 
 _MRJ_MAGIC = b"MRJ1"
-_DCT8_M = None
+_MRJ2_MAGIC = b"MRJ2"
+
+_K8 = np.arange(8, dtype=np.float64)
+DCT8 = np.cos(np.pi * (2 * _K8[None, :] + 1) * _K8[:, None] / 16.0)
+DCT8[0] *= np.sqrt(1 / 8)
+DCT8[1:] *= np.sqrt(2 / 8)  # orthonormal: inverse == transpose
+DCT8.flags.writeable = False
 
 
-def _dct8() -> np.ndarray:
-    global _DCT8_M
-    if _DCT8_M is None:
-        k = np.arange(8, dtype=np.float64)
-        m = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / 16.0)
-        m[0] *= np.sqrt(1 / 8)
-        m[1:] *= np.sqrt(2 / 8)  # orthonormal: inverse == transpose
-        _DCT8_M = m
-    return _DCT8_M
+def block_dct(planes: np.ndarray) -> np.ndarray:
+    """(n, H, W) float planes, H and W multiples of 8 → (n, H/8, W/8, 8, 8)
+    DCT-II coefficients of the level-shifted (-128) 8x8 blocks."""
+    n, hh, ww = planes.shape
+    blk = planes.reshape(n, hh // 8, 8, ww // 8, 8).transpose(0, 1, 3, 2, 4)
+    return np.einsum("ij,nabjk,lk->nabil", DCT8, blk - 128.0, DCT8)
+
+
+def block_idct(coef: np.ndarray) -> np.ndarray:
+    """Inverse of block_dct: (n, by, bx, 8, 8) → (n, 8*by, 8*bx) planes."""
+    n, by, bx = coef.shape[:3]
+    blk = np.einsum("ji,nabjk,kl->nabil", DCT8, coef, DCT8) + 128.0
+    return blk.transpose(0, 1, 3, 2, 4).reshape(n, by * 8, bx * 8)
+
+
+def _ycbcr(rgb: np.ndarray):
+    """BT.601 float RGB (..., 3) → Y, Cb, Cr planes."""
+    r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
+    y = 0.299 * r + 0.587 * g + 0.114 * b
+    return y, 128.0 + (b - y) * 0.564, 128.0 + (r - y) * 0.713
+
+
+def _rgb8(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
+    """Inverse of _ycbcr, rounded and clipped to uint8 (..., 3)."""
+    r = y + (cr - 128.0) / 0.713
+    b = y + (cb - 128.0) / 0.564
+    g = (y - 0.299 * r - 0.114 * b) / 0.587
+    rgb = np.stack([r, g, b], axis=-1)
+    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+
+
+def chroma_down(c: np.ndarray) -> np.ndarray:
+    """2x2 box average of (n, H, W) planes with even H and W."""
+    n, hh, ww = c.shape
+    return c.reshape(n, hh // 2, 2, ww // 2, 2).mean(axis=(2, 4))
+
+
+def _chroma_up(c: np.ndarray, h: int, w: int) -> np.ndarray:
+    """Inverse of chroma_down: repeat each sample 2x2, crop to (h, w)."""
+    c = c[:, : (h + 1) // 2, : (w + 1) // 2]
+    return c.repeat(2, axis=1).repeat(2, axis=2)[:, :h, :w]
+
+
+def _mrj_grids(h: int, w: int, subsample: bool) -> list[tuple[int, int]]:
+    """8x8 block grid (rows, cols) of the Y, Cb and Cr planes."""
+    ch, cw = ((h + 1) // 2, (w + 1) // 2) if subsample else (h, w)
+    return [(-(-ph // 8), -(-pw // 8)) for ph, pw in ((h, w), (ch, cw), (ch, cw))]
+
+
+def _mrj_encode(
+    stack: np.ndarray, qstep: int, subsample: bool
+) -> tuple[list[bytes], list[np.ndarray]]:
+    """(n, h, w, 3) uint8 stack → (payloads, quantized Y/Cb/Cr
+    coefficients, each (n, by, bx, 8, 8) int16). zlib runs per image."""
+    if not 1 <= qstep <= 255:
+        raise ValueError(f"qstep {qstep} out of range 1..255")
+    n, h, w, _ = stack.shape
+    if w > 0xFFFF or h > 0xFFFF:  # header '<H' fields — fail up front
+        raise ValueError(f"image {w}x{h} exceeds the 65535 MRJ dim limit")
+    m = 2 if subsample else 8  # 4:2:0 pads to even dims, planes to 8 below
+    p = np.pad(stack, ((0, 0), (0, (-h) % m), (0, (-w) % m), (0, 0)), mode="edge")
+    y, cb, cr = _ycbcr(p.astype(np.float64))
+    if subsample:
+        cb, cr = chroma_down(cb), chroma_down(cr)
+    quant = []
+    for ch in (y, cb, cr):
+        _, ph, pw = ch.shape
+        if ph % 8 or pw % 8:
+            ch = np.pad(ch, ((0, 0), (0, (-ph) % 8), (0, (-pw) % 8)), mode="edge")
+        quant.append(np.round(block_dct(ch) / qstep).astype("<i2"))
+    magic = _MRJ2_MAGIC if subsample else _MRJ_MAGIC
+    header = struct.pack("<4sHHB", magic, w, h, qstep)
+    payloads = [
+        header + zlib.compress(b"".join(q[j].tobytes() for q in quant), 6)
+        for j in range(n)
+    ]
+    return payloads, quant
+
+
+def _mrj_decode(
+    quant: list[np.ndarray], qstep: int, h: int, w: int, subsample: bool
+) -> np.ndarray:
+    """Quantized Y/Cb/Cr coefficients → (n, h, w, 3) uint8."""
+    y, cb, cr = (block_idct(q.astype(np.float64) * qstep) for q in quant)
+    if subsample:
+        cb, cr = _chroma_up(cb, h, w), _chroma_up(cr, h, w)
+    return _rgb8(y[:, :h, :w], cb[:, :h, :w], cr[:, :h, :w])
 
 
 def encode_mrj(img: np.ndarray, qstep: int = 4) -> bytes:
-    """Lossy-encode an (h, w, 3) uint8 image; qstep trades quality for
-    size (qstep=4 ≈ 42 dB on noise, far higher on smooth content)."""
-    if not 1 <= qstep <= 255:
-        raise ValueError(f"qstep {qstep} out of range 1..255")
-    h, w, _ = img.shape
-    if w > 0xFFFF or h > 0xFFFF:  # header '<H' fields — fail up front
-        raise ValueError(f"image {w}x{h} exceeds the 65535 MRJ dim limit")
-    p = np.pad(
-        img, ((0, (-h) % 8), (0, (-w) % 8), (0, 0)), mode="edge"
-    ).astype(np.float64)
-    r, g, b = p[..., 0], p[..., 1], p[..., 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 + (b - y) * 0.564
-    cr = 128.0 + (r - y) * 0.713
-    hh, ww = y.shape
-    c = _dct8()
-    out = []
-    for ch in (y, cb, cr):
-        blk = ch.reshape(hh // 8, 8, ww // 8, 8).transpose(0, 2, 1, 3)
-        coef = np.einsum("ij,abjk,lk->abil", c, blk - 128.0, c)
-        out.append(np.round(coef / qstep).astype("<i2").tobytes())
-    header = struct.pack("<4sHHB", _MRJ_MAGIC, w, h, qstep)
-    return header + zlib.compress(b"".join(out), 6)
+    """Lossy-encode an (h, w, 3) uint8 image in 4:4:4 mode; qstep trades
+    quality for size (qstep=4 ≈ 42 dB on noise, far higher on smooth
+    content)."""
+    return _mrj_encode(img[None], qstep, False)[0][0]
+
+
+def encode_mrj420(img: np.ndarray, qstep: int = 4) -> bytes:
+    """MRJ with 4:2:0 chroma subsampling (magic MRJ2) — real compression
+    on smooth / natural content (chroma carries little detail there, so
+    the PSNR >= 40 dB bound holds on the smooth corpus while the payload
+    drops ~2x vs 4:4:4; pinned in tests). On uniform noise the chroma
+    detail is irrecoverable by construction — that corpus stays on the
+    4:4:4 mode."""
+    return _mrj_encode(img[None], qstep, True)[0][0]
 
 
 def decode_mrj(data: bytes) -> np.ndarray:
-    if len(data) >= 4 and data[:4] == _MRJ2_MAGIC:
-        return decode_mrj420(data)  # 4:2:0 mode, below
-    if len(data) < 9 or data[:4] != _MRJ_MAGIC:
+    """MRJ payload of either mode (dispatched by magic) → (h, w, 3) uint8."""
+    magic = data[:4]
+    if len(data) < 9 or magic not in (_MRJ_MAGIC, _MRJ2_MAGIC):
         raise ValueError("not an MRJ payload")
     _, w, h, qstep = struct.unpack_from("<4sHHB", data, 0)
+    subsample = magic == _MRJ2_MAGIC
     try:
         raw = zlib.decompress(data[9:])
     except zlib.error as e:
         raise ValueError(f"corrupt MRJ payload: {e}") from None
-    hh, ww = h + (-h) % 8, w + (-w) % 8
-    per = (hh // 8) * (ww // 8) * 64
+    grids = _mrj_grids(h, w, subsample)
+    ends = np.cumsum([by * bx * 64 for by, bx in grids])
     arr = np.frombuffer(raw, dtype="<i2")
-    if arr.size != 3 * per:
+    if arr.size != ends[-1]:
         raise ValueError("MRJ payload length mismatch")
-    arr = arr.astype(np.float64) * qstep
-    c = _dct8()
-    chans = []
-    for i in range(3):
-        q = arr[i * per : (i + 1) * per].reshape(hh // 8, ww // 8, 8, 8)
-        blk = np.einsum("ji,abjk,kl->abil", c, q, c) + 128.0
-        chans.append(blk.transpose(0, 2, 1, 3).reshape(hh, ww))
-    y, cb, cr = chans
-    r = y + (cr - 128.0) / 0.713
-    b = y + (cb - 128.0) / 0.564
-    g = (y - 0.299 * r - 0.114 * b) / 0.587
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)[:h, :w]
-
-
-_MRJ2_MAGIC = b"MRJ2"
-
-
-def _dct_quant_plane(ch: np.ndarray, qstep: int) -> bytes:
-    """Pad one float plane to 8-multiples (edge), 8x8 DCT, quantize —
-    the shared per-plane stage of both MRJ modes (same einsum pattern
-    as the 4:4:4 path, so the association discipline is inherited)."""
-    h, w = ch.shape
-    p = np.pad(ch, ((0, (-h) % 8), (0, (-w) % 8)), mode="edge")
-    hh, ww = p.shape
-    c = _dct8()
-    blk = p.reshape(hh // 8, 8, ww // 8, 8).transpose(0, 2, 1, 3)
-    coef = np.einsum("ij,abjk,lk->abil", c, blk - 128.0, c)
-    return np.round(coef / qstep).astype("<i2").tobytes()
-
-
-def _dequant_idct_plane(
-    raw: np.ndarray, h: int, w: int, qstep: int
-) -> np.ndarray:
-    """Inverse of _dct_quant_plane: int16 coefs → float plane (h, w)."""
-    hh, ww = h + (-h) % 8, w + (-w) % 8
-    c = _dct8()
-    q = raw.astype(np.float64).reshape(hh // 8, ww // 8, 8, 8) * qstep
-    blk = np.einsum("ji,abjk,kl->abil", c, q, c) + 128.0
-    return blk.transpose(0, 2, 1, 3).reshape(hh, ww)[:h, :w]
-
-
-def encode_mrj420(img: np.ndarray, qstep: int = 4) -> bytes:
-    """MRJ with 4:2:0 chroma subsampling (magic MRJ2): Y at full
-    resolution, Cb/Cr box-averaged 2x2 — real compression on smooth /
-    natural content (chroma carries little detail there, so the
-    PSNR >= 40 dB bound holds on the smooth corpus while the payload
-    drops ~2x vs 4:4:4; pinned in tests). On uniform noise the chroma
-    detail is irrecoverable by construction — that corpus stays on the
-    4:4:4 mode. Same DCT/quant/zlib stages as encode_mrj."""
-    if not 1 <= qstep <= 255:
-        raise ValueError(f"qstep {qstep} out of range 1..255")
-    h, w, _ = img.shape
-    if w > 0xFFFF or h > 0xFFFF:
-        raise ValueError(f"image {w}x{h} exceeds the 65535 MRJ dim limit")
-    # pad to even dims so chroma halves exactly
-    pe = np.pad(
-        img, ((0, h % 2), (0, w % 2), (0, 0)), mode="edge"
-    ).astype(np.float64)
-    r, g, b = pe[..., 0], pe[..., 1], pe[..., 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 + (b - y) * 0.564
-    cr = 128.0 + (r - y) * 0.713
-    h2, w2 = y.shape
-    cb_d = cb.reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
-    cr_d = cr.reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
-    body = (
-        _dct_quant_plane(y, qstep)
-        + _dct_quant_plane(cb_d, qstep)
-        + _dct_quant_plane(cr_d, qstep)
-    )
-    header = struct.pack("<4sHHB", _MRJ2_MAGIC, w, h, qstep)
-    return header + zlib.compress(body, 6)
+    quant = [
+        a.reshape(1, by, bx, 8, 8)
+        for a, (by, bx) in zip(np.split(arr, ends[:-1]), grids)
+    ]
+    return _mrj_decode(quant, qstep, h, w, subsample)[0]
 
 
 def decode_mrj420(data: bytes) -> np.ndarray:
-    if len(data) < 9 or data[:4] != _MRJ2_MAGIC:
+    """decode_mrj restricted to 4:2:0 (MRJ2) payloads."""
+    if data[:4] != _MRJ2_MAGIC:
         raise ValueError("not an MRJ2 payload")
-    _, w, h, qstep = struct.unpack_from("<4sHHB", data, 0)
-    try:
-        raw = zlib.decompress(data[9:])
-    except zlib.error as e:
-        raise ValueError(f"corrupt MRJ2 payload: {e}") from None
-    h2, w2 = h + h % 2, w + w % 2
-    hc, wc = h2 // 2, w2 // 2
-
-    def plane_len(ph, pw):
-        return (ph + (-ph) % 8) * (pw + (-pw) % 8)
-
-    ny, nc = plane_len(h2, w2), plane_len(hc, wc)
-    arr = np.frombuffer(raw, dtype="<i2")
-    if arr.size != ny + 2 * nc:
-        raise ValueError("MRJ2 payload length mismatch")
-    y = _dequant_idct_plane(arr[:ny], h2, w2, qstep)
-    cb = _dequant_idct_plane(arr[ny : ny + nc], hc, wc, qstep)
-    cr = _dequant_idct_plane(arr[ny + nc :], hc, wc, qstep)
-    cb = np.repeat(np.repeat(cb, 2, axis=0), 2, axis=1)
-    cr = np.repeat(np.repeat(cr, 2, axis=0), 2, axis=1)
-    r = y + (cr - 128.0) / 0.713
-    b = y + (cb - 128.0) / 0.564
-    g = (y - 0.299 * r - 0.114 * b) / 0.587
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)[:h, :w]
+    return decode_mrj(data)
 
 
 _MRJ_CHUNK_BYTES = 8_000_000  # largest float64 temp per chunk (~8 MB):
@@ -323,76 +319,28 @@ _MRJ_CHUNK_BYTES = 8_000_000  # largest float64 temp per chunk (~8 MB):
 
 
 def mrj_roundtrip_batch(
-    stack: np.ndarray, qstep: int = 4
+    stack: np.ndarray, qstep: int = 4, subsample: bool = False
 ) -> tuple[list[bytes], np.ndarray, np.ndarray]:
-    """encode_mrj + decode_mrj verification over a same-shape
-    (n, h, w, 3) uint8 stack → (encoded payloads, per-image
-    sum(|err|) int64, per-image SSE float64).
-
-    BYTE-IDENTICAL to the per-image encode_mrj: padding / color
-    transform / round are elementwise, zlib runs per image on the same
-    coefficient bytes, and the einsum keeps the 4-D pattern with one
-    leading batch axis ("ij,nabjk,lk->nabil"). As with phash64_batch,
-    the einsum identity is EMPIRICAL, not structural — flattening the
-    block axes instead ("ij,qjk,lk->qil") measurably reassociates — so
-    tests/test_kernels_image.py pins batch-vs-per-image per-byte across
-    the synthetic shape universe and the frozen lossy_roundtrip_psnr
-    goldens are the second net. The verification decode reuses the
-    already-quantized int16 coefficients with decode_mrj's exact einsum
-    pattern (batch axis added), so the reported error is the true
-    round-trip error: association here matters too, because a flat
-    block reconstructs within 1 ulp of an exact x.5 pixel boundary and
-    a reassociated inverse DCT could flip round() and drift the
-    golden-pinned sum_abs_err."""
-    if not 1 <= qstep <= 255:
-        raise ValueError(f"qstep {qstep} out of range 1..255")
+    """Encode a same-shape (n, h, w, 3) uint8 stack and verify the round
+    trip → (payloads, per-image sum(|err|) int64, per-image SSE float64).
+    ``subsample`` selects the 4:2:0 mode. Payloads equal encode_mrj /
+    encode_mrj420 per image (the same core at n = 1), and the
+    verification decodes the already-quantized coefficients exactly as
+    decode_mrj does, so the reported error is the true round-trip error."""
     n, h, w, _ = stack.shape
-    if w > 0xFFFF or h > 0xFFFF:
-        raise ValueError(f"image {w}x{h} exceeds the 65535 MRJ dim limit")
     hh, ww = h + (-h) % 8, w + (-w) % 8
-    header = struct.pack("<4sHHB", _MRJ_MAGIC, w, h, qstep)
-    c = _dct8()
     chunk = max(1, _MRJ_CHUNK_BYTES // (hh * ww * 3 * 8))
     payloads: list[bytes] = []
     abs_err = np.empty(n, dtype=np.int64)
     sse = np.empty(n, dtype=np.float64)
     for s in range(0, n, chunk):
         sub = stack[s : s + chunk]
-        k = sub.shape[0]
-        p = np.pad(
-            sub, ((0, 0), (0, hh - h), (0, ww - w), (0, 0)), mode="edge"
-        ).astype(np.float64)
-        r, g, b = p[..., 0], p[..., 1], p[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 + (b - y) * 0.564
-        cr = 128.0 + (r - y) * 0.713
-        quant = []  # per channel: (k, hh/8, ww/8, 8, 8) int16
-        for ch in (y, cb, cr):
-            blk = ch.reshape(k, hh // 8, 8, ww // 8, 8).transpose(
-                0, 1, 3, 2, 4
-            )
-            coef = np.einsum("ij,nabjk,lk->nabil", c, blk - 128.0, c)
-            quant.append(np.round(coef / qstep).astype("<i2"))
-        for j in range(k):
-            body = b"".join(q[j].tobytes() for q in quant)
-            payloads.append(header + zlib.compress(body, 6))
-        # verification decode from the SAME quantized coefficients
-        chans = []
-        for q in quant:
-            deq = q.astype(np.float64) * qstep
-            blk = np.einsum("ji,nabjk,kl->nabil", c, deq, c) + 128.0
-            chans.append(
-                blk.transpose(0, 1, 3, 2, 4).reshape(k, hh, ww)
-            )
-        yd, cbd, crd = chans
-        rd = yd + (crd - 128.0) / 0.713
-        bd = yd + (cbd - 128.0) / 0.564
-        gd = (yd - 0.299 * rd - 0.114 * bd) / 0.587
-        rgb = np.stack([rd, gd, bd], axis=-1)
-        dec = np.clip(np.round(rgb), 0, 255).astype(np.uint8)[:, :h, :w]
+        encs, quant = _mrj_encode(sub, qstep, subsample)
+        payloads += encs
+        dec = _mrj_decode(quant, qstep, h, w, subsample)
         diff = dec.astype(np.int64) - sub.astype(np.int64)
-        abs_err[s : s + k] = np.abs(diff).sum(axis=(1, 2, 3))
-        sse[s : s + k] = (diff.astype(np.float64) ** 2).sum(axis=(1, 2, 3))
+        abs_err[s : s + len(sub)] = np.abs(diff).sum(axis=(1, 2, 3))
+        sse[s : s + len(sub)] = (diff.astype(np.float64) ** 2).sum(axis=(1, 2, 3))
     return payloads, abs_err, sse
 
 

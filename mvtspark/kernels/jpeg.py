@@ -10,10 +10,14 @@ own): full marker parse (SOI / APPn / COM skipped by length, DQT, DRI,
 SOF0 baseline, DHT, SOS, EOI), quantization and Huffman tables read
 FROM THE STREAM (not assumed), per-component sampling factors 1-2 in
 each axis (covers 4:4:4, 4:2:2, 4:2:0), interleaved MCU scan with DC
-prediction, 0xFF00 byte unstuffing and RSTn restart handling, IDCT via
-the same orthonormal 8x8 matrix as the MRJ codec (JPEG's normalization
-equals the orthonormal DCT — derived in _fdct_blocks), center-clipped
-to uint8 and cropped to the frame size.
+prediction, 0xFF00 byte unstuffing and RSTn restart handling, IDCT by
+the MRJ codec's block DCT pair (kernels/image.py block_dct/block_idct),
+center-clipped to uint8 and cropped to the frame size. One matrix
+serves both codecs because T.81's FDCT normalization
+(1/4·C(u)·C(v)·ΣΣ) EQUALS the orthonormal transform: a(0)=√(1/8),
+a(u>0)=√(2/8)=1/2, and 1/4·C(u)·C(v) reproduces a(u)·a(v) in every
+(u, v) case. The JFIF color constants stay here: they are T.81's, not
+MRJ's.
 
 Encoder (for round-trip tests and as a real sink): quality-scaled
 Annex K quantization tables, standard Annex K Huffman tables (written
@@ -34,6 +38,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from .image import block_dct, block_idct, chroma_down
 
 # ---------------------------------------------------------------------------
 # tables (ITU-T T.81 Annex K)
@@ -174,41 +180,6 @@ def quant_tables(quality: int) -> tuple[np.ndarray, np.ndarray]:
     ql = np.clip((_QT_LUM * s + 50) // 100, 1, 255)
     qc = np.clip((_QT_CHROM * s + 50) // 100, 1, 255)
     return ql, qc
-
-
-_M8 = None
-
-
-def _m8() -> np.ndarray:
-    """Orthonormal 8-point DCT matrix (same construction as
-    kernels/image.py::_dct8). T.81's FDCT normalization
-    (1/4·C(u)·C(v)·ΣΣ) EQUALS the orthonormal transform: a(0)=√(1/8),
-    a(u>0)=√(2/8)=1/2, and 1/4·C(u)·C(v) reproduces a(u)·a(v) in every
-    (u, v) case — so one matrix serves FDCT and IDCT (transpose)."""
-    global _M8
-    if _M8 is None:
-        k = np.arange(8, dtype=np.float64)
-        m = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / 16.0)
-        m[0] *= np.sqrt(1 / 8)
-        m[1:] *= np.sqrt(2 / 8)
-        _M8 = m
-    return _M8
-
-
-def _fdct_blocks(plane: np.ndarray) -> np.ndarray:
-    """(H, W) float plane (multiple of 8) → (H/8, W/8, 8, 8) DCT."""
-    hh, ww = plane.shape
-    blk = plane.reshape(hh // 8, 8, ww // 8, 8).transpose(0, 2, 1, 3)
-    m = _m8()
-    return np.einsum("ij,abjk,lk->abil", m, blk - 128.0, m)
-
-
-def _idct_blocks(coef: np.ndarray) -> np.ndarray:
-    """(nBy, nBx, 8, 8) coefs → (nBy*8, nBx*8) float plane."""
-    m = _m8()
-    blk = np.einsum("ji,abjk,kl->abil", m, coef, m) + 128.0
-    nby, nbx = coef.shape[:2]
-    return blk.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
 
 
 # ---------------------------------------------------------------------------
@@ -365,12 +336,10 @@ def encode_jpeg(
     cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
     cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
     if sub:
-        h2, w2 = cb.shape
-        cb = cb.reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
-        cr = cr.reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
+        cb, cr = chroma_down(cb[None])[0], chroma_down(cr[None])[0]
     quant = []  # per component: (nby, nbx, 64) zigzagged
     for plane, qt in ((y, ql), (cb, qc), (cr, qc)):
-        coef = _fdct_blocks(plane)
+        coef = block_dct(plane[None])[0]
         q = np.round(
             coef / qt.reshape(8, 8).astype(np.float64)
         ).astype(np.int64)
@@ -436,6 +405,23 @@ def encode_jpeg(
 # decoder (baseline, generic tables/sampling from the stream)
 # ---------------------------------------------------------------------------
 
+_SEGMENTS = {0xC0: "SOF0", 0xC1: "SOF1", 0xC4: "DHT", 0xDA: "SOS",
+             0xDB: "DQT", 0xDD: "DRI"}
+
+
+def _seg_name(marker: int) -> str:
+    return _SEGMENTS.get(marker, f"0xFF{marker:02X}")
+
+
+def _need(body: bytes, n: int, marker: int) -> None:
+    """Raise ValueError naming the segment when its body is short."""
+    if len(body) < n:
+        raise ValueError(
+            f"JPEG {_seg_name(marker)} segment too short "
+            f"({len(body)} of {n} bytes)"
+        )
+
+
 def decode_jpeg(data: bytes) -> np.ndarray:
     """Decode baseline JFIF bytes to (h, w, 3) uint8. Reads quant +
     Huffman tables from the stream; supports per-component sampling
@@ -452,6 +438,10 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     while pos < len(data):
         if data[pos] != 0xFF:
             raise ValueError("JPEG marker sync lost")
+        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
+            pos += 1  # fill bytes may precede any marker (T.81 B.1.1.2)
+        if pos + 1 >= len(data):
+            raise ValueError("JPEG marker truncated")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
@@ -461,12 +451,15 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         if pos + 2 > len(data):
             raise ValueError("JPEG segment truncated")
         ln = struct.unpack_from(">H", data, pos)[0]
+        if ln < 2:
+            raise ValueError(f"JPEG {_seg_name(marker)} segment length {ln} < 2")
         body = data[pos + 2 : pos + ln]
         if pos + ln > len(data):
             raise ValueError("JPEG segment overruns payload")
         if marker == 0xDB:  # DQT
             b = 0
             while b < len(body):
+                _need(body, b + 65, marker)
                 pq, tq = body[b] >> 4, body[b] & 0xF
                 if pq != 0:
                     raise ValueError("16-bit quant tables not baseline")
@@ -479,16 +472,20 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         elif marker == 0xC4:  # DHT
             b = 0
             while b < len(body):
+                _need(body, b + 17, marker)
                 tc, th = body[b] >> 4, body[b] & 0xF
                 bits = list(body[b + 1 : b + 17])
                 n = sum(bits)
+                _need(body, b + 17 + n, marker)
                 vals = list(body[b + 17 : b + 17 + n])
                 htabs[(tc, th)] = _huff_decode_table(bits, vals)
                 b += 17 + n
         elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 baseline
+            _need(body, 6, marker)
             prec, fh, fw, nc = struct.unpack_from(">BHHB", body, 0)
             if prec != 8:
                 raise ValueError("only 8-bit baseline JPEG supported")
+            _need(body, 6 + 3 * nc, marker)
             comps = []
             for c in range(nc):
                 cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
@@ -498,10 +495,13 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                         0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError("non-baseline JPEG (progressive/arith)")
         elif marker == 0xDD:  # DRI
+            _need(body, 2, marker)
             restart = struct.unpack_from(">H", body, 0)[0]
         elif marker == 0xDA:  # SOS — decode the scan, then finish
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
+            _need(body, 1, marker)
+            _need(body, 4 + 2 * body[0], marker)  # Ns, 2*Ns, Ss/Se/AhAl
             return _decode_scan(
                 data, pos + ln, body, frame, qtabs, htabs, restart
             )
@@ -519,19 +519,23 @@ def _decode_scan(data, pos, sos, frame, qtabs, htabs, restart):
     for c in range(ns):
         cid, tabs = sos[1 + 2 * c], sos[2 + 2 * c]
         sel[cid] = (tabs >> 4, tabs & 0xF)
+    if not all(1 <= c[1] <= 2 and 1 <= c[2] <= 2 for c in comps):
+        raise ValueError("sampling factors outside 1..2 unsupported")
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
-    if hmax > 2 or vmax > 2:
-        raise ValueError("sampling factors above 2 unsupported")
     mcux = -(-fw // (8 * hmax))
     mcuy = -(-fh // (8 * vmax))
     state = []
     for cid, hs, vs, tq in comps:
         nbx, nby = mcux * hs, mcuy * vs
+        try:
+            q, td, ta = qtabs[tq], *sel[cid]
+            dc, ac = htabs[(0, td)], htabs[(1, ta)]
+        except KeyError:
+            raise ValueError(f"JPEG component {cid}: no scan entry or table") from None
         state.append({
             "cid": cid, "h": hs, "v": vs,
-            "q": qtabs[tq].reshape(8, 8).astype(np.float64),
-            "dc": htabs[(0, sel[cid][0])], "ac": htabs[(1, sel[cid][1])],
+            "q": q.reshape(8, 8).astype(np.float64), "dc": dc, "ac": ac,
             "coef": np.zeros((nby, nbx, 8, 8), dtype=np.float64),
             "pred": 0,
         })
@@ -576,7 +580,7 @@ def _decode_scan(data, pos, sos, frame, qtabs, htabs, restart):
                     )
     planes = []
     for st in state:
-        plane = _idct_blocks(st["coef"])
+        plane = block_idct(st["coef"][None])[0]
         ry, rx = vmax // st["v"], hmax // st["h"]
         if ry > 1 or rx > 1:
             plane = np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)

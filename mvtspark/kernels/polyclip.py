@@ -88,7 +88,9 @@ def _proper_crossings(
     ax: np.ndarray, ay: np.ndarray, bx: np.ndarray, by: np.ndarray
 ) -> int:
     """Count edge pairs of rings A and B that PROPERLY cross (strictly
-    opposite sides both ways) — integer-exact for integer inputs, and
+    opposite sides both ways) — integer-exact for integer inputs whose
+    coordinate differences stay below 2^26 in magnitude (each cross
+    product is then below 2^53, float64's exact-integer range), and
     replayed verbatim by the oracle's pairwise-edge SQL."""
     na, nb = len(ax), len(ay)
     a1x, a1y = ax, ay

@@ -125,7 +125,3 @@ def decode_mrv_frames(data: bytes, indices) -> list[np.ndarray]:
             cur = cur + inflate(cur_idx)  # delta plane, uint8 wraps mod 256
         out[t] = cur
     return [out[int(i)] for i in indices]
-
-
-def decode_mrv_frame(data: bytes, idx: int) -> np.ndarray:
-    return decode_mrv_frames(data, [idx])[0]

@@ -405,8 +405,9 @@ def offset_rectilinear(rings: DataFrame, radius: int) -> DataFrame:
     [min-r, max+r] x [y-r, y+r], which absorbs the per-vertex squares.
     Coverage of the compressed grid decides membership: a cell is in
     the region iff its CENTER is inside the base ring (crossing-number
-    over vertical edges — exact: centers are half-integers, edges
-    integer) or inside any edge rectangle. Handles non-convex rings
+    over vertical edges — exact: every vertex coordinate is a grid line,
+    so a center, the midpoint of two adjacent grid lines, lies strictly
+    between edges and never on one) or inside any edge rectangle. Handles non-convex rings
     (L/U/T fences) — the shapes D17's strictly-convex offset rejects."""
     if radius < 0:
         raise ValueError("offset_rectilinear requires radius >= 0: a "
@@ -433,8 +434,8 @@ def offset_rectilinear(rings: DataFrame, radius: int) -> DataFrame:
                 cxs = (xs[:-1] + xs[1:]) / 2.0
                 cys = (ys[:-1] + ys[1:]) / 2.0
                 # crossing-number PIP of every cell center vs the base
-                # ring: vertical edges only (rectilinear), center x is
-                # half-integer so no on-edge ambiguity
+                # ring: vertical edges only (rectilinear); a center lies
+                # strictly between grid lines, so never on an edge
                 vert = vx == nx_
                 ex = vx[vert].astype(np.float64)
                 ey0 = np.minimum(vy, ny_)[vert].astype(np.float64)

@@ -97,20 +97,6 @@ def _shingle_minhash_udf(n: int = 3, perms: int = _MINHASH_PERMS):
     return _f
 
 
-def hash_str64(s: str) -> int:
-    """Deterministic 64-bit token hash (scalar form): base-1000003
-    polynomial fold over code points mod 2^64, seeded with the FNV-1a
-    offset basis. SQL-reproducible (DuckDB ``list_reduce`` over
-    ``split(w,'')`` code points), which lets the LSH signature pipeline
-    be oracle-checked end-to-end; the batch form in kernels/strhash.py
-    hashes whole Arrow batches vectorized. (Python's ``hash()`` is
-    salted per-process — unusable across executors; per-string md5 was
-    the r1 throughput bottleneck.)"""
-    from mvtspark.kernels.strhash import token_hash_scalar
-
-    return token_hash_scalar(s)
-
-
 def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     return docs.withColumn("minhash", _shingle_minhash_udf(n)(F.col("text")))
 

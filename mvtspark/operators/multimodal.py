@@ -157,57 +157,39 @@ def transcode_images_mrj(
 
     Shape-batched like channel_sums/pHash/resize: each Arrow batch
     groups by (w, h, fmt), stacks the group to (n, h, w, 3), and runs
-    the whole DCT/quantize/verify pipeline on the stack
-    (kernels/image.py::mrj_roundtrip_batch — byte-identical to the
-    per-image codec, pinned per-byte in tests; zlib stays per image).
-    A failing group falls back to per-image so undecodable rows carry
+    the whole DCT/quantize/verify pipeline on the stack in either mode
+    (kernels/image.py::mrj_roundtrip_batch — the per-image codec is the
+    same core at n = 1; zlib stays per image). A failing group falls
+    back to the same call one image at a time, so undecodable rows carry
     their error instead of failing the job. Single-thread the DCT
-    einsum dominates either way (its summation order is pinned by the
-    frozen goldens, so it cannot be traded for BLAS matmuls); the
-    batching removes the per-row Python/pandas overhead and keeps the
-    per-byte cost flat as rows-per-batch grows.
+    einsum dominates (its summation order is pinned by the frozen
+    goldens, so it cannot be traded for BLAS matmuls); the batching
+    removes the per-row Python/pandas overhead and keeps the per-byte
+    cost flat as rows-per-batch grows.
 
     ``subsample=True`` selects the 4:2:0 chroma-subsampled mode
     (kernels/image.py ``encode_mrj420`` — clipper-era JPEG's default
     sampling, real compression on smooth/natural content; PSNR >= 40
-    only holds on such content, so pick the mode by corpus). The 4:2:0
-    path runs per image inside the batch — its own frozen goldens pin
-    the bytes, and the DCT cost profile is identical to 4:4:4's.
+    only holds on such content, so pick the mode by corpus).
     """
 
     def _tc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from mvtspark.kernels.image import (
-            decode_image,
-            decode_mrj,
-            encode_mrj,
-            encode_mrj420,
-            mrj_roundtrip_batch,
-        )
+        from mvtspark.kernels.image import decode_image, mrj_roundtrip_batch
 
         cols = [c.split()[0] for c in TRANSCODE_SCHEMA.split(", ")]
 
-        def _one(rec, blob, w, h, fmt):
-            img = decode_image(blob, w, h, fmt)
-            enc = (encode_mrj420 if subsample else encode_mrj)(img, qstep)
-            dec = decode_mrj(enc)
-            diff = dec.astype(np.int64) - img.astype(np.int64)
-            _fill(rec, blob, w, h, enc, int(np.abs(diff).sum()),
-                  float((diff.astype(np.float64) ** 2).sum()))
-
-        def _fill(rec, blob, w, h, enc, abs_err, sse):
-            n = w * h * 3
-            p = (
-                10.0 * np.log10(255.0 * 255.0 * n / sse)
-                if sse else float("inf")
-            )
-            rec.update(
-                mrj=enc, w=w, h=h, n_px=w * h,
-                orig_len=len(blob), enc_len=len(enc),
-                sum_abs_err=abs_err,
-                psnr_x100=int(round(p * 100)) if sse else 10**9,
-            )
+        def _run(recs, blobs, stack, w, h):
+            encs, abs_err, sse = mrj_roundtrip_batch(stack, qstep, subsample)
+            for rec, blob, enc, e, s in zip(recs, blobs, encs, abs_err, sse):
+                p = 10.0 * np.log10(255.0 * 255.0 * (w * h * 3) / s) if s else 0
+                rec.update(
+                    mrj=enc, w=w, h=h, n_px=w * h,
+                    orig_len=len(blob), enc_len=len(enc),
+                    sum_abs_err=int(e),
+                    psnr_x100=int(round(p * 100)) if s else 10**9,
+                )
 
         for pdf in batches:
             recs = [
@@ -217,20 +199,17 @@ def transcode_images_mrj(
             grp = pdf.groupby(["w", "h", "fmt"], dropna=False).indices.items()
             for (w, h, fmt), poss in grp:
                 raw = pdf["bytes"].iloc[poss]
+                group = [recs[p_] for p_ in poss]
                 try:
-                    if subsample:
-                        raise ValueError("420 mode: per-image path")
                     stack = _decode_stack(raw, int(w), int(h), fmt)
-                    encs, abs_err, sse = mrj_roundtrip_batch(stack, qstep)
-                    for j, p_ in enumerate(poss):
-                        _fill(recs[p_], bytes(raw.iloc[j]), int(w), int(h),
-                              encs[j], int(abs_err[j]), float(sse[j]))
+                    _run(group, raw, stack, int(w), int(h))
                 except Exception:
-                    for p_, b in zip(poss, raw):
+                    for rec, b in zip(group, raw):
                         try:
-                            _one(recs[p_], bytes(b), int(w), int(h), fmt)
+                            img = decode_image(bytes(b), int(w), int(h), fmt)
+                            _run([rec], [b], img[None], int(w), int(h))
                         except Exception as e:
-                            recs[p_]["error"] = str(e)
+                            rec["error"] = str(e)
             yield pd.DataFrame(recs, columns=cols)
 
     return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(

@@ -24,13 +24,6 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def token_count_cols(text: Column) -> dict[str, Column]:
-    ws = F.size(tokens(text))
-    # BPE-ish estimate: ~1 token per 4 chars, floor at word count
-    bpe = F.greatest(ws, F.ceil(F.length(text) / F.lit(4)).cast("int"))
-    return {"n_tokens_ws": ws, "n_tokens_bpe": bpe.cast("int")}
-
-
 def quality_cols(text: Column) -> dict[str, Column]:
     n_chars = F.length(text)
     n_words = F.size(tokens(text))

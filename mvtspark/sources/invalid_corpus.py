@@ -88,7 +88,3 @@ INVALID_CLASSES: dict[int, tuple[str, bytes, str]] = {
          bytes([0x1A, 0x7F]) + _layer()[:20],
          "layer length > remaining bytes"),
 }
-
-
-def class_tile(cls: int) -> bytes:
-    return INVALID_CLASSES[cls][1]
