@@ -289,6 +289,8 @@ def decode_mrj(data: bytes) -> np.ndarray:
     if len(data) < 9 or magic not in (_MRJ_MAGIC, _MRJ2_MAGIC):
         raise ValueError("not an MRJ payload")
     _, w, h, qstep = struct.unpack_from("<4sHHB", data, 0)
+    if qstep == 0:  # no encoder writes it: it would decode to flat gray
+        raise ValueError("MRJ qstep 0 out of range 1..255")
     subsample = magic == _MRJ2_MAGIC
     try:
         raw = zlib.decompress(data[9:])

@@ -8,118 +8,307 @@ integer-vertex rings — non-convex, any edge angle — are exact here.
 Algorithm — slab decomposition, the measure-only core of a Vatti /
 Bentley–Ottmann sweep:
 
-1. Event y's = every vertex y of A and B, plus the y of every proper
-   A-edge × B-edge crossing (within-polygon edges never cross — the
-   rings are simple). Crossing y's are computed in exact ``Fraction``
-   arithmetic, so no float discipline anywhere.
-2. Between two consecutive events NOTHING structural changes: no
-   vertex enters, no pair of boundary edges swaps order. Each
-   polygon's cross-section {y = const} is a fixed set of intervals
-   whose endpoints move LINEARLY in y, and the x-order of all
-   endpoints is constant — so the measure of any boolean combination
-   of the two interval sets is linear in y across the slab, and
-   (midline measure) x (slab height) integrates it EXACTLY.
-3. At each slab midline, each polygon's interval set is the even-odd
-   pairing of its edge x-crossings (edges strictly straddling the
-   midline — horizontal edges lie on event lines and never straddle).
-   A single endpoint sweep over both interval sets then reads all
-   four measures straight off the coverage predicate — inter from
-   (inA and inB), union from (inA or inB), diff from (inA and not
-   inB), xor from (inA != inB) — NOT via inclusion-exclusion, so a
-   cross-engine compare checks each measure independently.
+1. Event y's = every vertex y, plus the exact ``Fraction`` y of every
+   proper crossing between edges of different rings (within-ring
+   edges never cross — the rings are simple).
+2. Between two consecutive events no vertex enters and no two edges
+   swap order, so each slab's edges keep one x-order, and every
+   boolean measure reads off per-ring even-odd parities (or, for an
+   N-ring union, the coverage count): inter from (inA and inB), union
+   from (inA or inB), diff from (inA and not inB), xor from
+   (inA != inB) — NOT via inclusion-exclusion, so a cross-engine
+   compare checks each measure independently.
+3. An edge's x is linear in y, so its coefficient (the predicate left
+   of it minus the predicate right of it) times 2∫x dy telescopes to
+   a sum over the events where that coefficient changes.
 
-Cost: O(|A|·|B|) crossings + O(events · edges) midline evaluations
-per pair — geometry-bounded (rings are tiny fence/mask shapes), and
-pairs distribute embarrassingly over partitions: the Spark layer is
-a pure map with no shuffle.
+Cost: the (slab, edge) entries live in int64 numpy arrays. Edge pairs
+are tested for crossings with int64 sign masks, in blocks (a
+1,000-vertex pair stays small); an edge straddles slab k exactly when
+rank(lo) <= k < rank(hi); each slab is ordered by a float64 midline
+key whose every adjacent pair is then checked in integers (a failing
+slab is re-sorted on exact midlines); parities are segmented cumsums.
+``Fraction``s are built only for the crossings and for the events
+where an edge's coefficient changes. The entry count is events x
+active edges, so heavily overlapping dense rings grow it cubically.
+Pairs distribute embarrassingly: the Spark layer is a pure map.
 
-Orientation does not matter (even-odd fill); vertex order rotation
-does not matter. Shared/collinear boundary segments contribute zero
-width and drop out of every measure.
+Exactness bound: |c| < 2^30 for every coordinate (``ValueError``
+otherwise), so differences stay below 2^31 and every orientation
+product fits int64. Orientation and vertex rotation do not matter
+(even-odd fill); shared/collinear boundary segments contribute zero
+width to every measure.
 """
 
 from __future__ import annotations
 
 from fractions import Fraction
+from math import gcd
+from types import SimpleNamespace
+
+import numpy as np
+
+#: exclusive bound on |coordinate| for the int64 orientation tests
+COORD_LIMIT = 1 << 30
+#: edge pairs per numpy block of the crossing test
+_BLOCK = 1 << 18
 
 
-def _edges(xs, ys):
-    # plain Python ints: the O(E^2) crossing tests and O(slabs*edges)
-    # straddle tests stay in fast integer arithmetic; Fractions only
-    # materialize at actual divisions (crossing y's, midline x's)
-    n = len(xs)
-    return [
-        (
-            int(xs[i]), int(ys[i]),
-            int(xs[(i + 1) % n]), int(ys[(i + 1) % n]),
+def _edges(rings):
+    """(x1, y1, x2, y2, ring) int64 arrays of the rings' non-horizontal
+    edges, each oriented upward and grouped by ring, plus the set of
+    every vertex y. Raises ``ValueError`` past :data:`COORD_LIMIT`."""
+    cols, vys = [], set()
+    for p, (rx, ry) in enumerate(rings):
+        try:
+            xy = np.array([np.reshape(rx, -1), np.reshape(ry, -1)], np.int64)
+        except OverflowError:
+            xy = None
+        if xy is None or ((xy >= COORD_LIMIT) | (xy <= -COORD_LIMIT)).any():
+            raise ValueError("sweep coordinates must satisfy |c| < 2**30 "
+                             "(int64 orientation products)")
+        e = np.concatenate([xy, np.roll(xy, -1, axis=1)])
+        e = np.where(e[1] < e[3], e, e[[2, 3, 0, 1]])[:, e[1] != e[3]]
+        cols.append(np.concatenate([e, np.full((1, e.shape[1]), p)]))
+        vys.update(xy[1].tolist())
+    return (*np.concatenate(cols or [np.zeros((5, 0), np.int64)], axis=1),
+            vys)
+
+
+def _sign(v):
+    return np.sign(v).astype(np.int8)
+
+
+def _crossings(x1, y1, dx, dy, ring):
+    """Every PROPER crossing (strict straddle both ways) between edges
+    of different rings: sorted pair keys i * E + j (i < j) and their
+    exact y's. Improper touches happen at vertices, whose y's are
+    events already; parallel pairs have no transversal crossing."""
+    n = len(x1)
+    ends = np.searchsorted(ring, ring, side="right")
+    keys, ys = [], []
+    i0 = 0
+    while i0 < n and ends[i0] < n:
+        j0 = ends[i0]
+        i1 = min(n, i0 + max(1, _BLOCK // (n - j0)))
+        i = np.arange(i0, i1)[:, None]
+        j = np.arange(j0, n)[None, :]
+        ox, oy = x1[j] - x1[i], y1[j] - y1[i]
+        adx, ady, bdx, bdy = dx[i], dy[i], dx[j], dy[j]
+        hit = (
+            (ring[i] < ring[j])
+            & (_sign(adx * oy - ady * ox)
+               * _sign(adx * (oy + bdy) - ady * (ox + bdx)) < 0)
+            & (_sign(bdy * ox - bdx * oy)
+               * _sign(bdx * (ady - oy) - bdy * (adx - ox)) < 0)
         )
-        for i in range(n)
-    ]
+        ii, jj = np.nonzero(hit)
+        if len(ii):
+            den = adx[ii, 0] * bdy[0, jj] - ady[ii, 0] * bdx[0, jj]
+            num = ox[ii, jj] * bdy[0, jj] - oy[ii, jj] * bdx[0, jj]
+            for p1y, d1y, nu, de in zip(
+                    y1[ii + i0].tolist(), ady[ii, 0].tolist(),
+                    num.tolist(), den.tolist()):
+                ys.append(Fraction(p1y * de + nu * d1y, de))
+            keys.append((ii + i0) * n + (jj + j0))
+        i0 = i1
+    return np.concatenate(keys) if keys else np.zeros(0, np.int64), ys
 
 
-def _crossing_ys(ea, eb):
-    """y of every PROPER crossing (strict straddle both ways) between
-    an A edge and a B edge — exact Fractions. Improper touches happen
-    at vertices, whose y's are events already; parallel/collinear
-    pairs have no transversal crossing."""
-    ys = []
-    for (p1x, p1y, p2x, p2y) in ea:
-        d1x, d1y = p2x - p1x, p2y - p1y
-        for (q1x, q1y, q2x, q2y) in eb:
-            d2x, d2y = q2x - q1x, q2y - q1y
-            den = d1x * d2y - d1y * d2x
-            if den == 0:
-                continue
-            s1 = d1x * (q1y - p1y) - d1y * (q1x - p1x)
-            s2 = d1x * (q2y - p1y) - d1y * (q2x - p1x)
-            s3 = d2x * (p1y - q1y) - d2y * (p1x - q1x)
-            s4 = d2x * (p2y - q1y) - d2y * (p2x - q1x)
-            if (s1 * s2 < 0) and (s3 * s4 < 0):
-                num = (q1x - p1x) * d2y - (q1y - p1y) * d2x
-                y = p1y + Fraction(num * d1y, den)
-                ys.append(y if y.denominator != 1 else int(y))
-    return ys
+def _gaps(sw, order):
+    """Exact sign of the x-gap from each entry to the next one in
+    ``order`` (0 where the next entry is in another slab). Two edges'
+    gap is linear in y and keeps its sign between their crossings, so
+    over a slab it is the sign at the low or the high end of their
+    common y-range, whichever is nonzero — one int64 orientation test
+    of an endpoint against the other edge's line each; a pair that
+    crosses inside that range takes the end on the slab's side."""
+    x1, y1, x2, y2, dx, dy = sw.x1, sw.y1, sw.x2, sw.y2, sw.dx, sw.dy
+    gap = np.zeros(max(len(order) - 1, 0), np.int8)
+    same = np.flatnonzero(sw.kc[order[1:]] == sw.kc[order[:-1]])
+    e, f, k = sw.ec[order[same]], sw.ec[order[same + 1]], sw.kc[order[same]]
+    s_lo = np.where(
+        y1[f] >= y1[e],
+        -_sign(dx[e] * (y1[f] - y1[e]) - dy[e] * (x1[f] - x1[e])),
+        _sign(dx[f] * (y1[e] - y1[f]) - dy[f] * (x1[e] - x1[f])))
+    s_hi = np.where(
+        y2[f] <= y2[e],
+        -_sign(dx[e] * (y2[f] - y1[e]) - dy[e] * (x2[f] - x1[e])),
+        _sign(dx[f] * (y2[e] - y1[f]) - dy[f] * (x2[e] - x1[f])))
+    s = np.where(s_lo != 0, s_lo, s_hi)
+    cross = np.flatnonzero(s_lo * s_hi < 0)
+    if len(cross):
+        a, b = e[cross], f[cross]
+        key = np.minimum(a, b) * len(x1) + np.maximum(a, b)
+        at = np.minimum(np.searchsorted(sw.ckeys, key), len(sw.ckeys) - 1)
+        if len(sw.ckeys) == 0 or (sw.ckeys[at] != key).any():
+            raise ValueError("sweep rings must be simple: two edges of "
+                             "one ring cross")
+        s[cross] = np.where(k[cross] < sw.crank[at],
+                            s_lo[cross], s_hi[cross])
+    gap[same] = s
+    return gap
 
 
-def _xings_at(edges, ym):
-    """Sorted x-crossings of the ring's edges with the line y = ym —
-    even-odd pairing gives the inside intervals. ym is a slab midline,
-    strictly between events, so no edge endpoint lies on it."""
-    xs = []
-    for (x1, y1, x2, y2) in edges:
-        lo, hi = (y1, y2) if y1 <= y2 else (y2, y1)
-        if lo < ym < hi:
-            x = x1 + (ym - y1) * Fraction(x2 - x1, y2 - y1)
-            xs.append(x if x.denominator != 1 else int(x))
-    xs.sort()
-    return xs
+def _sweep(rings) -> SimpleNamespace:
+    """Every (slab, edge) entry of the rings, each slab's entries in
+    exact x-order. ``events``: the sorted event y's (ints and
+    Fractions), slab k running from events[k] to events[k + 1]. Edge
+    arrays ``x1 .. dy`` (upward, non-horizontal) and ``rh`` (rank of
+    the top y); crossing pair keys ``ckeys`` and their event ranks
+    ``crank``. Entries in construction order (edge-major, slab
+    ascending): ``ec``, ``kc``. In slab order: ``order`` (construction
+    index), ``k``, ``e``, ``r`` (ring) and ``gap`` (see :func:`_gaps`)."""
+    sw = SimpleNamespace()
+    x1, y1, x2, y2, ring, vys = _edges(rings)
+    dx, dy = x2 - x1, y2 - y1
+    sw.x1, sw.y1, sw.x2, sw.y2, sw.dx, sw.dy = x1, y1, x2, y2, dx, dy
+    sw.ckeys, cys = _crossings(x1, y1, dx, dy, ring)
+    events = sw.events = sorted(vys.union(cys))
+    rank = {v: i for i, v in enumerate(events)}
+    sw.crank = np.array([rank[y] for y in cys], np.int64)
+    irank = np.flatnonzero([type(v) is int for v in events])
+    ivals = np.array([events[i] for i in irank.tolist()], np.int64)
+    rl = irank[np.searchsorted(ivals, y1)]
+    rh = sw.rh = irank[np.searchsorted(ivals, y2)]
+    cnt = rh - rl
+    ec = sw.ec = np.repeat(np.arange(len(x1)), cnt)
+    kc = sw.kc = np.arange(len(ec)) - np.repeat(cnt.cumsum() - cnt - rl, cnt)
+    evf = np.array(events, np.float64)
+    xm = x1[ec] + (0.5 * (evf[kc] + evf[kc + 1]) - y1[ec]) * (dx / dy)[ec]
+    order = np.lexsort((xm, kc))
+    gap = _gaps(sw, order)
+    bad = np.unique(kc[order[:-1]][gap < 0])
+    if len(bad):
+        # float midlines misordered these slabs: re-sort them exactly
+        ks = kc[order]
+        c = (x1 * dy - y1 * dx).tolist()
+        dxl, dyl = dx.tolist(), dy.tolist()
+        for b, i0, i1 in zip(bad.tolist(), np.searchsorted(ks, bad).tolist(),
+                             np.searchsorted(ks, bad, "right").tolist()):
+            ym = Fraction(events[b] + events[b + 1]) / 2
+            order[i0:i1] = sorted(
+                order[i0:i1].tolist(),
+                key=lambda j: (c[ec[j]] + ym * dxl[ec[j]]) / dyl[ec[j]])
+        gap = _gaps(sw, order)
+    sw.order, sw.gap = order, gap
+    sw.k, sw.e = kc[order], ec[order]
+    sw.r = ring[sw.e]
+    return sw
 
 
-def _measures_at(xa, xb):
-    """(inter, union, diff, xor) 1-D measures of the two even-odd
-    interval sets given their sorted boundary crossings — one merged
-    endpoint sweep, each measure read off its own coverage predicate."""
-    events = sorted(set(xa) | set(xb))
-    inter = union = diff = xor = Fraction(0)
-    ia = ib = 0
-    for k in range(len(events) - 1):
-        x0, x1 = events[k], events[k + 1]
-        while ia < len(xa) and xa[ia] <= x0:
-            ia += 1
-        while ib < len(xb) and xb[ib] <= x0:
-            ib += 1
-        in_a = ia % 2 == 1
-        in_b = ib % 2 == 1
-        w = x1 - x0
-        if in_a and in_b:
-            inter += w
-        if in_a or in_b:
-            union += w
-        if in_a and not in_b:
-            diff += w
-        if in_a != in_b:
-            xor += w
-    return inter, union, diff, xor
+def _in_slab(sw, v):
+    """Inclusive running sum of v over each slab's entries."""
+    c = np.cumsum(v)
+    first = np.searchsorted(sw.k, sw.k)
+    return c - (c[first] - v[first])
+
+
+def _pair_parities(sw):
+    """(inA, inB) right of each entry, and left of it."""
+    is_a = (sw.r == 0).astype(np.int64)
+    a1 = (_in_slab(sw, is_a) & 1).astype(bool)
+    b1 = (_in_slab(sw, 1 - is_a) & 1).astype(bool)
+    return a1, b1, a1 ^ (is_a == 1), b1 ^ (is_a == 0)
+
+
+def _integrate(sw, coef):
+    """Σ c · 2∫x dy over every entry, exactly, for each row of
+    ``coef`` (ops x entries, slab order; c = predicate left of the
+    edge minus predicate right of it). An edge's x is (C + y·dx)/dy
+    with C = x1·dy − y1·dx, so 2∫x dy = F(y1) − F(y0) with
+    F(y) = (2C·y + dx·y²)/dy, and an edge's run of slabs telescopes to
+    Σ F(events[k])·(c before k − c from k) over the events k where its
+    coefficient changes; only those build Fractions."""
+    if not len(sw.order):
+        return [Fraction(0)] * len(coef)
+    c = np.empty_like(coef)
+    c[:, sw.order] = coef
+    ec = sw.ec
+    last = np.r_[ec[1:] != ec[:-1], True]
+    prev = np.where(np.r_[True, last[:-1]], 0, np.roll(c, 1, axis=1))
+    w = np.concatenate([prev - c, c[:, last]], axis=1)
+    hot = np.flatnonzero(w.any(axis=0))
+    ev = np.concatenate([sw.kc, sw.rh[ec[last]]])[hot].tolist()
+    ed = np.concatenate([ec, ec[last]])[hot]
+    cl = (sw.x1 * sw.dy - sw.y1 * sw.dx)[ed].tolist()
+    terms = []  # (numerator, denominator) of F at each change point
+    for c_, dx_, dy_, k in zip(cl, sw.dx[ed].tolist(), sw.dy[ed].tolist(), ev):
+        p, q = sw.events[k].numerator, sw.events[k].denominator
+        terms.append(((2 * c_ * q + dx_ * p) * p, q * q * dy_))
+    out = []
+    for row in w[:, hot].tolist():
+        acc = {}
+        for wi, (num, den) in zip(row, terms):
+            if wi:
+                acc[den] = acc.get(den, 0) + wi * num
+        out.append(_rational_sum(list(acc.items())))
+    return out
+
+
+def _rational_sum(terms):
+    """Exact Σ num/den over (den, num) pairs with den > 0: pairwise
+    over common denominators, reduced once at the end."""
+    while len(terms) > 1:
+        odd = terms[-1:] if len(terms) % 2 else []
+        terms = [
+            (d1 // g * d2, n1 * (d2 // g) + n2 * (d1 // g))
+            for (d1, n1), (d2, n2) in zip(terms[::2], terms[1::2])
+            for g in (gcd(d1, d2),)
+        ] + odd
+    return Fraction(terms[0][1], terms[0][0]) if terms else Fraction(0)
+
+
+_PREDS = {
+    "inter": lambda a, b: a & b,
+    "union": lambda a, b: a | b,
+    "diff": lambda a, b: a & ~b,
+    "xor": lambda a, b: a ^ b,
+}
+
+
+def boolean_pair_measures(ax, ay, bx, by):
+    """(inter_area2, union_area2, diff_area2, xor_area2) — each TWICE
+    the exact area (Fractions; integral for integer-vertex rings whose
+    doubled boolean areas are integral, e.g. any octilinear corpus).
+    diff is A \\ B. Inputs: vertex coordinate sequences of two simple
+    rings, any orientation, any angles, integer coordinates with
+    |c| < 2^30."""
+    sw = _sweep([(ax, ay), (bx, by)])
+    a1, b1, a0, b0 = _pair_parities(sw)
+    coef = np.stack([
+        _PREDS[op](a0, b0).astype(np.int8) - _PREDS[op](a1, b1)
+        for op in ("inter", "union", "diff", "xor")
+    ])
+    return tuple(_integrate(sw, coef))
+
+
+def rings_union_area2(rings):
+    """TWICE the exact union area of a LIST of simple rings (clipper
+    ctUnion over N inputs — the merged-geofence shape). Rings are
+    (xs, ys) pairs; any orientation, any angles, integer coordinates.
+    Within one simple ring the even-odd intervals are disjoint, so the
+    count of rings whose parity is odd IS the coverage count, and the
+    union is where it is >= 1."""
+    sw = _sweep(rings)
+    m = len(sw.k)
+    # each entry's occurrence index among its ring's entries in its slab
+    grp = np.lexsort((np.arange(m), sw.r, sw.k))
+    pos = np.arange(m)
+    new = np.r_[True, (np.diff(sw.k[grp]) != 0) | (np.diff(sw.r[grp]) != 0)]
+    occ = np.empty(m, np.int64)
+    occ[grp] = pos - np.maximum.accumulate(np.where(new, pos, 0))
+    delta = 1 - 2 * (occ & 1)
+    cov = _in_slab(sw, delta)
+    coef = (cov - delta >= 1).astype(np.int8) - (cov >= 1)
+    return _integrate(sw, coef[None, :])[0]
+
+
+def _union_area2(pieces):
+    """TWICE the exact area of the union of simple rings, each given
+    as a vertex tuple list."""
+    return rings_union_area2(
+        [([p[0] for p in ring], [p[1] for p in ring]) for ring in pieces])
 
 
 def _hull(points):
@@ -145,46 +334,6 @@ def _hull(points):
     return lo[:-1] + hi[:-1]
 
 
-def _union_area2(pieces):
-    """TWICE the exact area of the union of simple rings (each given
-    as a vertex tuple list) — same slab machinery as the pair sweep,
-    generalized to N pieces: events at every vertex y and every
-    cross-piece edge crossing; per slab midline each piece contributes
-    its even-odd intervals as +1/−1 endpoint deltas, and the union is
-    measured where the running coverage count is >= 1 (within one
-    simple piece the even-odd intervals are disjoint, so the sum of
-    per-piece indicators IS the coverage count)."""
-    edges = [_edges([p[0] for p in ring], [p[1] for p in ring])
-             for ring in pieces]
-    ev = set()
-    for es in edges:
-        ev.update(e[1] for e in es)
-    for i in range(len(edges)):
-        for j in range(i + 1, len(edges)):
-            ev.update(_crossing_ys(edges[i], edges[j]))
-    events = sorted(ev)
-    total2 = Fraction(0)
-    for k in range(len(events) - 1):
-        ylo, yhi = events[k], events[k + 1]
-        ym = Fraction(ylo + yhi, 2)
-        deltas = []
-        for es in edges:
-            xs = _xings_at(es, ym)
-            for t, x in enumerate(xs):
-                deltas.append((x, 1 if t % 2 == 0 else -1))
-        if not deltas:
-            continue
-        deltas.sort()
-        width = Fraction(0)
-        cov = 0
-        for t in range(len(deltas) - 1):
-            cov += deltas[t][1]
-            if cov >= 1:
-                width += deltas[t + 1][0] - deltas[t][0]
-        total2 += width * 2 * (yhi - ylo)
-    return total2
-
-
 def _square_dilation_hull(p1, p2, r):
     """The segment's Minkowski sum with [-r, r]^2: the hull of the
     endpoint square corners (absorbs the vertex squares). Dilation
@@ -200,13 +349,9 @@ def _square_dilation_hull(p1, p2, r):
 
 
 def _ring_area2_exact(pts):
-    """TWICE the absolute shoelace area of a ring, exact Fractions."""
-    n = len(pts)
-    return abs(sum(
-        Fraction(pts[i][0]) * pts[(i + 1) % n][1]
-        - Fraction(pts[(i + 1) % n][0]) * pts[i][1]
-        for i in range(n)
-    ))
+    """TWICE the absolute shoelace area of a ring, exact."""
+    return Fraction(abs(sum(x0 * y1 - x1 * y0 for (x0, y0), (x1, y1)
+                            in zip(pts, pts[1:] + pts[:1]))))
 
 
 def square_offset_measures(xs, ys, r):
@@ -224,17 +369,6 @@ def square_offset_measures(xs, ys, r):
     for i in range(n):
         pieces.append(_square_dilation_hull(base[i], base[(i + 1) % n], r))
     return _ring_area2_exact(base), _union_area2(pieces)
-
-
-def rings_union_area2(rings):
-    """TWICE the exact union area of a LIST of simple rings (clipper
-    ctUnion over N inputs — the merged-geofence shape): straight
-    N-piece slab sweep. Rings are (xs, ys) pairs; any orientation,
-    any angles, integer coordinates."""
-    return _union_area2([
-        [(int(xs[i]), int(ys[i])) for i in range(len(xs))]
-        for (xs, ys) in rings
-    ])
 
 
 def open_buffer_square_measures(xs, ys, r):
@@ -257,14 +391,6 @@ def open_buffer_square_measures(xs, ys, r):
     return len_l1, _union_area2(pieces)
 
 
-_TRAP_PREDS = {
-    "union": lambda a, b: a == 1 or b == 1,
-    "inter": lambda a, b: a == 1 and b == 1,
-    "diff": lambda a, b: a == 1 and b == 0,
-    "xor": lambda a, b: a != b,
-}
-
-
 def pair_trapezoids(ax, ay, bx, by, op="union"):
     """RESULT GEOMETRY for any of the four ClipType ops (not just
     measures): the standard trapezoidal decomposition of op(A, B).
@@ -278,56 +404,31 @@ def pair_trapezoids(ax, ay, bx, by, op="union"):
     Boundary-edge attribution is well-defined: two edges can only
     share a midline x if they are collinear across the slab (a proper
     crossing at the midline would itself be an event y, and midlines
-    are strictly between events), so ties carry identical corner x's.
+    are strictly between events), so ties carry identical corner x's;
+    the predicate is read only after the last of a run of ties.
     """
-    pred = _TRAP_PREDS[op]
-    ea = _edges(ax, ay)
-    eb = _edges(bx, by)
-    events = sorted(
-        {e[1] for e in ea} | {e[1] for e in eb} | set(_crossing_ys(ea, eb))
-    )
+    pred = _PREDS[op]
+    sw = _sweep([(ax, ay), (bx, by)])
+    a1, b1, _, _ = _pair_parities(sw)
+    # a run of ties ends where the gap is nonzero or the slab changes;
+    # every slab ends outside both rings, so the predicate does too
+    tie_end = (sw.gap != 0) | (sw.k[1:] != sw.k[:-1])
+    ends = np.flatnonzero(np.r_[tie_end, True])
+    on = pred(a1[ends], b1[ends])
+    was = np.r_[False, on[:-1]]
+    left, right = ends[on & ~was], ends[was & ~on]
+    ev = sw.events
+    c = sw.x1 * sw.dy - sw.y1 * sw.dx
+
+    def x_at(e, y):
+        return (int(c[e]) + y * int(sw.dx[e])) / Fraction(int(sw.dy[e]))
+
     out = []
-    for k in range(len(events) - 1):
-        ylo, yhi = events[k], events[k + 1]
-        ym = Fraction(ylo + yhi, 2)
-        # per-x records: (x_at_ylo, x_at_yhi, delta_A, delta_B)
-        recs = {}
-        for poly, es in enumerate((ea, eb)):
-            xs = []
-            for (x1, y1, x2, y2) in es:
-                lo, hi = (y1, y2) if y1 <= y2 else (y2, y1)
-                if lo < ym < hi:
-                    slope = Fraction(x2 - x1, y2 - y1)
-                    xs.append((
-                        x1 + (ym - y1) * slope,
-                        x1 + (ylo - y1) * slope,
-                        x1 + (yhi - y1) * slope,
-                    ))
-            xs.sort(key=lambda t: t[0])
-            for t, (xm, xlo, xhi) in enumerate(xs):
-                d = 1 if t % 2 == 0 else -1
-                if xm in recs:
-                    r = recs[xm]
-                    recs[xm] = (r[0], r[1],
-                                r[2] + (d if poly == 0 else 0),
-                                r[3] + (d if poly == 1 else 0))
-                else:
-                    recs[xm] = (xlo, xhi,
-                                d if poly == 0 else 0,
-                                d if poly == 1 else 0)
-        ca = cb = 0
-        inside = False
-        left = None
-        for xm in sorted(recs):
-            xlo, xhi, da, db = recs[xm]
-            ca += da
-            cb += db
-            now = pred(ca, cb)
-            if now and not inside:
-                left = (xlo, xhi)
-            elif inside and not now:
-                out.append((ylo, yhi, left[0], left[1], xlo, xhi))
-            inside = now
+    for k, el, er in zip(sw.k[left].tolist(), sw.e[left].tolist(),
+                         sw.e[right].tolist()):
+        ylo, yhi = ev[k], ev[k + 1]
+        out.append((ylo, yhi, x_at(el, ylo), x_at(el, yhi),
+                    x_at(er, ylo), x_at(er, yhi)))
     return out
 
 
@@ -345,10 +446,10 @@ def region_components(ax, ay, bx, by, op="union"):
     one trapezoid), plus the region area closing the measure. This is
     the piece of Vatti's output (how many result polygons) that area
     measures alone cannot see — e.g. the XOR of two overlapping rings
-    shatters into many lobes."""
+    shatters into many lobes. Each trapezoid probes only the
+    trapezoids of the slab above it."""
     tr = pair_trapezoids(ax, ay, bx, by, op)
-    n = len(tr)
-    parent = list(range(n))
+    parent = list(range(len(tr)))
 
     def find(i):
         while parent[i] != i:
@@ -356,22 +457,20 @@ def region_components(ax, ay, bx, by, op="union"):
             i = parent[i]
         return i
 
-    for i in range(n):
-        (ylo_i, yhi_i, _, xl_hi_i, _, xr_hi_i) = tr[i]
-        for j in range(n):
-            if tr[j][0] != yhi_i:
-                continue
-            (_, _, xl_lo_j, _, xr_lo_j, _) = tr[j]
-            # strict overlap at the shared y = yhi_i
-            if xl_hi_i < xr_lo_j and xl_lo_j < xr_hi_i:
+    by_ylo = {}
+    for j, t in enumerate(tr):
+        by_ylo.setdefault(t[0], []).append(j)
+    for i, (_, yhi, _, xl_hi, _, xr_hi) in enumerate(tr):
+        for j in by_ylo.get(yhi, ()):
+            (_, _, xl_lo, _, xr_lo, _) = tr[j]
+            # strict overlap at the shared y = yhi
+            if xl_hi < xr_lo and xl_lo < xr_hi:
                 ri, rj = find(i), find(j)
                 if ri != rj:
                     parent[ri] = rj
-    comps = len({find(i) for i in range(n)})
-    area2 = Fraction(0)
-    for (ylo, yhi, xl0, xl1, xr0, xr1) in tr:
-        area2 += (yhi - ylo) * ((xr0 - xl0) + (xr1 - xl1))
-    return comps, area2
+    area2 = sum(((yhi - ylo) * ((xr0 - xl0) + (xr1 - xl1))
+                 for (ylo, yhi, xl0, xl1, xr0, xr1) in tr), Fraction(0))
+    return len({find(i) for i in range(len(tr))}), area2
 
 
 def minkowski_any_convex_measures(ax, ay, bx, by):
@@ -395,31 +494,3 @@ def minkowski_any_convex_measures(ax, ay, bx, by):
             (qx + px, qy + py) for (qx, qy) in q for (px, py) in (p1, p2)
         ]))
     return _ring_area2_exact(base), _union_area2(pieces)
-
-
-def boolean_pair_measures(ax, ay, bx, by):
-    """(inter_area2, union_area2, diff_area2, xor_area2) — each TWICE
-    the exact area (Fractions; integral for integer-vertex rings whose
-    doubled boolean areas are integral, e.g. any octilinear corpus).
-    diff is A \\ B. Inputs: vertex coordinate sequences of two simple
-    rings, any orientation, any angles, integer coordinates."""
-    ea = _edges(ax, ay)
-    eb = _edges(bx, by)
-    events = sorted(
-        {e[1] for e in ea} | {e[1] for e in eb} | set(_crossing_ys(ea, eb))
-    )
-    inter2 = union2 = diff2 = xor2 = Fraction(0)
-    for k in range(len(events) - 1):
-        ylo, yhi = events[k], events[k + 1]
-        ym = Fraction(ylo + yhi, 2)
-        xa = _xings_at(ea, ym)
-        xb = _xings_at(eb, ym)
-        if not xa and not xb:
-            continue
-        mi, mu, md, mx = _measures_at(xa, xb)
-        h2 = 2 * (yhi - ylo)
-        inter2 += mi * h2
-        union2 += mu * h2
-        diff2 += md * h2
-        xor2 += mx * h2
-    return inter2, union2, diff2, xor2

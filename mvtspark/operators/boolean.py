@@ -38,15 +38,44 @@ from __future__ import annotations
 from collections.abc import Iterator
 from fractions import Fraction
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from mvtspark.kernels.polyclip import (
+    convex_pair_stats, minkowski_sum_convex, ring_area2)
+from mvtspark.kernels.polysweep import (
+    boolean_pair_measures, minkowski_any_convex_measures,
+    open_buffer_square_measures, pair_trapezoids, region_components,
+    rings_union_area2, square_offset_measures)
 
 
 def _as_long(fr) -> int:
     """Exact BIGINT from a rational measure: integral values pass
-    through; otherwise round exactly on the Fraction (never through
-    float — large rationals would overflow or lose precision)."""
+    through; otherwise round exactly on the Fraction with Python's
+    half-to-even ``round`` (never through float — large rationals
+    would overflow or lose precision)."""
     return int(fr) if fr.denominator == 1 else round(fr)
+
+
+def _row_map(df: DataFrame, schema: str, fn, many=False) -> DataFrame:
+    """Pure per-row map, no shuffle: ``fn`` turns each input row (a
+    namedtuple) into one output tuple in ``schema``'s column order, or
+    into an iterable of them with ``many``."""
+    cols = [c.split()[0] for c in schema.split(", ")]
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = map(fn, pdf.itertuples(index=False))
+            yield pd.DataFrame(
+                [o for out in rows for o in out] if many else list(rows),
+                columns=cols)
+
+    return df.mapInPandas(_run, schema)
+
+
+def _float_rings(r):
+    return [np.asarray(v, np.float64) for v in (r.ax, r.ay, r.bx, r.by)]
 
 
 CONVEX_PAIR_SCHEMA = (
@@ -61,26 +90,8 @@ def convex_pair_union(pairs: DataFrame) -> DataFrame:
     DOUBLED intersection and union areas (integer-exact for integer
     coordinates), the union ring count, and the proper edge-crossing
     count. Pure map — no shuffle; pairs distribute evenly."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from mvtspark.kernels.polyclip import convex_pair_stats
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                i2, u2, nr, nx = convex_pair_stats(
-                    np.asarray(r.ax, np.float64), np.asarray(r.ay, np.float64),
-                    np.asarray(r.bx, np.float64), np.asarray(r.by, np.float64),
-                )
-                rows.append((int(r.pair_id), i2, u2, nr, nx))
-            yield pd.DataFrame(
-                rows, columns=["pair_id", "inter_area2", "union_area2",
-                               "n_rings", "n_cross"],
-            )
-
-    return pairs.mapInPandas(_run, CONVEX_PAIR_SCHEMA)
+    return _row_map(pairs, CONVEX_PAIR_SCHEMA, lambda r: (
+        int(r.pair_id), *convex_pair_stats(*_float_rings(r))))
 
 
 MINKOWSKI_SCHEMA = "pair_id long, sum_area2 long, n_verts int"
@@ -94,26 +105,11 @@ def minkowski_sum_stats(pairs: DataFrame) -> DataFrame:
     (integer-exact — sum vertices are integer sums) and its vertex
     count after parallel-edge fusion. Pure map — pairs distribute."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(r):
+        vx, vy = minkowski_sum_convex(*_float_rings(r))
+        return int(r.pair_id), int(round(ring_area2(vx, vy))), len(vx)
 
-        from mvtspark.kernels.polyclip import minkowski_sum_convex, ring_area2
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                vx, vy = minkowski_sum_convex(
-                    np.asarray(r.ax, np.float64), np.asarray(r.ay, np.float64),
-                    np.asarray(r.bx, np.float64), np.asarray(r.by, np.float64),
-                )
-                rows.append(
-                    (int(r.pair_id), int(round(ring_area2(vx, vy))), len(vx))
-                )
-            yield pd.DataFrame(
-                rows, columns=["pair_id", "sum_area2", "n_verts"]
-            )
-
-    return pairs.mapInPandas(_run, MINKOWSKI_SCHEMA)
+    return _row_map(pairs, MINKOWSKI_SCHEMA, row)
 
 
 GENERAL_PAIR_SCHEMA = (
@@ -127,34 +123,19 @@ def general_pair_boolean(pairs: DataFrame) -> DataFrame:
     (kernels/polysweep.py — the full clipper ClipType surface,
     clipper.cs:476/:1561-1631, with no convexity or rectilinearity
     scoping): exact DOUBLED intersection / union / difference (A\\B) /
-    xor areas via slab-decomposition sweep in Fraction arithmetic.
+    xor areas via the vectorized slab sweep (exact rationals).
     Input rows carry two simple rings (pair_id, ax, ay, bx, by) with
-    integer coordinates. Pure map — no shuffle; pairs distribute.
+    integer coordinates, |c| < 2^30. Pure map — no shuffle; pairs
+    distribute.
 
     Outputs are BIGINT: exact when the doubled boolean areas are
     integral (always true for octilinear rings — axis + 45° edges
     through even vertices keep every crossing on the integer grid);
-    otherwise rounded from the exact rational."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mvtspark.kernels.polysweep import boolean_pair_measures
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                i2, u2, d2, x2 = boolean_pair_measures(
-                    r.ax, r.ay, r.bx, r.by
-                )
-                rows.append(
-                    (int(r.pair_id), _as_long(i2), _as_long(u2),
-                     _as_long(d2), _as_long(x2))
-                )
-            yield pd.DataFrame(
-                rows, columns=["pair_id", "inter_area2", "union_area2",
-                               "diff_area2", "xor_area2"],
-            )
-
-    return pairs.mapInPandas(_run, GENERAL_PAIR_SCHEMA)
+    otherwise the exact rational rounded half-to-even (Python
+    ``round``; DuckDB's ``ROUND`` rounds half away from zero)."""
+    return _row_map(pairs, GENERAL_PAIR_SCHEMA, lambda r: (
+        int(r.pair_id),
+        *map(_as_long, boolean_pair_measures(r.ax, r.ay, r.bx, r.by))))
 
 
 RINGS_UNION_SCHEMA = "group_id long, n_rings long, union_area2 long"
@@ -170,16 +151,10 @@ def rings_union_stats(rings: DataFrame,
     group's geometry (tens of fences), never the fact tables."""
 
     def _stats(key, pdf):
-        from mvtspark.kernels.polysweep import rings_union_area2
-
         u2 = rings_union_area2(list(zip(pdf["xs"], pdf["ys"])))
         return pd.DataFrame(
-            {
-                "group_id": [int(key[0])],
-                "n_rings": [len(pdf)],
-                "union_area2": [_as_long(u2)],
-            }
-        )
+            [(int(key[0]), len(pdf), _as_long(u2))],
+            columns=["group_id", "n_rings", "union_area2"])
 
     return rings.groupBy(group_col).applyInPandas(
         _stats, RINGS_UNION_SCHEMA
@@ -195,21 +170,11 @@ def polyline_buffer_square(lines: DataFrame) -> DataFrame:
     path length and buffer-region area per row (line_id, xs, ys,
     radius). Pure map — no shuffle; lines distribute."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mvtspark.kernels.polysweep import open_buffer_square_measures
+    def row(r):
+        l1, b2 = open_buffer_square_measures(r.xs, r.ys, int(r.radius))
+        return int(r.line_id), int(l1), _as_long(b2)
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                l1, b2 = open_buffer_square_measures(
-                    r.xs, r.ys, int(r.radius)
-                )
-                rows.append((int(r.line_id), int(l1), _as_long(b2)))
-            yield pd.DataFrame(
-                rows, columns=["line_id", "len_l1", "buffer_area2"]
-            )
-
-    return lines.mapInPandas(_run, BUFFER_OPEN_SCHEMA)
+    return _row_map(lines, BUFFER_OPEN_SCHEMA, row)
 
 
 TRAPEZOID_SCHEMA = (
@@ -228,26 +193,17 @@ def union_trapezoid_rows(pairs: DataFrame, op: str = "union") -> DataFrame:
     on octilinear corpora (non-integral corners raise). Pure map +
     explode — no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mvtspark.kernels.polysweep import pair_trapezoids
+    def rows(r):
+        for tz in pair_trapezoids(r.ax, r.ay, r.bx, r.by, op):
+            if any(v.denominator != 1 for v in map(Fraction, tz)):
+                raise ValueError(
+                    "non-integral trapezoid corner for pair "
+                    f"{r.pair_id}: BIGINT output needs an "
+                    "octilinear (integer-event) corpus"
+                )
+            yield (int(r.pair_id), *map(int, tz))
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                for tz in pair_trapezoids(r.ax, r.ay, r.bx, r.by, op):
-                    if any(v.denominator != 1 for v in map(Fraction, tz)):
-                        raise ValueError(
-                            "non-integral trapezoid corner for pair "
-                            f"{r.pair_id}: BIGINT output needs an "
-                            "octilinear (integer-event) corpus"
-                        )
-                    rows.append((int(r.pair_id), *map(int, tz)))
-            yield pd.DataFrame(
-                rows, columns=["pair_id", "ylo", "yhi", "xl_lo",
-                               "xl_hi", "xr_lo", "xr_hi"],
-            )
-
-    return pairs.mapInPandas(_run, TRAPEZOID_SCHEMA)
+    return _row_map(pairs, TRAPEZOID_SCHEMA, rows, many=True)
 
 
 COMPONENT_SCHEMA = "pair_id long, n_components long, area2 long"
@@ -261,19 +217,11 @@ def region_component_stats(pairs: DataFrame, op: str = "xor") -> DataFrame:
     many result polygons) that measures alone cannot see. Pure map —
     no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mvtspark.kernels.polysweep import region_components
+    def row(r):
+        n, a2 = region_components(r.ax, r.ay, r.bx, r.by, op)
+        return int(r.pair_id), int(n), _as_long(a2)
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                n, a2 = region_components(r.ax, r.ay, r.bx, r.by, op)
-                rows.append((int(r.pair_id), int(n), _as_long(a2)))
-            yield pd.DataFrame(
-                rows, columns=["pair_id", "n_components", "area2"]
-            )
-
-    return pairs.mapInPandas(_run, COMPONENT_SCHEMA)
+    return _row_map(pairs, COMPONENT_SCHEMA, row)
 
 
 MINK_ANY_SCHEMA = "pair_id long, a_area2 long, sum_area2 long"
@@ -287,22 +235,9 @@ def minkowski_any_convex(pairs: DataFrame) -> DataFrame:
     exact doubled area of A and of A ⊕ B via the N-piece union slab
     sweep over A ∪ per-edge dilation hulls. Input rows carry
     (pair_id, ax, ay, bx, by). Pure map — no shuffle."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mvtspark.kernels.polysweep import minkowski_any_convex_measures
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a2, s2 = minkowski_any_convex_measures(
-                    r.ax, r.ay, r.bx, r.by
-                )
-                rows.append((int(r.pair_id), _as_long(a2), _as_long(s2)))
-            yield pd.DataFrame(
-                rows, columns=["pair_id", "a_area2", "sum_area2"]
-            )
-
-    return pairs.mapInPandas(_run, MINK_ANY_SCHEMA)
+    return _row_map(pairs, MINK_ANY_SCHEMA, lambda r: (
+        int(r.pair_id),
+        *map(_as_long, minkowski_any_convex_measures(r.ax, r.ay, r.bx, r.by))))
 
 
 OFFSET_ANY_SCHEMA = "ring_id long, base_area2 long, offset_area2 long"
@@ -317,20 +252,9 @@ def square_offset_any(rings: DataFrame) -> DataFrame:
     Input rows carry one simple integer ring and its radius
     (ring_id, xs, ys, radius). Pure map — no shuffle; rings
     distribute."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mvtspark.kernels.polysweep import square_offset_measures
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                b2, o2 = square_offset_measures(r.xs, r.ys, int(r.radius))
-                rows.append((int(r.ring_id), _as_long(b2), _as_long(o2)))
-            yield pd.DataFrame(
-                rows, columns=["ring_id", "base_area2", "offset_area2"]
-            )
-
-    return rings.mapInPandas(_run, OFFSET_ANY_SCHEMA)
+    return _row_map(rings, OFFSET_ANY_SCHEMA, lambda r: (
+        int(r.ring_id),
+        *map(_as_long, square_offset_measures(r.xs, r.ys, int(r.radius)))))
 
 
 def _coverage_grid(rx0, ry0, rx1, ry1, extra_x=(), extra_y=()):
@@ -338,8 +262,6 @@ def _coverage_grid(rx0, ry0, rx1, ry1, extra_x=(), extra_y=()):
     returns (xs, ys, cnt) where cnt[i, j] = number of rects covering
     the open cell (xs[i], xs[i+1]) x (ys[j], ys[j+1]). 2-D difference
     array + double cumsum — O(k log k + cells), integer-exact."""
-    import numpy as np
-
     xs = np.unique(np.concatenate([rx0, rx1, np.asarray(extra_x, np.int64)]))
     ys = np.unique(np.concatenate([ry0, ry1, np.asarray(extra_y, np.int64)]))
     i0 = np.searchsorted(xs, rx0)
@@ -369,8 +291,6 @@ def rect_union_stats(rects: DataFrame, group_col: str = "group_id") -> DataFrame
     O(k^2) cells for k rects — geometry-bounded."""
 
     def _stats(key, pdf):
-        import numpy as np
-
         xs, ys, cnt = _coverage_grid(
             pdf["x0"].to_numpy(np.int64), pdf["y0"].to_numpy(np.int64),
             pdf["x1"].to_numpy(np.int64), pdf["y1"].to_numpy(np.int64),
@@ -416,8 +336,6 @@ def offset_rectilinear(rings: DataFrame, radius: int) -> DataFrame:
                          "a different operation)")
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):

@@ -415,3 +415,33 @@ def test_transcode_420_mode(spark):
         dec = decode_mrj(enc)
         d = dec.astype(np.int64) - img.astype(np.int64)
         assert g.sum_abs_err == np.abs(d).sum()
+
+
+def test_decode_mrj_rejects_qstep_zero():
+    """No encoder writes a header qstep of 0 (``_mrj_encode`` takes
+    1..255): a payload carrying one must raise, not decode to a flat
+    gray image."""
+    img = np.random.default_rng(3).integers(0, 256, (16, 16, 3), np.uint8)
+    for enc in (image.encode_mrj(img), image.encode_mrj420(img)):
+        bad = enc[:8] + b"\x00" + enc[9:]
+        with pytest.raises(ValueError, match="qstep"):
+            image.decode_mrj(bad)
+        assert image.decode_mrj(enc[:8] + b"\x01" + enc[9:]).shape == img.shape
+
+
+def test_transcode_reports_qstep_zero_row(spark):
+    """transcode_images_mrj over MRJ sources: a qstep-0 payload puts
+    its message in that row's ``error``; its shape-mate transcodes."""
+    from mvtspark.operators.multimodal import transcode_images_mrj
+
+    rng = np.random.default_rng(4)
+    good = image.encode_mrj(rng.integers(0, 256, (16, 16, 3), np.uint8))
+    other = image.encode_mrj(rng.integers(0, 256, (16, 16, 3), np.uint8))
+    bad = other[:8] + b"\x00" + other[9:]
+    df = spark.createDataFrame(
+        [("good", good, 16, 16, "mrj"), ("bad", bad, 16, 16, "mrj")],
+        "image_id string, bytes binary, w int, h int, fmt string",
+    )
+    got = {r.image_id: r for r in transcode_images_mrj(df, 4).collect()}
+    assert got["bad"].mrj is None and "qstep" in got["bad"].error
+    assert got["good"].error is None and got["good"].mrj is not None

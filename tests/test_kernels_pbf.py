@@ -61,6 +61,17 @@ def test_varint_lengths_at_byte_boundaries():
     got = pbf.varint_lengths(np.array(vals, dtype=np.uint64))
     assert got.tolist() == [len(pbf.encode_varint(v)) for v in vals]
     assert got.tolist() == [1, 1, 2, 5, 6, 10, 10]
+    # mixed widths on either side of the method switch (max below 128**3
+    # sums thresholds, wider streams binary-search): every boundary
+    # value, each array's own max included
+    edges = [0, 1, 127, 128, 129, 2**14 - 1, 2**14, 2**21 - 1, 2**21,
+             2**28, 2**49 - 1, 2**56, 2**63 - 1, 2**64 - 1]
+    for top in range(1, len(edges) + 1):
+        vals = np.array(edges[:top][::-1] + edges[:top], dtype=np.uint64)
+        want = [len(pbf.encode_varint(int(v))) for v in vals]
+        assert pbf.varint_lengths(vals).tolist() == want
+        assert int(pbf.varint_lengths(vals.max())) == max(want)
+    assert pbf.varint_lengths(np.zeros(0, np.uint64)).tolist() == []
 
 
 def test_varint_truncated_raises():
