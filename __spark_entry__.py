@@ -2678,19 +2678,19 @@ _OCT_BASE = [(2, 0), (6, 0), (8, 2), (8, 6), (6, 8), (2, 8), (0, 6), (0, 2)]
 
 
 def poly_union_area(spark: SparkSession, sf: str) -> DataFrame:
-    """Convex polygon boolean measures (operators/boolean.py +
-    kernels/polyclip.py) — the clipper ClipType surface
+    """Convex polygon boolean measures (operators/boolean.py
+    ``convex_pair_union`` on the exact slab sweep,
+    kernels/polysweep.py) — the clipper ClipType surface
     (src/Geometry/clipper.cs:476, :1561-1631) on the convex-pair
-    domain: ctIntersection through general-convex Sutherland–Hodgman
-    (beyond J3's rectangle-only clip window, Util.cs:104-122) and
-    ctUnion area through inclusion–exclusion, plus union ring count
+    domain: ctIntersection and ctUnion areas (a convex window beyond
+    J3's rectangle-only clip, Util.cs:104-122), plus union ring count
     and proper boundary crossings.
 
     Corpus: integer rect subjects × even-coordinate octagon clip
     windows whose edges are axis-aligned or 45° — on that grid every
-    S-H intersection point is INTEGRAL, so both engines recover exact
-    integer doubled-areas after a final round (no float discipline in
-    the compare). ORACLED by an INDEPENDENT algorithm: DuckDB builds
+    intersection point is INTEGRAL, so the doubled areas are exact
+    integers in both engines (no float discipline in the compare).
+    ORACLED by an INDEPENDENT algorithm: DuckDB builds
     the intersection polygon as {A-verts in B} ∪ {B-verts in A} ∪
     {edge crossings}, orders by angle around the centroid, and
     shoelaces — agreement checks the geometry, not the instruction
@@ -2723,11 +2723,12 @@ def poly_union_area(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def minkowski_sum_area(spark: SparkSession, sf: str) -> DataFrame:
-    """Convex Minkowski sum (kernels/polyclip.py
-    ``minkowski_sum_convex`` — clipper MinkowskiSum,
+    """Convex Minkowski sum (kernels/polysweep.py
+    ``convex_minkowski_measures`` — clipper MinkowskiSum,
     clipper.cs:4596-4687, dead code in the reference, scoped to the
-    convex domain where the sum is the angular edge merge): doubled
-    area and fused vertex count of A ⊕ B per pair. Corpus: integer
+    convex domain where the sum is the hull of the pairwise vertex
+    sums): doubled area and fused vertex count of A ⊕ B per pair.
+    Corpus: integer
     triangles ⊕ translated octagons (varying which edge directions
     coincide, so the parallel-fusion count varies). ORACLED by an
     INDEPENDENT identity, not a merge replay: DuckDB computes
@@ -2763,13 +2764,14 @@ def minkowski_sum_area(spark: SparkSession, sf: str) -> DataFrame:
 def rect_union_coverage(spark: SparkSession, sf: str) -> DataFrame:
     """Rectilinear boolean-measure suite (operators/boolean.py
     ``rect_union_stats``): exact union / pairwise-overlap / xor areas
-    of each group's axis-aligned integer rects from ONE
-    coordinate-compressed coverage grid — union = cnt >= 1,
+    of each group's axis-aligned integer rects from ONE coverage-count
+    slab sweep over the rects as rings — union = cnt >= 1,
     intersection-of-any-two = cnt >= 2, symmetric difference =
     cnt == 1 (clipper ctUnion/ctXor measures on the rectilinear
-    domain, the merged-geofence shape). ORACLED cell-for-cell: DuckDB
-    rebuilds the compressed cells with lead() windows and counts
-    covering rects per cell — everything integer-exact."""
+    domain, the merged-geofence shape). ORACLED by an independent
+    algorithm: DuckDB builds the coordinate-compressed cells with
+    lead() windows and counts covering rects per cell — everything
+    integer-exact."""
     from mvtspark.operators.boolean import rect_union_stats
 
     k = F.col("o_orderkey")
@@ -2792,16 +2794,16 @@ def rect_union_coverage(spark: SparkSession, sf: str) -> DataFrame:
 
 def offset_rectilinear_square(spark: SparkSession, sf: str) -> DataFrame:
     """NON-CONVEX polygon offset with square joins (operators/
-    boolean.py ``offset_rectilinear``) — clipper's jtSquare +
-    etClosedPolygon (clipper.cs:4744-5120) on the rectilinear domain,
-    lifting D17's strictly-convex-only restriction: the corpus is
-    concave L-shapes. The Minkowski sum with [-r, r]^2 is polygon ∪
-    dilated edge rectangles, measured exactly on the compressed
-    coverage grid (cell-center crossing-number PIP for the interior).
-    ORACLED: DuckDB rebuilds the same compressed cells, replays the
-    vertical-edge crossing parity and the near-edge EXISTS per cell,
-    and sums the same integer areas and cell count."""
-    from mvtspark.operators.boolean import offset_rectilinear
+    boolean.py ``square_offset_any``, r = 2) — clipper's jtSquare +
+    etClosedPolygon (clipper.cs:4744-5120) on concave rectilinear
+    L-shapes, lifting D17's strictly-convex-only restriction. The
+    Minkowski sum with [-r, r]^2 is polygon ∪ dilated edges, measured
+    exactly by the N-piece slab sweep; the doubled areas are halved.
+    ORACLED by an independent algorithm: DuckDB builds the
+    coordinate-compressed cells, replays the vertical-edge crossing
+    parity and the near-edge EXISTS per cell, and sums the integer
+    cell areas."""
+    from mvtspark.operators.boolean import square_offset_any
 
     k = F.col("o_orderkey")
     o = _t(spark, sf, "orders").where(k % 53 == 2)
@@ -2820,12 +2822,12 @@ def offset_rectilinear_square(spark: SparkSession, sf: str) -> DataFrame:
             z.cast("int"), z.cast("int"), c.cast("int"),
             c.cast("int"), dd.cast("int"), dd.cast("int"),
         ).alias("ys"),
+        F.lit(2).alias("radius"),
     )
-    return offset_rectilinear(rings, 2).select(
+    return square_offset_any(rings).select(
         "ring_id",
-        F.col("base_area").cast("long").alias("base_area"),
-        F.col("offset_area").cast("long").alias("offset_area"),
-        F.col("n_cells").cast("long").alias("n_cells"),
+        F.expr("base_area2 div 2").alias("base_area"),
+        F.expr("offset_area2 div 2").alias("offset_area"),
     )
 
 
@@ -5105,9 +5107,7 @@ def oracle_sql() -> dict[str, str]:
                 THEN (cx1-cx0)*(cy1-cy0) ELSE 0 END) AS BIGINT) AS base_area,
               CAST(SUM(CASE WHEN inside OR near
                 THEN (cx1-cx0)*(cy1-cy0) ELSE 0 END)
-                AS BIGINT) AS offset_area,
-              CAST(SUM(CASE WHEN inside OR near THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_cells
+                AS BIGINT) AS offset_area
             FROM pip GROUP BY k
         """,
         "repeated_spans": f"""

@@ -1,9 +1,10 @@
 """Exact boolean measures for ARBITRARY simple polygons — the full
 clipper ``ClipType`` surface (src/Geometry/clipper.cs:476
 ctIntersection/ctUnion/ctDifference/ctXor, :1561-1631 ``Execute``)
-with none of the prior scoping (polyclip.py needs a convex pair;
-boolean.py's coverage grid needs rectilinear sets). Any simple
+with no convexity or rectilinearity scoping: any simple
 integer-vertex rings — non-convex, any edge angle — are exact here.
+Every polygon boolean operator in ``operators/boolean.py`` runs on
+this one sweep (convex pairs, rect sets and offsets included).
 
 Algorithm — slab decomposition, the measure-only core of a Vatti /
 Bentley–Ottmann sweep:
@@ -33,11 +34,11 @@ where an edge's coefficient changes. The entry count is events x
 active edges, so heavily overlapping dense rings grow it cubically.
 Pairs distribute embarrassingly: the Spark layer is a pure map.
 
-Exactness bound: |c| < 2^30 for every coordinate (``ValueError``
-otherwise), so differences stay below 2^31 and every orientation
-product fits int64. Orientation and vertex rotation do not matter
-(even-odd fill); shared/collinear boundary segments contribute zero
-width to every measure.
+Input rule: every coordinate is an integer (integer-valued floats
+pass) with |c| < 2^30, else ``ValueError``, so differences stay below
+2^31 and every orientation product fits int64. Orientation and vertex
+rotation do not matter (even-odd fill); shared/collinear boundary
+segments contribute zero width to every measure.
 """
 
 from __future__ import annotations
@@ -54,25 +55,42 @@ COORD_LIMIT = 1 << 30
 _BLOCK = 1 << 18
 
 
+def _ring_xy(rx, ry):
+    """(2, n) int64 vertex array of one ring, in one vectorized pass.
+    Raises ``ValueError`` on a coordinate that is not an integer
+    (integer-valued floats pass; NaN and infinities do not) or whose
+    magnitude reaches :data:`COORD_LIMIT`."""
+    xy = np.array([np.reshape(rx, -1), np.reshape(ry, -1)])
+    if xy.dtype.kind not in "iu":
+        xy = xy.astype(np.float64)
+        if not (xy == np.trunc(xy)).all():
+            raise ValueError("sweep coordinates must be integers "
+                             "(integer-valued floats pass)")
+    if ((xy >= COORD_LIMIT) | (xy <= -COORD_LIMIT)).any():
+        raise ValueError("sweep coordinates must satisfy |c| < 2**30 "
+                         "(int64 orientation products)")
+    return xy.astype(np.int64, copy=False)
+
+
+def _all_edges(rings):
+    """(x1, y1, x2, y2, ring) int64 arrays of every edge of the rings,
+    in ring order (see :func:`_ring_xy` for what a coordinate may be)."""
+    cols = []
+    for p, (rx, ry) in enumerate(rings):
+        xy = _ring_xy(rx, ry)
+        cols.append(np.concatenate(
+            [xy, np.roll(xy, -1, axis=1), np.full((1, xy.shape[1]), p)]))
+    return np.concatenate(cols or [np.zeros((5, 0), np.int64)], axis=1)
+
+
 def _edges(rings):
     """(x1, y1, x2, y2, ring) int64 arrays of the rings' non-horizontal
     edges, each oriented upward and grouped by ring, plus the set of
-    every vertex y. Raises ``ValueError`` past :data:`COORD_LIMIT`."""
-    cols, vys = [], set()
-    for p, (rx, ry) in enumerate(rings):
-        try:
-            xy = np.array([np.reshape(rx, -1), np.reshape(ry, -1)], np.int64)
-        except OverflowError:
-            xy = None
-        if xy is None or ((xy >= COORD_LIMIT) | (xy <= -COORD_LIMIT)).any():
-            raise ValueError("sweep coordinates must satisfy |c| < 2**30 "
-                             "(int64 orientation products)")
-        e = np.concatenate([xy, np.roll(xy, -1, axis=1)])
-        e = np.where(e[1] < e[3], e, e[[2, 3, 0, 1]])[:, e[1] != e[3]]
-        cols.append(np.concatenate([e, np.full((1, e.shape[1]), p)]))
-        vys.update(xy[1].tolist())
-    return (*np.concatenate(cols or [np.zeros((5, 0), np.int64)], axis=1),
-            vys)
+    every vertex y."""
+    e = _all_edges(rings)
+    vys = set(e[1].tolist())
+    e = np.where(e[1] < e[3], e, e[[2, 3, 0, 1, 4]])[:, e[1] != e[3]]
+    return (*e, vys)
 
 
 def _sign(v):
@@ -283,13 +301,19 @@ def boolean_pair_measures(ax, ay, bx, by):
     return tuple(_integrate(sw, coef))
 
 
-def rings_union_area2(rings):
-    """TWICE the exact union area of a LIST of simple rings (clipper
-    ctUnion over N inputs — the merged-geofence shape). Rings are
-    (xs, ys) pairs; any orientation, any angles, integer coordinates.
-    Within one simple ring the even-odd intervals are disjoint, so the
-    count of rings whose parity is odd IS the coverage count, and the
-    union is where it is >= 1."""
+def proper_crossing_count(ax, ay, bx, by):
+    """Number of (A-edge, B-edge) pairs of two rings that cross
+    PROPERLY (each strictly straddles the other's line), horizontal
+    edges included. Same input rules as :func:`boolean_pair_measures`."""
+    x1, y1, x2, y2, ring = _all_edges([(ax, ay), (bx, by)])
+    return len(_crossings(x1, y1, x2 - x1, y2 - y1, ring)[0])
+
+
+def _coverage_area2(rings, *tests):
+    """TWICE the exact area where each of ``tests`` holds of the
+    coverage count (how many of the simple rings cover a point). Within
+    one simple ring the even-odd intervals are disjoint, so the count
+    of rings whose parity is odd IS the coverage count."""
     sw = _sweep(rings)
     m = len(sw.k)
     # each entry's occurrence index among its ring's entries in its slab
@@ -300,8 +324,25 @@ def rings_union_area2(rings):
     occ[grp] = pos - np.maximum.accumulate(np.where(new, pos, 0))
     delta = 1 - 2 * (occ & 1)
     cov = _in_slab(sw, delta)
-    coef = (cov - delta >= 1).astype(np.int8) - (cov >= 1)
-    return _integrate(sw, coef[None, :])[0]
+    return _integrate(sw, np.stack([
+        t(cov - delta).astype(np.int8) - t(cov) for t in tests]))
+
+
+def rings_union_area2(rings):
+    """TWICE the exact union area of a LIST of simple rings (clipper
+    ctUnion over N inputs — the merged-geofence shape): where the
+    coverage count is >= 1. Rings are (xs, ys) pairs; any orientation,
+    any angles, integer coordinates."""
+    return _coverage_area2(rings, lambda c: c >= 1)[0]
+
+
+def rings_coverage_area2(rings):
+    """(union_area2, overlap_area2, single_area2) of a list of simple
+    rings: TWICE the exact area covered by at least one ring, by at
+    least two, and by exactly one (ctUnion, pairwise-overlap and
+    ctXor measures of a set), from one sweep."""
+    return tuple(_coverage_area2(
+        rings, lambda c: c >= 1, lambda c: c >= 2, lambda c: c == 1))
 
 
 def _union_area2(pieces):
@@ -348,10 +389,28 @@ def _square_dilation_hull(p1, p2, r):
     ])
 
 
+def _points(xs, ys):
+    """One ring's vertices as tuples of Python ints (the coordinate
+    rules of :func:`_ring_xy`)."""
+    return list(map(tuple, _ring_xy(xs, ys).T.tolist()))
+
+
 def _ring_area2_exact(pts):
     """TWICE the absolute shoelace area of a ring, exact."""
     return Fraction(abs(sum(x0 * y1 - x1 * y0 for (x0, y0), (x1, y1)
                             in zip(pts, pts[1:] + pts[:1]))))
+
+
+def convex_minkowski_measures(ax, ay, bx, by):
+    """(sum_area2, n_verts) of the Minkowski sum A ⊕ B of two CONVEX
+    rings (clipper MinkowskiSum, clipper.cs:4596-4687, on the convex
+    domain): the sum is the hull of every pairwise vertex sum, so this
+    is that hull's exact doubled area and its vertex count (collinear
+    vertices dropped, i.e. parallel edges fused)."""
+    b = _points(bx, by)
+    hull = _hull([(px + qx, py + qy) for px, py in _points(ax, ay)
+                  for qx, qy in b])
+    return _ring_area2_exact(hull), len(hull)
 
 
 def square_offset_measures(xs, ys, r):
@@ -363,8 +422,8 @@ def square_offset_measures(xs, ys, r):
     absorbs the vertex squares), measured exactly by the N-piece
     union sweep. Integer coordinates and radius >= 0 in; exact
     Fractions out (integral on octilinear-even corpora)."""
-    n = len(xs)
-    base = [(int(xs[i]), int(ys[i])) for i in range(n)]
+    base = _points(xs, ys)
+    n = len(base)
     pieces = [base]
     for i in range(n):
         pieces.append(_square_dilation_hull(base[i], base[(i + 1) % n], r))
@@ -379,8 +438,8 @@ def open_buffer_square_measures(xs, ys, r):
     union sweep; len_l1 is the exact L1 length of the path (both
     engines recompute it independently). No closing edge — open
     paths, the road-buffer shape."""
-    n = len(xs)
-    pts = [(int(xs[i]), int(ys[i])) for i in range(n)]
+    pts = _points(xs, ys)
+    n = len(pts)
     pieces = [
         _square_dilation_hull(pts[i], pts[i + 1], r) for i in range(n - 1)
     ]
@@ -432,11 +491,6 @@ def pair_trapezoids(ax, ay, bx, by, op="union"):
     return out
 
 
-def union_trapezoids(ax, ay, bx, by):
-    """Backward-compatible alias: trapezoid decomposition of A ∪ B."""
-    return pair_trapezoids(ax, ay, bx, by, "union")
-
-
 def region_components(ax, ay, bx, by, op="union"):
     """(n_components, area2) — REGION TOPOLOGY of op(A, B): the
     number of connected components (by INTERIOR connectivity: two
@@ -475,18 +529,19 @@ def region_components(ax, ay, bx, by, op="union"):
 
 def minkowski_any_convex_measures(ax, ay, bx, by):
     """(a_area2, sum_area2) for the Minkowski sum A ⊕ B of an
-    ARBITRARY simple ring A with a CONVEX ring B — past polyclip.py's
-    convex⊗convex edge merge (clipper MinkowskiSum,
+    ARBITRARY simple ring A with a CONVEX ring B — past the
+    convex⊗convex case of :func:`convex_minkowski_measures` (clipper
+    MinkowskiSum,
     clipper.cs:4596-4687, which the reference vendors for arbitrary
     paths): with B translated so one vertex sits at the origin
     (area-invariant), A ⊕ B = A ∪ ⋃_edges hull((p1 ⊕ B) ∪ (p2 ⊕ B)),
     a union of |A| convex pieces plus A itself, measured exactly by
     the N-piece slab sweep. Integer coordinates in, exact Fractions
     out."""
-    n = len(ax)
-    base = [(int(ax[i]), int(ay[i])) for i in range(n)]
-    b0x, b0y = int(bx[0]), int(by[0])
-    q = [(int(bx[j]) - b0x, int(by[j]) - b0y) for j in range(len(bx))]
+    base = _points(ax, ay)
+    n = len(base)
+    b = _points(bx, by)
+    q = [(x - b[0][0], y - b[0][1]) for x, y in b]
     pieces = [base]
     for i in range(n):
         p1, p2 = base[i], base[(i + 1) % n]

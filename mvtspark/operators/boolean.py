@@ -1,36 +1,15 @@
 """Polygon boolean operators over Spark — the clipper.cs parity layer
 (src/Geometry/clipper.cs:476 ``ClipType``, :1561-1631 ``Execute``,
-:4744-5120 ``ClipperOffset``) re-scoped to the two domains a tile
-engine actually exercises, each with an exact, SQL-replayable oracle:
+:4596-4687 ``MinkowskiSum``, :4744-5120 ``ClipperOffset``).
 
-1. CONVEX pairs (``convex_pair_union``): intersection / union area,
-   union ring count, and boundary crossings via general-convex
-   Sutherland–Hodgman (kernels/polyclip.py) — clipper ``ctIntersection``
-   beyond J3's rectangle-only window, plus ``ctUnion`` measures through
-   inclusion–exclusion.
-
-2. RECTILINEAR sets (``rect_union_stats``): exact union / overlap /
-   xor areas of axis-aligned integer rectangles per group by
-   coordinate-compressed coverage counting — the scanline family that
-   makes union/intersection/difference of rectilinear regions (merged
-   geofences, tile masks) a single counting rule: union = cnt >= 1,
-   pairwise overlap = cnt >= 2, xor = cnt == 1.
-
-3. RECTILINEAR square-join offset (``offset_rectilinear``): clipper's
-   jtSquare/etClosedPolygon on the rectilinear domain. The Minkowski
-   sum of a rectilinear polygon with the square [-r, r]^2 is exactly
-   polygon ∪ (every edge dilated to a 2r-wide rectangle) — vertex
-   squares are absorbed by the edge rectangles — so the offset REGION
-   area falls out of the same compressed-coverage grid plus one
-   crossing-number point-in-polygon test per cell center. This lifts
-   the D17 "strictly-convex rings only" restriction for the
-   axis-aligned class (non-convex L/U/T shapes included).
-
-Scale shape: each group/ring is a small geometry (fences, masks —
-tens of rectangles); groups distribute embarrassingly. The coverage
-grid is O(k^2) cells for k rectangles — bounded by the geometry, not
-the fact tables — and every step is integer-exact, so the DuckDB
-oracle replays it cell-for-cell with no float discipline needed.
+Every operator here measures its geometry with ONE exact engine, the
+slab sweep of ``kernels/polysweep.py``: arbitrary simple integer rings,
+any edge angle, exact rational measures. Convex pairs, axis-aligned
+rect sets and rectilinear offsets are just inputs to it, not domains
+with kernels of their own. Each group or ring is a small geometry
+(fences, masks, tens of vertices); rows and groups distribute
+embarrassingly, so the Spark layer is a pure map, or one groupBy for
+the per-group set measures.
 """
 
 from __future__ import annotations
@@ -42,12 +21,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from mvtspark.kernels.polyclip import (
-    convex_pair_stats, minkowski_sum_convex, ring_area2)
 from mvtspark.kernels.polysweep import (
-    boolean_pair_measures, minkowski_any_convex_measures,
-    open_buffer_square_measures, pair_trapezoids, region_components,
-    rings_union_area2, square_offset_measures)
+    boolean_pair_measures, convex_minkowski_measures,
+    minkowski_any_convex_measures, open_buffer_square_measures,
+    pair_trapezoids, proper_crossing_count, region_components,
+    rings_coverage_area2, rings_union_area2, square_offset_measures)
 
 
 def _as_long(fr) -> int:
@@ -74,10 +52,6 @@ def _row_map(df: DataFrame, schema: str, fn, many=False) -> DataFrame:
     return df.mapInPandas(_run, schema)
 
 
-def _float_rings(r):
-    return [np.asarray(v, np.float64) for v in (r.ax, r.ay, r.bx, r.by)]
-
-
 CONVEX_PAIR_SCHEMA = (
     "pair_id long, inter_area2 double, union_area2 double, "
     "n_rings int, n_cross int"
@@ -85,29 +59,36 @@ CONVEX_PAIR_SCHEMA = (
 
 
 def convex_pair_union(pairs: DataFrame) -> DataFrame:
-    """Per-row convex boolean stats: input rows carry two convex CCW
-    rings as coordinate arrays (pair_id, ax, ay, bx, by); output the
-    DOUBLED intersection and union areas (integer-exact for integer
-    coordinates), the union ring count, and the proper edge-crossing
-    count. Pure map — no shuffle; pairs distribute evenly."""
-    return _row_map(pairs, CONVEX_PAIR_SCHEMA, lambda r: (
-        int(r.pair_id), *convex_pair_stats(*_float_rings(r))))
+    """Per-row convex boolean stats: input rows carry two convex rings
+    as coordinate arrays (pair_id, ax, ay, bx, by; integer values,
+    |c| < 2^30); output the DOUBLED intersection and union areas (the
+    sweep's exact measures as doubles), the union ring count (1 when
+    the interiors meet, 2 when they are disjoint — a measure-zero touch
+    counts as disjoint) and the proper edge-crossing count. Pure map —
+    no shuffle; pairs distribute evenly."""
+
+    def row(r):
+        i2, u2, _, _ = boolean_pair_measures(r.ax, r.ay, r.bx, r.by)
+        return (int(r.pair_id), float(i2), float(u2), 1 if i2 > 0 else 2,
+                proper_crossing_count(r.ax, r.ay, r.bx, r.by))
+
+    return _row_map(pairs, CONVEX_PAIR_SCHEMA, row)
 
 
 MINKOWSKI_SCHEMA = "pair_id long, sum_area2 long, n_verts int"
 
 
 def minkowski_sum_stats(pairs: DataFrame) -> DataFrame:
-    """Per-row convex Minkowski sum measures (kernels/polyclip.py
-    ``minkowski_sum_convex`` — clipper.cs:4596-4687 on the convex
-    domain): input rows carry two convex CCW integer rings
-    (pair_id, ax, ay, bx, by); output the DOUBLED area of A ⊕ B
-    (integer-exact — sum vertices are integer sums) and its vertex
-    count after parallel-edge fusion. Pure map — pairs distribute."""
+    """Per-row convex Minkowski sum measures (kernels/polysweep.py
+    ``convex_minkowski_measures`` — clipper.cs:4596-4687 on the convex
+    domain): input rows carry two convex integer rings
+    (pair_id, ax, ay, bx, by); output the exact DOUBLED area of A ⊕ B
+    and its vertex count with parallel edges fused. Pure map — pairs
+    distribute."""
 
     def row(r):
-        vx, vy = minkowski_sum_convex(*_float_rings(r))
-        return int(r.pair_id), int(round(ring_area2(vx, vy))), len(vx)
+        s2, n = convex_minkowski_measures(r.ax, r.ay, r.bx, r.by)
+        return int(r.pair_id), _as_long(s2), n
 
     return _row_map(pairs, MINKOWSKI_SCHEMA, row)
 
@@ -257,26 +238,6 @@ def square_offset_any(rings: DataFrame) -> DataFrame:
         *map(_as_long, square_offset_measures(r.xs, r.ys, int(r.radius)))))
 
 
-def _coverage_grid(rx0, ry0, rx1, ry1, extra_x=(), extra_y=()):
-    """Coordinate-compressed coverage counts for axis-aligned rects:
-    returns (xs, ys, cnt) where cnt[i, j] = number of rects covering
-    the open cell (xs[i], xs[i+1]) x (ys[j], ys[j+1]). 2-D difference
-    array + double cumsum — O(k log k + cells), integer-exact."""
-    xs = np.unique(np.concatenate([rx0, rx1, np.asarray(extra_x, np.int64)]))
-    ys = np.unique(np.concatenate([ry0, ry1, np.asarray(extra_y, np.int64)]))
-    i0 = np.searchsorted(xs, rx0)
-    i1 = np.searchsorted(xs, rx1)
-    j0 = np.searchsorted(ys, ry0)
-    j1 = np.searchsorted(ys, ry1)
-    diff = np.zeros((len(xs), len(ys)), dtype=np.int64)
-    np.add.at(diff, (i0, j0), 1)
-    np.add.at(diff, (i1, j0), -1)
-    np.add.at(diff, (i0, j1), -1)
-    np.add.at(diff, (i1, j1), 1)
-    cnt = diff.cumsum(axis=0).cumsum(axis=1)[:-1, :-1]
-    return xs, ys, cnt
-
-
 RECT_UNION_SCHEMA = (
     "group_id long, n_rects long, union_area long, overlap_area long, "
     "xor_area long"
@@ -285,100 +246,21 @@ RECT_UNION_SCHEMA = (
 
 def rect_union_stats(rects: DataFrame, group_col: str = "group_id") -> DataFrame:
     """Exact boolean-measure suite of each group's axis-aligned integer
-    rects (group_col, x0, y0, x1, y1): union (cnt >= 1), pairwise
-    overlap (cnt >= 2), and xor (cnt == 1) areas from ONE compressed
-    coverage grid. The groupBy is the only shuffle; per-group work is
-    O(k^2) cells for k rects — geometry-bounded."""
+    rects (group_col, x0, y0, x1, y1): union (covered at least once),
+    pairwise overlap (at least twice) and xor (exactly once) areas,
+    from one coverage-count sweep over the rects as 4-vertex rings
+    (kernels/polysweep.py ``rings_coverage_area2``). The groupBy is the
+    only shuffle; per-group work is bounded by the group's geometry."""
 
     def _stats(key, pdf):
-        xs, ys, cnt = _coverage_grid(
-            pdf["x0"].to_numpy(np.int64), pdf["y0"].to_numpy(np.int64),
-            pdf["x1"].to_numpy(np.int64), pdf["y1"].to_numpy(np.int64),
-        )
-        cell = (np.diff(xs)[:, None] * np.diff(ys)[None, :])
+        x0, y0, x1, y1 = (pdf[c].to_numpy(np.int64)
+                          for c in ("x0", "y0", "x1", "y1"))
+        rings = list(zip(np.stack([x0, x1, x1, x0], 1),
+                         np.stack([y0, y0, y1, y1], 1)))
+        areas = [_as_long(a2 / 2) for a2 in rings_coverage_area2(rings)]
         return pd.DataFrame(
-            {
-                "group_id": [int(key[0])],
-                "n_rects": [len(pdf)],
-                "union_area": [int(cell[cnt >= 1].sum())],
-                "overlap_area": [int(cell[cnt >= 2].sum())],
-                "xor_area": [int(cell[cnt == 1].sum())],
-            }
-        )
+            [(int(key[0]), len(pdf), *areas)],
+            columns=["group_id", "n_rects", "union_area", "overlap_area",
+                     "xor_area"])
 
     return rects.groupBy(group_col).applyInPandas(_stats, RECT_UNION_SCHEMA)
-
-
-OFFSET_RECT_SCHEMA = (
-    "ring_id long, base_area long, offset_area long, n_cells long"
-)
-
-
-def offset_rectilinear(rings: DataFrame, radius: int) -> DataFrame:
-    """Square-join offset (clipper jtSquare + etClosedPolygon,
-    clipper.cs:4744-5120, scoped to the rectilinear domain) of simple
-    axis-aligned rings (ring_id, xs, ys — closed implicitly): exact
-    area of the Minkowski sum ring ⊕ [-r, r]^2.
-
-    offset region = polygon ∪ (each edge dilated by r in Chebyshev
-    metric) — an edge (x1,y)-(x2,y) dilates to the rectangle
-    [min-r, max+r] x [y-r, y+r], which absorbs the per-vertex squares.
-    Coverage of the compressed grid decides membership: a cell is in
-    the region iff its CENTER is inside the base ring (crossing-number
-    over vertical edges — exact: every vertex coordinate is a grid line,
-    so a center, the midpoint of two adjacent grid lines, lies strictly
-    between edges and never on one) or inside any edge rectangle. Handles non-convex rings
-    (L/U/T fences) — the shapes D17's strictly-convex offset rejects."""
-    if radius < 0:
-        raise ValueError("offset_rectilinear requires radius >= 0: a "
-                         "negative radius inverts the dilation rects "
-                         "and corrupts the coverage grid (erosion is "
-                         "a different operation)")
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                vx = np.asarray(r.xs, dtype=np.int64)
-                vy = np.asarray(r.ys, dtype=np.int64)
-                nx_, ny_ = np.roll(vx, -1), np.roll(vy, -1)
-                # edge dilation rects (covers boundary + vertex squares)
-                rx0 = np.minimum(vx, nx_) - radius
-                rx1 = np.maximum(vx, nx_) + radius
-                ry0 = np.minimum(vy, ny_) - radius
-                ry1 = np.maximum(vy, ny_) + radius
-                xs, ys, cnt = _coverage_grid(rx0, ry0, rx1, ry1,
-                                             extra_x=vx, extra_y=vy)
-                cxs = (xs[:-1] + xs[1:]) / 2.0
-                cys = (ys[:-1] + ys[1:]) / 2.0
-                # crossing-number PIP of every cell center vs the base
-                # ring: vertical edges only (rectilinear); a center lies
-                # strictly between grid lines, so never on an edge
-                vert = vx == nx_
-                ex = vx[vert].astype(np.float64)
-                ey0 = np.minimum(vy, ny_)[vert].astype(np.float64)
-                ey1 = np.maximum(vy, ny_)[vert].astype(np.float64)
-                crosses = (
-                    (ex[None, None, :] > cxs[:, None, None])
-                    & (ey0[None, None, :] < cys[None, :, None])
-                    & (ey1[None, None, :] > cys[None, :, None])
-                ).sum(axis=2) if len(ex) else np.zeros(
-                    (len(cxs), len(cys)), dtype=np.int64
-                )
-                inside = (crosses % 2).astype(bool)
-                region = inside | (cnt >= 1)
-                cell = np.diff(xs)[:, None] * np.diff(ys)[None, :]
-                rows.append(
-                    (
-                        int(r.ring_id),
-                        int(cell[inside].sum()),
-                        int(cell[region].sum()),
-                        int(region.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["ring_id", "base_area", "offset_area", "n_cells"],
-            )
-
-    return rings.mapInPandas(_run, OFFSET_RECT_SCHEMA)

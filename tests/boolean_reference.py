@@ -1,32 +1,14 @@
-"""General-convex polygon clipping and convex-pair boolean stats —
-the largest previously-uncovered reference surface (polygon boolean
-ops: src/Geometry/clipper.cs:476 ``ClipType``, :1561-1631 ``Execute``).
+"""Reference implementations the exact slab sweep
+(``mvtspark/kernels/polysweep.py``) is cross-checked against: float64
+Sutherland–Hodgman convex clipping, the convex-pair boolean stats built
+on it, the angular edge merge for convex Minkowski sums, and the
+coordinate-compressed coverage grid for axis-aligned rect sets.
 
-The reference vendors full Vatti but only ever executes
-``ctIntersection`` against an axis-aligned rectangle
-(src/Geometry/Util.cs:104-122); our J3 clip mirrors that restriction
-(kernels/geom.py rect-only Sutherland–Hodgman). This module lifts the
-clip window from "rectangle" to "any convex ring" — the exact
-capability step a tile-engine user merging or masking fences hits
-first — and derives the convex-pair boolean measures (intersection /
-union area, output ring count, boundary crossings) from it:
-
-- ``clip_convex``: Sutherland–Hodgman against a convex CCW clip ring.
-  For convex⊗convex this IS clipper's ``ctIntersection`` (a convex
-  pair's intersection is a single convex ring, no Vatti event queue
-  needed — the degenerate-free fast path).
-- ``convex_pair_stats``: inter/union areas via the inclusion-exclusion
-  identity area(A∪B) = area(A) + area(B) − area(A∩B), union ring
-  count, and the proper edge-crossing count.
-
-Scale shape: rings here are tiny (≤ a few dozen vertices — fence /
-tile-mask geometry); the operator cost is O(|A|·|B|) per PAIR and
-pairs distribute embarrassingly, so the Spark layer is a plain
-mapInPandas with no shuffle beyond the source scan. The DuckDB oracle
-replays the areas with an INDEPENDENT algorithm (convex hull of
-{A-vertices in B} ∪ {B-vertices in A} ∪ {edge crossings}, shoelace
-in angle order) so cross-engine agreement checks the geometry, not
-the instruction order.
+Each is an algorithm unrelated to the sweep, so agreement between the
+two checks the geometry rather than one implementation against itself.
+The float64 functions are exact for integer inputs only while every
+cross product stays below 2^53 (coordinate differences below about
+2^26); the tests keep their corpora well inside that range.
 """
 
 from __future__ import annotations
@@ -189,3 +171,23 @@ def convex_pair_stats(
         np.asarray(ax, np.float64), np.asarray(ay, np.float64),
         np.asarray(bx, np.float64), np.asarray(by, np.float64),
     )
+
+
+def _coverage_grid(rx0, ry0, rx1, ry1, extra_x=(), extra_y=()):
+    """Coordinate-compressed coverage counts for axis-aligned rects:
+    returns (xs, ys, cnt) where cnt[i, j] = number of rects covering
+    the open cell (xs[i], xs[i+1]) x (ys[j], ys[j+1]). 2-D difference
+    array + double cumsum — O(k log k + cells), integer-exact."""
+    xs = np.unique(np.concatenate([rx0, rx1, np.asarray(extra_x, np.int64)]))
+    ys = np.unique(np.concatenate([ry0, ry1, np.asarray(extra_y, np.int64)]))
+    i0 = np.searchsorted(xs, rx0)
+    i1 = np.searchsorted(xs, rx1)
+    j0 = np.searchsorted(ys, ry0)
+    j1 = np.searchsorted(ys, ry1)
+    diff = np.zeros((len(xs), len(ys)), dtype=np.int64)
+    np.add.at(diff, (i0, j0), 1)
+    np.add.at(diff, (i1, j0), -1)
+    np.add.at(diff, (i0, j1), -1)
+    np.add.at(diff, (i1, j1), 1)
+    cnt = diff.cumsum(axis=0).cumsum(axis=1)[:-1, :-1]
+    return xs, ys, cnt

@@ -1,17 +1,21 @@
-"""Polygon boolean layer (kernels/polyclip.py + operators/boolean.py):
-convex clip goldens, hull-of-candidates cross-check (the oracle's
-independent algorithm), coverage-grid exactness vs brute-force
-bitmaps, and the rectilinear square-join offset invariants."""
+"""Polygon boolean layer (operators/boolean.py on the exact slab sweep)
+and the test-side reference algorithms it is checked against
+(tests/boolean_reference.py): convex clip goldens, hull-of-candidates
+cross-check (the oracle's independent algorithm), coverage-grid
+exactness vs brute-force bitmaps, the rectilinear square-join offset
+invariants, and the convex operators past float64's exact range."""
+
+from fractions import Fraction
 
 import numpy as np
 import pytest
-
-from mvtspark.kernels.polyclip import (
+from boolean_reference import (
+    _coverage_grid,
     clip_convex,
     convex_pair_stats,
+    minkowski_sum_convex,
     ring_area2,
 )
-from mvtspark.operators.boolean import _coverage_grid
 
 # ---------------------------------------------------------------- helpers
 
@@ -136,7 +140,10 @@ def test_convex_pair_stats_cases():
 def test_convex_pair_matches_candidate_hull():
     """S-H intersection area must agree with the independent
     hull-of-candidates algorithm (what the DuckDB oracle runs) over
-    random convex lattice pairs — overlap, containment, disjoint."""
+    random convex lattice pairs — overlap, containment, disjoint; the
+    sweep's proper-crossing count must agree with the reference's."""
+    from mvtspark.kernels.polysweep import proper_crossing_count
+
     rng = np.random.default_rng(11)
     checked = overlapping = 0
     for _ in range(150):
@@ -151,7 +158,8 @@ def test_convex_pair_matches_candidate_hull():
         ay = np.array([p[1] for p in A], float)
         bx = np.array([p[0] for p in B], float)
         by = np.array([p[1] for p in B], float)
-        i2, u2, nr, _ = convex_pair_stats(ax, ay, bx, by)
+        i2, u2, nr, nx = convex_pair_stats(ax, ay, bx, by)
+        assert proper_crossing_count(ax, ay, bx, by) == nx, (A, B)
         want = _inter_area2_candidates(A, B)
         assert i2 == pytest.approx(want, abs=1e-6), (A, B)
         assert u2 == pytest.approx(
@@ -161,6 +169,33 @@ def test_convex_pair_matches_candidate_hull():
         checked += 1
         overlapping += nr == 1
     assert checked > 100 and 0 < overlapping < checked
+
+
+def test_convex_pair_union_exact_past_2_26(spark):
+    """Near |c| = 2^29 float64 cross products lose exactness (the
+    reference S-H clip returns a NEGATIVE intersection area here);
+    the sweep-backed operator returns the exact rational as a double."""
+    from mvtspark.operators.boolean import convex_pair_union
+
+    A = [(-536870911, -536870911), (536870911, -536870246),
+         (44466312, 536870911)]
+    B = [(-527043510, -536967041), (-526896205, -536900293),
+         (-526987183, -536870903)]
+    inter = Fraction(21164314404860640246708104192,
+                     1628789971578671954031184975)
+
+    def area2(ring):
+        return sum(x0 * y1 - x1 * y0 for (x0, y0), (x1, y1)
+                   in zip(ring, ring[1:] + ring[:1]))
+
+    df = spark.createDataFrame(
+        [(1, *map(list, zip(*A)), *map(list, zip(*B)))],
+        "pair_id long, ax array<long>, ay array<long>, "
+        "bx array<long>, by array<long>")
+    got = convex_pair_union(df).collect()[0]
+    assert got.inter_area2 == float(inter)
+    assert got.union_area2 == float(area2(A) + area2(B) - inter)
+    assert (got.n_rings, got.n_cross) == (1, 2)
 
 
 # ------------------------------------------------------------ rectilinear
@@ -235,25 +270,26 @@ def _brute_offset_area(vx, vy, r, lo=-20, hi=40):
 
 
 def test_offset_rectilinear_l_shape(spark):
-    """Square-join offset of the concave L: engine == brute-force
-    Chebyshev dilation, including the analytic r=1 golden (base 12 +
-    perimeter 16 + corner term 4 = 32)."""
-    from mvtspark.operators.boolean import offset_rectilinear
+    """Square-join offset of the concave L (``square_offset_any``, areas
+    doubled): engine == brute-force Chebyshev dilation, including the
+    analytic r=1 golden (base 12 + perimeter 16 + corner term 4 = 32)."""
+    from mvtspark.operators.boolean import square_offset_any
 
-    rows = [(7, L_XS, L_YS)]
-    df = spark.createDataFrame(rows, "ring_id long, xs array<int>, ys array<int>")
+    rows = [(r, L_XS, L_YS, r) for r in (1, 2, 3)]
+    df = spark.createDataFrame(
+        rows, "ring_id long, xs array<int>, ys array<int>, radius int")
+    got = {r.ring_id: r for r in square_offset_any(df).collect()}
     for r in (1, 2, 3):
-        got = offset_rectilinear(df, r).collect()[0]
-        assert got.base_area == 12
+        assert got[r].base_area2 == 2 * 12
         want = _brute_offset_area(L_XS, L_YS, r)
-        assert got.offset_area == want, (r, got.offset_area, want)
-    assert offset_rectilinear(df, 1).collect()[0].offset_area == 32
+        assert got[r].offset_area2 == 2 * want, (r, got[r], want)
+    assert got[1].offset_area2 == 2 * 32
 
 
 def test_offset_rectilinear_random_rectilinear_rings(spark):
     """Random staircase rings (always simple, rectilinear): engine
     offset area == brute-force Chebyshev dilation."""
-    from mvtspark.operators.boolean import offset_rectilinear
+    from mvtspark.operators.boolean import square_offset_any
 
     rng = np.random.default_rng(3)
     rows = []
@@ -267,11 +303,12 @@ def test_offset_rectilinear_random_rectilinear_rings(spark):
             ys += [ys[-1], ys[-1] + int(rng.integers(1, 5))]
         xs += [0]
         ys += [ys[-1]]
-        rows.append((rid, xs, ys))
-    df = spark.createDataFrame(rows, "ring_id long, xs array<int>, ys array<int>")
-    got = {r.ring_id: r for r in offset_rectilinear(df, 2).collect()}
-    for rid, xs, ys in rows:
-        assert got[rid].offset_area == _brute_offset_area(xs, ys, 2), rid
+        rows.append((rid, xs, ys, 2))
+    df = spark.createDataFrame(
+        rows, "ring_id long, xs array<int>, ys array<int>, radius int")
+    got = {r.ring_id: r for r in square_offset_any(df).collect()}
+    for rid, xs, ys, _ in rows:
+        assert got[rid].offset_area2 == 2 * _brute_offset_area(xs, ys, 2), rid
 
 
 # ------------------------------------------------------------- minkowski
@@ -282,8 +319,9 @@ def test_minkowski_sum_three_way():
     convex lattice pairs: (1) the constructed ring's shoelace area,
     (2) the hull of all pairwise vertex sums (definitional for convex),
     (3) the angular-order identity the SQL oracle replays
-    (2·area = 2aA + 2aB + Σ cross(earlier, later) by edge angle)."""
-    from mvtspark.kernels.polyclip import minkowski_sum_convex
+    (2·area = 2aA + 2aB + Σ cross(earlier, later) by edge angle) —
+    and the sweep-side hull kernel must reproduce it."""
+    from mvtspark.kernels.polysweep import convex_minkowski_measures
 
     rng = np.random.default_rng(4)
     checked = 0
@@ -307,6 +345,7 @@ def test_minkowski_sum_three_way():
         hy = np.array([p[1] for p in H], float)
         assert got == ring_area2(hx, hy), (A, B)
         assert len(vx) == len(H), (A, B)  # fused vertex count matches hull
+        assert convex_minkowski_measures(ax, ay, bx, by) == (got, len(vx))
         # (3) angular identity
         eax, eay = np.roll(ax, -1) - ax, np.roll(ay, -1) - ay
         ebx, eby = np.roll(bx, -1) - bx, np.roll(by, -1) - by
@@ -320,8 +359,6 @@ def test_minkowski_sum_three_way():
 
 
 def test_minkowski_goldens_and_translation_invariance():
-    from mvtspark.kernels.polyclip import minkowski_sum_convex
-
     # unit square ⊕ unit square = 2x2 square (area2 = 8, 4 verts)
     sq = np.array([0, 1, 1, 0], float), np.array([0, 0, 1, 1], float)
     vx, vy = minkowski_sum_convex(*sq, *sq)

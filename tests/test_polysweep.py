@@ -1,16 +1,17 @@
 """Slab-sweep general polygon boolean (kernels/polysweep.py) — exact
 measures for arbitrary simple pairs, checked three independent ways:
 hand-computed fixtures, identity invariants, and ALGORITHM PARITY
-against the convex-only Sutherland–Hodgman path (kernels/polyclip.py)
-on random convex pairs with arbitrary edge angles."""
+against the convex-only Sutherland–Hodgman reference
+(tests/boolean_reference.py) on random convex pairs with arbitrary edge
+angles."""
 
 import random
 from fractions import Fraction
 
 import numpy as np
 import pytest
+from boolean_reference import convex_pair_stats
 
-from mvtspark.kernels.polyclip import convex_pair_stats
 from mvtspark.kernels.polysweep import boolean_pair_measures
 
 OCT = [(2, 0), (6, 0), (8, 2), (8, 6), (6, 8), (2, 8), (0, 6), (0, 2)]
@@ -313,12 +314,13 @@ except ImportError:  # pragma: no cover
 
 def test_union_sweep_vs_coverage_grid():
     """N-piece union sweep vs the coordinate-compressed coverage grid
-    (operators/boolean.py rect-union path) on random axis-aligned rect
-    sets — two independent exact union algorithms."""
+    (tests/boolean_reference.py) on random axis-aligned rect sets —
+    two independent exact union algorithms; the coverage-count suite
+    (union, overlap, single) against the grid's thresholds too."""
     import numpy as np
+    from boolean_reference import _coverage_grid
 
-    from mvtspark.kernels.polysweep import _union_area2
-    from mvtspark.operators.boolean import _coverage_grid
+    from mvtspark.kernels.polysweep import _union_area2, rings_coverage_area2
 
     rng = random.Random(99)
     for _ in range(20):
@@ -341,6 +343,8 @@ def test_union_sweep_vs_coverage_grid():
         )
         cell = np.diff(xs)[:, None] * np.diff(ys)[None, :]
         assert u2 == 2 * int(cell[cnt >= 1].sum())
+        assert rings_coverage_area2([_xy(p) for p in pieces]) == tuple(
+            2 * int(cell[m].sum()) for m in (cnt >= 1, cnt >= 2, cnt == 1))
 
 
 def test_rings_union_matches_pairwise_inclusion_exclusion():
@@ -386,8 +390,6 @@ def test_union_trapezoids_tile_exactly():
     the trapezoids are disjoint and x-ordered."""
     from fractions import Fraction as Fr
 
-    from mvtspark.kernels.polysweep import union_trapezoids
-
     cases = [
         (([0, 2, 2, 0], [0, 0, 2, 2]), ([1, 3, 3, 1], [0, 0, 2, 2])),
         (([0, 4, 4, 0], [0, 0, 4, 4]), ([2, 6, 2, -2], [-2, 2, 6, 2])),
@@ -399,8 +401,6 @@ def test_union_trapezoids_tile_exactly():
 
     for a, b in cases:
         measures = boolean_pair_measures(a[0], a[1], b[0], b[1])
-        assert union_trapezoids(a[0], a[1], b[0], b[1]) == \
-            pair_trapezoids(a[0], a[1], b[0], b[1], "union")
         for idx, op in enumerate(("inter", "union", "diff", "xor")):
             tr = pair_trapezoids(a[0], a[1], b[0], b[1], op)
             tot = Fr(0)
@@ -425,14 +425,11 @@ def test_negative_radius_rejected():
     corner expansion is invariant under r -> -r)."""
     from mvtspark.kernels.polysweep import (
         open_buffer_square_measures, square_offset_measures)
-    from mvtspark.operators.boolean import offset_rectilinear
 
     with pytest.raises(ValueError):
         square_offset_measures([0, 10, 10, 0], [0, 0, 10, 10], -2)
     with pytest.raises(ValueError):
         open_buffer_square_measures([0, 10], [0, 0], -1)
-    with pytest.raises(ValueError):
-        offset_rectilinear(None, -2)
 
 
 def test_region_components_topology():
@@ -465,8 +462,9 @@ def test_region_components_topology():
 
 def test_minkowski_any_vs_convex_edge_merge():
     """For CONVEX A the sweep-based sum must agree with the angular
-    edge merge (kernels/polyclip.py) — two unrelated algorithms."""
-    from mvtspark.kernels.polyclip import minkowski_sum_convex, ring_area2
+    edge merge (tests/boolean_reference.py) — two unrelated
+    algorithms."""
+    from boolean_reference import minkowski_sum_convex, ring_area2
     from mvtspark.kernels.polysweep import minkowski_any_convex_measures
 
     ox = [p[0] for p in OCT]

@@ -109,6 +109,26 @@ def test_coordinate_bound():
             call()
 
 
+def test_non_integral_coordinates_rejected():
+    """A non-integral or non-finite coordinate raises instead of being
+    truncated (0.5 used to measure as 0); integer-valued floats, as the
+    Spark operators send them, measure exactly like ints."""
+    tri = ([0, 1, 1, 0], [0, 0, 1, 1])
+    assert ps.boolean_pair_measures(
+        [0.0, 2.0, 2.0, 0.0], [0.0, 0.0, 2.0, 2.0], *tri) == (2, 8, 6, 6)
+    for bad in ([0.5, 2.5, 2.5, 0.5], [0, 2, 2, float("nan")],
+                [0, 2, 2, float("inf")], [0, Fraction(5, 2), 2, 0]):
+        for call in (
+            lambda: ps.boolean_pair_measures(bad, [0, 0, 2, 2], *tri),
+            lambda: ps.rings_union_area2([tri, (bad, [0, 0, 2, 2])]),
+            lambda: ps.square_offset_measures(bad, [0, 0, 2, 2], 1),
+            lambda: ps.convex_minkowski_measures(*tri, bad, [0, 0, 2, 2]),
+            lambda: ps.proper_crossing_count(*tri, bad, [0, 0, 2, 2]),
+        ):
+            with pytest.raises(ValueError):
+                call()
+
+
 def _big_star(rng, cx, cy, nv, scale):
     """perfbench's star shape with radii times ``scale``, so rounding to
     integers keeps a 1,000-vertex ring simple."""
