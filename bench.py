@@ -76,10 +76,9 @@ def gen_points(spark, n: int, path: str) -> None:
     """Write the synthetic points fact table AND the tile-polygon dim
     (the production shape: the tile catalog is a pre-built table, not
     derived per query)."""
-    from pyspark.sql import functions as F
-
     from mvtspark.operators.spatial import assign_tiles
     from mvtspark.sources.images import synth_points
+    from mvtspark.sources.tiles import tile_polygons
 
     polys_path = path.rstrip("/") + "_polys"
     if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(
@@ -101,14 +100,9 @@ def gen_points(spark, n: int, path: str) -> None:
         .write.mode("overwrite").parquet(path)
     )
     pts = spark.read.parquet(path)
-    extent = 4096
-    ring_x = F.array(*[F.lit(v).cast("long") for v in (0, extent, extent, 0, 0)])
-    ring_y = F.array(*[F.lit(v).cast("long") for v in (0, 0, extent, extent, 0)])
-    (
+    tile_polygons(
         assign_tiles(pts, zoom=10).select("zoom", "x", "y").distinct()
-        .withColumns({"extent": F.lit(extent), "ring_x": ring_x, "ring_y": ring_y})
-        .write.mode("overwrite").parquet(polys_path)
-    )
+    ).write.mode("overwrite").parquet(polys_path)
 
 
 _RINGS_CACHE: dict = {}
@@ -409,23 +403,14 @@ def mvt_codec_job(spark, points_path: str, cap: int = 300_000):
     from pyspark.sql import functions as F
 
     from mvtspark.operators.spatial import assign_tiles
-    from mvtspark.sources.tiles import decode_tiles, encode_tiles
+    from mvtspark.sources.tiles import decode_tiles, encode_tiles, point_features
 
     pts = spark.read.parquet(points_path)
     total = pts.count()
     if total > cap:  # distributed downsample — never a single-task limit()
         pts = pts.sample(fraction=cap / total, seed=42)
-    a = assign_tiles(pts, zoom=10)
-    feats = a.select(
-        "zoom", "x", "y", F.lit(4096).alias("extent"),
-        F.xxhash64("image_id").bitwiseAND(F.lit((1 << 62) - 1)).alias("feature_id"),
-        F.lit(1).alias("geom_type"),
-        F.array(F.lit(0), F.lit(1)).cast("array<int>").alias("part_offsets"),
-        F.array(F.col("px")).alias("xs"),
-        F.array(F.col("py")).alias("ys"),
-        F.to_json(F.struct("caption")).alias("props"),
-    )
-    tiles = encode_tiles(feats, layer_name="images")
+    a = assign_tiles(pts, zoom=10).withColumn("extent", F.lit(4096))
+    tiles = encode_tiles(point_features(a), layer_name="images")
     dec = decode_tiles(tiles.select("zoom", "x", "y", "mvt"))
     n = dec.where(F.col("decode_error").isNull()).count()
     return n

@@ -75,7 +75,9 @@ def main() -> None:
         pending_work, read_checkpoint, write_stage_checkpoint,
     )
     from mvtspark.sources.images import synth_points
-    from mvtspark.sources.tiles import decode_tiles, encode_tiles
+    from mvtspark.sources.tiles import (
+        decode_tiles, encode_tiles, point_features, tile_polygons,
+    )
 
     if args.resume and not args.job_id:
         # a fresh random id would match NO checkpoint rows: the anti-join
@@ -103,15 +105,8 @@ def main() -> None:
                             keys=("zoom", "x", "y"))
         assigned = assigned.join(F.broadcast(todo), ["zoom", "x", "y"], "left_semi")
 
-    ring_x = F.array(*[F.lit(v).cast("long")
-                       for v in (0, args.extent, args.extent, 0, 0)])
-    ring_y = F.array(*[F.lit(v).cast("long")
-                       for v in (0, 0, args.extent, args.extent, 0)])
-    polys = (
-        assigned.select("zoom", "x", "y").distinct()
-        .withColumns({"extent": F.lit(args.extent),
-                      "ring_x": ring_x, "ring_y": ring_y})
-    )
+    polys = tile_polygons(assigned.select("zoom", "x", "y").distinct(),
+                          extent=args.extent)
     joined = spatial_join_pip(assigned, polys, broadcast_dim=True)
 
     counts = salted_tile_counts(joined, salt_buckets=args.salt_buckets)
@@ -119,16 +114,7 @@ def main() -> None:
                            stage="agg", lineage="salted_tile_counts",
                            part_cols=("zoom",))
 
-    feats = joined.select(
-        "zoom", "x", "y", F.col("extent"),
-        F.xxhash64("image_id").bitwiseAND(F.lit((1 << 62) - 1)).alias("feature_id"),
-        F.lit(1).alias("geom_type"),
-        F.array(F.lit(0), F.lit(1)).cast("array<int>").alias("part_offsets"),
-        F.array(F.col("px")).alias("xs"),
-        F.array(F.col("py")).alias("ys"),
-        F.to_json(F.struct("caption")).alias("props"),
-    )
-    tiles = encode_tiles(feats, layer_name="images")
+    tiles = encode_tiles(point_features(joined), layer_name="images")
     tiles.write.mode("append").parquet(args.tiles_out)
 
     written = spark.read.parquet(args.tiles_out)

@@ -1,9 +1,10 @@
 """Vectorized pandas/Arrow UDFs over the numpy kernels (no per-row Python
 at DataFrame level — the ``input_hint`` contract).
 
-Everything here is a thin Arrow-batch adapter: pd.Series in → numpy
-kernel → pd.Series out. Kernel imports happen inside the functions so
-executors only unpickle module-level names (closure-capture hygiene).
+Everything here is a thin Arrow-batch adapter: pd.Series (or, for
+list columns, pyarrow arrays) in → numpy kernel → the same kind out.
+Kernel imports happen inside the functions so executors only unpickle
+module-level names (closure-capture hygiene).
 """
 
 from __future__ import annotations
@@ -55,47 +56,38 @@ def pip_contains(px: Column, py: Column, ring_x: Column, ring_y: Column) -> Colu
     Output: tinyint {0 out, 1 in, -1 boundary} — reference semantics
     (src/Geometry/clipper.cs:4025-4077).
 
-    The ring group key is computed JVM-side (`xxhash64(ring_x, ring_y)`
-    — native, codegen'd) so the Python side groups on an int64 column
-    with C-speed pandas machinery: no per-row Python anywhere. Within a
-    batch the kernel runs once per distinct polygon (many points × one
-    ring).
+    One kernel call per Arrow batch
+    (kernels/geom.py::point_in_polygon_multi): row i tests against ring
+    i, whose span the ``ring_x``/``ring_y`` ListArray offsets give.
 
     Scale note: this variant ships each row's ring through Arrow (~16B ×
     ring length per row) — right when the polygon dim is too big to
     broadcast. For broadcastable dims prefer
     :func:`pip_contains_bcast`, which ships only 5 scalar columns.
     """
-    ring_key = F.xxhash64(ring_x, ring_y)
+    return F.arrow_udf(ByteType())(_pip_rows)(px, py, ring_x, ring_y)
 
-    @F.pandas_udf(ByteType())
-    def _f(
-        px_s: pd.Series, py_s: pd.Series, rx_s: pd.Series, ry_s: pd.Series,
-        key_s: pd.Series,
-    ) -> pd.Series:
-        import numpy as np
 
-        from mvtspark.kernels.geom import point_in_polygon
+def _pip_rows(px, py, ring_x, ring_y):
+    """:func:`pip_contains` on one Arrow batch: row i against ring i."""
+    import numpy as np
+    import pyarrow as pa
 
-        n = len(px_s)
-        out = np.zeros(n, dtype=np.int8)
-        if n == 0:
-            return pd.Series(out)
-        px_np = px_s.to_numpy(dtype=np.int64, copy=False)
-        py_np = py_s.to_numpy(dtype=np.int64, copy=False)
-        keys = key_s.to_numpy(dtype=np.int64, copy=False)
-        order = np.argsort(keys, kind="stable")
-        sorted_keys = keys[order]
-        bounds = np.flatnonzero(np.r_[True, sorted_keys[1:] != sorted_keys[:-1]])
-        bounds = np.r_[bounds, n]
-        for b in range(len(bounds) - 1):
-            ii = order[bounds[b]: bounds[b + 1]]
-            rx = np.asarray(rx_s.iloc[ii[0]], dtype=np.int64)
-            ry = np.asarray(ry_s.iloc[ii[0]], dtype=np.int64)
-            out[ii] = point_in_polygon(px_np[ii], py_np[ii], rx, ry)
-        return pd.Series(out)
+    from mvtspark.kernels.geom import point_in_polygon_multi
 
-    return _f(px, py, ring_x, ring_y, ring_key)
+    # offsets of a sliced ListArray index its unsliced values buffer;
+    # rebase them onto the slice's own values (flatten())
+    ox = ring_x.offsets.to_numpy().astype(np.int64)
+    oy = ring_y.offsets.to_numpy().astype(np.int64)
+    if not np.array_equal(ox - ox[0], oy - oy[0]):
+        raise ValueError("pip_contains: ring_x and ring_y lengths differ")
+    out = point_in_polygon_multi(
+        px.to_numpy(zero_copy_only=False), py.to_numpy(zero_copy_only=False),
+        np.arange(len(px)), ox - ox[0],
+        ring_x.flatten().to_numpy(zero_copy_only=False),
+        ring_y.flatten().to_numpy(zero_copy_only=False),
+    )
+    return pa.array(out, type=pa.int8())
 
 
 class RingCatalog:
@@ -121,9 +113,12 @@ class RingCatalog:
         return self.bcast.value
 
 
-def broadcast_rings(
-    spark, tile_polys, key_cols=("zoom", "x", "y"), rect_native_max=65536
-):
+#: largest dim that takes the native rectangle predicate (see
+#: :func:`broadcast_rings`)
+RECT_NATIVE_MAX = 65536
+
+
+def broadcast_rings(spark, tile_polys):
     """Collect a tile-polygon dim to the driver and broadcast it to the
     Python workers as four numpy arrays (sorted packed keys, ring
     offsets, flat ring x/y) — the Python-side analog of a JVM broadcast
@@ -131,7 +126,7 @@ def broadcast_rings(
 
     Returns a :class:`RingCatalog` (also detects the all-rectangles
     special case for the native fast path). The rect fast path is only
-    chosen for dims ≤ ``rect_native_max`` rings: its JVM broadcast-hash
+    chosen for dims ≤ :data:`RECT_NATIVE_MAX` rings: its JVM broadcast-hash
     build is rebuilt per QUERY (driver-serial), whereas the Python ring
     broadcast is built once per catalog and amortizes across queries —
     at ~10^6 rings the rebuild dominates and generic wins.
@@ -140,10 +135,10 @@ def broadcast_rings(
 
     # Arrow-native build: list-array offsets/values come out as flat
     # numpy arrays directly — zero per-ring Python, O(n) vectorized.
-    tbl = tile_polys.select(*key_cols, "ring_x", "ring_y").toArrow()
-    zc = tbl.column(key_cols[0]).to_numpy().astype(np.int64)
-    xc = tbl.column(key_cols[1]).to_numpy().astype(np.int64)
-    yc = tbl.column(key_cols[2]).to_numpy().astype(np.int64)
+    tbl = tile_polys.select("zoom", "x", "y", "ring_x", "ring_y").toArrow()
+    zc = tbl.column("zoom").to_numpy().astype(np.int64)
+    xc = tbl.column("x").to_numpy().astype(np.int64)
+    yc = tbl.column("y").to_numpy().astype(np.int64)
     # packed key layout: zoom<<58 | x<<29 | y — valid for zoom <= 28
     # (x, y < 2^29); fail loudly instead of silently colliding keys
     if zc.size and (int(zc.max()) > 28 or int(xc.max()) >= 1 << 29 or int(yc.max()) >= 1 << 29):
@@ -178,7 +173,7 @@ def broadcast_rings(
     # exactly 2 distinct x and 2 distinct y values
     sizes = np.diff(offsets)
     rect_pdf = None
-    if 0 < sizes.size <= rect_native_max and (sizes == 5).all():
+    if 0 < sizes.size <= RECT_NATIVE_MAX and (sizes == 5).all():
         vx = rx_flat.reshape(-1, 5)
         vy = ry_flat.reshape(-1, 5)
         closed = (vx[:, 0] == vx[:, 4]) & (vy[:, 0] == vy[:, 4])
@@ -196,9 +191,9 @@ def broadcast_rings(
 
             rect_pdf = pd.DataFrame(
                 {
-                    key_cols[0]: (keys >> 58) & 0x3F,
-                    key_cols[1]: (keys >> 29) & ((1 << 29) - 1),
-                    key_cols[2]: keys & ((1 << 29) - 1),
+                    "zoom": (keys >> 58) & 0x3F,
+                    "x": (keys >> 29) & ((1 << 29) - 1),
+                    "y": keys & ((1 << 29) - 1),
                     "rect_xmin": xmin, "rect_xmax": xmax,
                     "rect_ymin": ymin, "rect_ymax": ymax,
                 }

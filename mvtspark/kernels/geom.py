@@ -273,62 +273,30 @@ def signed_area(xs: np.ndarray, ys: np.ndarray) -> float:
     return float(0.5 * np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
 
 
+#: exclusive bound on |coordinate| for the PIP kernel: differences stay
+#: below 2^31, so every edge cross product fits int64
+PIP_COORD_LIMIT = 1 << 30
+#: (point, edge) entries per numpy block of the PIP kernel
+_PIP_BLOCK = 1 << 18
+
+
+def _check_pip_bound(*arrays: np.ndarray) -> None:
+    for a in arrays:
+        if a.size and (a.min() <= -PIP_COORD_LIMIT or a.max() >= PIP_COORD_LIMIT):
+            raise ValueError("point-in-polygon coordinates must satisfy "
+                             "|c| < 2**30 (int64 edge cross products)")
+
+
 def point_in_polygon(
     px: np.ndarray, py: np.ndarray, ring_x: np.ndarray, ring_y: np.ndarray
 ) -> np.ndarray:
-    """Vectorized crossing-rule point-in-polygon over MANY points, ONE ring.
-
-    Returns int8 array: 0 outside, 1 inside, -1 exactly on the boundary —
-    the reference's result convention (src/Geometry/clipper.cs:4025-4077,
-    Hormann–Agathos). Integer-exact when inputs are integer (int64 cross
-    products, no floating error), like the reference's IntPoint math.
-    """
+    """Crossing-rule point-in-polygon of MANY points against ONE ring:
+    the one-ring call of :func:`point_in_polygon_multi`."""
     px = np.asarray(px, dtype=np.int64)
-    py = np.asarray(py, dtype=np.int64)
-    rx = np.asarray(ring_x, dtype=np.int64)
-    ry = np.asarray(ring_y, dtype=np.int64)
-    if rx.size >= 2 and rx[-1] == rx[0] and ry[-1] == ry[0]:
-        rx = rx[:-1]
-        ry = ry[:-1]
-    n = rx.size
-    if n < 3:
-        return np.zeros(px.shape, dtype=np.int8)
-
-    result = np.zeros(px.shape, dtype=np.int8)
-    boundary = np.zeros(px.shape, dtype=bool)
-    winding = np.zeros(px.shape, dtype=np.int64)
-
-    x1 = rx
-    y1 = ry
-    x2 = np.roll(rx, -1)
-    y2 = np.roll(ry, -1)
-
-    # Broadcast points (N,1) against edges (E,) in manageable chunks.
-    CHUNK = 4096
-    for s in range(0, px.size, CHUNK):
-        e = min(s + CHUNK, px.size)
-        X = px[s:e, None]
-        Y = py[s:e, None]
-        # boundary: point collinear with edge and within bbox
-        cross = (x2 - x1) * (Y - y1) - (y2 - y1) * (X - x1)
-        on_seg = (
-            (cross == 0)
-            & (np.minimum(x1, x2) <= X)
-            & (X <= np.maximum(x1, x2))
-            & (np.minimum(y1, y2) <= Y)
-            & (Y <= np.maximum(y1, y2))
-        )
-        boundary[s:e] = on_seg.any(axis=1)
-        # crossing rule: edge crosses the horizontal ray to the right of X
-        upward = (y1 <= Y) & (y2 > Y)
-        downward = (y1 > Y) & (y2 <= Y)
-        winding[s:e] = np.sum(upward & (cross > 0), axis=1) - np.sum(
-            downward & (cross < 0), axis=1
-        )
-    inside = winding != 0  # nonzero fill rule (clipper pftNonZero default)
-    result[inside] = 1
-    result[boundary] = -1
-    return result
+    return point_in_polygon_multi(
+        px, py, np.zeros(px.size, dtype=np.int64),
+        np.array([0, np.size(ring_x)], dtype=np.int64), ring_x, ring_y,
+    )
 
 
 def point_in_polygon_multi(
@@ -339,21 +307,22 @@ def point_in_polygon_multi(
     ring_x_flat: np.ndarray,
     ring_y_flat: np.ndarray,
 ) -> np.ndarray:
-    """PIP where EACH point row tests against its OWN ring (J4 phase 2 at
-    batch granularity): ``ring_idx[i]`` selects ring ``i``'s vertex span
-    ``ring_offsets[r]:ring_offsets[r+1]`` in the flat arrays. Same
-    {0,1,-1} Hormann–Agathos semantics as :func:`point_in_polygon`
-    (src/Geometry/clipper.cs:4025-4077), integer-exact.
+    """Crossing-rule point-in-polygon where EACH point tests against its
+    OWN ring (J4 phase 2 at batch granularity): ``ring_idx[i]`` selects
+    ring ``r``'s vertex span ``ring_offsets[r]:ring_offsets[r+1]`` in
+    the flat arrays.
 
-    Fast path: when every referenced ring has the same vertex count E
-    (the tile-rectangle case), gathers per-row edge matrices of shape
-    (N, E) and evaluates the whole batch in ONE vectorized pass — no
-    per-group Python loop at all. Ragged ring sizes fall back to a
-    per-distinct-ring loop (one kernel call per ring, many points each).
+    Returns int8: 0 outside, 1 inside, -1 exactly on the boundary — the
+    reference's result convention (src/Geometry/clipper.cs:4025-4077,
+    Hormann–Agathos), nonzero fill rule. A closing vertex (last == first)
+    is dropped; a ring left with fewer than 3 vertices gives 0.
 
-    Closing vertices (first == last) are handled by the edge roll: the
-    duplicate edge has zero length and contributes nothing to winding,
-    and its boundary test is subsumed by the real edges.
+    Each (point, edge of its own ring) pair is one entry; winding number
+    and boundary hit are segmented reductions over a point's entries, so
+    one pass covers any mix of ring sizes. Exact: coordinates are cast to
+    int64 (floats truncate), and every point coordinate and every vertex
+    of a tested ring must satisfy |c| < 2^30, else ``ValueError``, so the
+    edge cross products fit int64.
     """
     px = np.asarray(px, dtype=np.int64)
     py = np.asarray(py, dtype=np.int64)
@@ -361,56 +330,55 @@ def point_in_polygon_multi(
     ring_offsets = np.asarray(ring_offsets, dtype=np.int64)
     rxf = np.asarray(ring_x_flat, dtype=np.int64)
     ryf = np.asarray(ring_y_flat, dtype=np.int64)
-    n = px.size
-    out = np.zeros(n, dtype=np.int8)
-    if n == 0:
-        return out
+    _check_pip_bound(px, py)
+    out = np.zeros(px.size, dtype=np.int8)
 
-    sizes = ring_offsets[ring_idx + 1] - ring_offsets[ring_idx]
-    esz = sizes[0]
-    if not (sizes == esz).all() or esz < 3:
-        # ragged fallback: one vectorized call per distinct ring
-        for r in np.unique(ring_idx):
-            sel = ring_idx == r
-            s, e = int(ring_offsets[r]), int(ring_offsets[r + 1])
-            out[sel] = point_in_polygon(px[sel], py[sel], rxf[s:e], ryf[s:e])
-        return out
+    # per point: its ring's first vertex and edge count m (closing
+    # duplicate dropped; m = 0 for a ring of fewer than 3 vertices)
+    start = ring_offsets[ring_idx]
+    m = ring_offsets[ring_idx + 1] - start
+    two = np.flatnonzero(m >= 2)
+    last = start[two] + m[two] - 1
+    m[two] -= (rxf[last] == rxf[start[two]]) & (ryf[last] == ryf[start[two]])
+    m[m < 3] = 0
+    ends = np.cumsum(m)
 
-    # uniform-size fast path: per-row edge gather, whole batch at once
-    base = ring_offsets[ring_idx]  # (N,)
-    cols = np.arange(esz, dtype=np.int64)  # (E,)
-    vi = base[:, None] + cols[None, :]  # (N, E) vertex indices
-    x1 = rxf[vi]
-    y1 = ryf[vi]
-    roll = np.concatenate([cols[1:], cols[:1]])
-    vj = base[:, None] + roll[None, :]
-    x2 = rxf[vj]
-    y2 = ryf[vj]
-
-    X = px[:, None]
-    Y = py[:, None]
-    CHUNK = 65536
-    boundary = np.zeros(n, dtype=bool)
-    winding = np.zeros(n, dtype=np.int64)
-    for s in range(0, n, CHUNK):
-        e = min(s + CHUNK, n)
-        c = slice(s, e)
-        cross = (x2[c] - x1[c]) * (Y[c] - y1[c]) - (y2[c] - y1[c]) * (X[c] - x1[c])
-        on_seg = (
-            (cross == 0)
-            & (np.minimum(x1[c], x2[c]) <= X[c])
-            & (X[c] <= np.maximum(x1[c], x2[c]))
-            & (np.minimum(y1[c], y2[c]) <= Y[c])
-            & (Y[c] <= np.maximum(y1[c], y2[c]))
-        )
-        boundary[c] = on_seg.any(axis=1)
-        upward = (y1[c] <= Y[c]) & (y2[c] > Y[c])
-        downward = (y1[c] > Y[c]) & (y2[c] <= Y[c])
-        winding[c] = np.sum(upward & (cross > 0), axis=1) - np.sum(
-            downward & (cross < 0), axis=1
-        )
-    out[winding != 0] = 1
-    out[boundary] = -1
+    p = 0
+    while p < px.size:
+        # points p..q hold at most _PIP_BLOCK entries (or are one point)
+        limit = ends[p] - m[p] + _PIP_BLOCK
+        q = max(int(np.searchsorted(ends, limit, "right")), p + 1)
+        mb = m[p:q]
+        tested = np.flatnonzero(mb)
+        if tested.size:
+            mt = mb[tested]
+            seg = np.cumsum(mt) - mt  # first entry of each tested point
+            j = np.arange(seg[-1] + mt[-1]) + np.repeat(start[p:q][tested] - seg, mt)
+            x1, y1 = rxf[j], ryf[j]
+            _check_pip_bound(x1, y1)
+            # edge end = next vertex, wrapping at each ring's last edge
+            x2 = np.empty_like(x1)
+            y2 = np.empty_like(y1)
+            x2[:-1], y2[:-1] = x1[1:], y1[1:]
+            wrap = seg + mt - 1
+            x2[wrap], y2[wrap] = x1[seg], y1[seg]
+            X = np.repeat(px[p:q][tested], mt)
+            Y = np.repeat(py[p:q][tested], mt)
+            cross = (x2 - x1) * (Y - y1) - (y2 - y1) * (X - x1)
+            on_seg = (
+                (cross == 0)
+                & (np.minimum(x1, x2) <= X) & (X <= np.maximum(x1, x2))
+                & (np.minimum(y1, y2) <= Y) & (Y <= np.maximum(y1, y2))
+            )
+            # an edge crossing the rightward ray: upward with the point on
+            # its left adds 1, downward with the point on its right takes 1
+            upward = (y1 <= Y) & (y2 > Y) & (cross > 0)
+            downward = (y1 > Y) & (y2 <= Y) & (cross < 0)
+            winding = np.add.reduceat(upward.astype(np.int64) - downward, seg)
+            res = (winding != 0).astype(np.int8)
+            res[np.logical_or.reduceat(on_seg, seg)] = -1
+            out[p + tested] = res
+        p = q
     return out
 
 

@@ -152,7 +152,7 @@ def polyline_buffer_square(lines: DataFrame) -> DataFrame:
     radius). Pure map — no shuffle; lines distribute."""
 
     def row(r):
-        l1, b2 = open_buffer_square_measures(r.xs, r.ys, int(r.radius))
+        l1, b2 = open_buffer_square_measures(r.xs, r.ys, r.radius)
         return int(r.line_id), int(l1), _as_long(b2)
 
     return _row_map(lines, BUFFER_OPEN_SCHEMA, row)
@@ -235,7 +235,7 @@ def square_offset_any(rings: DataFrame) -> DataFrame:
     distribute."""
     return _row_map(rings, OFFSET_ANY_SCHEMA, lambda r: (
         int(r.ring_id),
-        *map(_as_long, square_offset_measures(r.xs, r.ys, int(r.radius)))))
+        *map(_as_long, square_offset_measures(r.xs, r.ys, r.radius))))
 
 
 RECT_UNION_SCHEMA = (

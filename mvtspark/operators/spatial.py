@@ -7,8 +7,9 @@ Scale design (100 TB / 10^12 rows):
 - the cell join (J4 phase 1) equi-joins on the grid-aligned cell key;
   the tile-polygon dimension is broadcast when small, sort-merge with
   AQE skew splitting otherwise;
-- PIP refinement (J4 phase 2) runs only on join survivors — a pandas
-  UDF that evaluates one ring against a whole Arrow batch of points;
+- PIP refinement (J4 phase 2) runs only on join survivors — one
+  vectorized ray-cast kernel call per Arrow batch, each point against
+  its own ring;
 - dense-city skew is handled with explicit salting (A7): stage 1
   aggregates on (key, salt), stage 2 merges — plus AQE skew-join on top.
 """
@@ -52,7 +53,6 @@ def spatial_join_pip(
     points: DataFrame,
     tile_polys: DataFrame,
     broadcast_dim: bool = True,
-    keep_boundary: bool = True,
     rings=None,
     attach_payload: bool = True,
 ) -> DataFrame:
@@ -61,7 +61,7 @@ def spatial_join_pip(
     Phase 1: equi-join on (zoom, x, y) — the grid cell key.
     Phase 2: exact ray-cast refinement with the reference's boundary
     semantics ({0,1,-1}; clipper.cs:4025-4077); boundary counts as
-    contained when ``keep_boundary`` (PIP != 0).
+    contained (PIP != 0).
 
     Two physical strategies, picked by ``broadcast_dim``:
 
@@ -73,9 +73,9 @@ def spatial_join_pip(
       (extent etc.) — both halves stay in one narrow stage, zero
       shuffle.
     - **rows (dim too big to broadcast)**: JVM equi-join (sort-merge +
-      AQE skew split) attaches each row's ring; the UDF groups rows by a
-      JVM-computed xxhash64 ring key and evaluates one vectorized kernel
-      call per distinct polygon per batch.
+      AQE skew split) attaches each row's ring; the UDF reads the ring
+      spans from the Arrow list offsets and evaluates each batch in one
+      vectorized kernel call.
 
     ``rings``: optionally pass a prebuilt :func:`broadcast_rings` result
     to amortize the (serial, driver-side) dim collect across many jobs
@@ -114,8 +114,7 @@ def spatial_join_pip(
             if attach_payload:
                 dim = F.broadcast(tile_polys.drop("ring_x", "ring_y"))
                 joined = joined.join(dim, ["zoom", "x", "y"], "inner")
-            cond = F.col("pip") != 0 if keep_boundary else F.col("pip") == 1
-            return joined.where(cond)
+            return joined.where(F.col("pip") != 0)
         pip = pip_contains_bcast(
             F.col("px"), F.col("py"),
             F.col("zoom"), F.col("x"), F.col("y"), rings,
@@ -135,8 +134,7 @@ def spatial_join_pip(
             F.col("px"), F.col("py"), F.col("ring_x"), F.col("ring_y")
         )
         joined = joined.withColumn("pip", pip).drop("ring_x", "ring_y")
-    cond = F.col("pip") != 0 if keep_boundary else F.col("pip") == 1
-    return joined.where(cond)
+    return joined.where(F.col("pip") != 0)
 
 
 def salted_tile_counts(

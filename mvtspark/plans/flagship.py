@@ -19,7 +19,9 @@ from pyspark.sql import functions as F
 
 from ..operators.spatial import assign_tiles, salted_tile_counts, spatial_join_pip
 from ..sources.images import synth_images
-from ..sources.tiles import decode_tiles, encode_tiles
+from ..sources.tiles import (
+    decode_tiles, encode_tiles, point_features, tile_polygons,
+)
 
 
 def flagship(
@@ -46,33 +48,14 @@ def flagship(
     # this is the pre-built tile-catalog table; deriving it from the fact
     # side keeps the dimension broadcastable at any zoom (never the full
     # 4^zoom grid).
-    extent = 4096
-    ring_x = F.array(*[F.lit(v).cast("long") for v in (0, extent, extent, 0, 0)])
-    ring_y = F.array(*[F.lit(v).cast("long") for v in (0, 0, extent, extent, 0)])
-    polys = (
-        assigned.select("zoom", "x", "y")
-        .distinct()
-        .withColumns(
-            {"extent": F.lit(extent), "ring_x": ring_x, "ring_y": ring_y}
-        )
-    )
+    polys = tile_polygons(assigned.select("zoom", "x", "y").distinct())
 
     joined = spatial_join_pip(assigned, polys, broadcast_dim=True)
     counts = salted_tile_counts(joined, salt_buckets=salt_buckets)
 
     # per-tile feature set: one point feature per image (id = stable row
     # number within the tile, W2 deterministic ordering), props = caption
-    feats = joined.select(
-        "zoom", "x", "y",
-        F.col("extent"),
-        F.xxhash64("image_id").bitwiseAND(F.lit((1 << 62) - 1)).alias("feature_id"),
-        F.lit(1).alias("geom_type"),
-        F.array(F.lit(0), F.lit(1)).cast("array<int>").alias("part_offsets"),
-        F.array(F.col("px")).alias("xs"),
-        F.array(F.col("py")).alias("ys"),
-        F.to_json(F.struct(F.col("caption"))).alias("props"),
-    )
-    tiles = encode_tiles(feats, layer_name="images")
+    tiles = encode_tiles(point_features(joined), layer_name="images")
 
     decoded = decode_tiles(tiles.select("zoom", "x", "y", "mvt"))
     decoded_counts = (

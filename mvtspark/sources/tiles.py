@@ -7,6 +7,8 @@
   (ref: src/Bench/Program.cs:41-63)
 - ``tile_polygons``: rectangular tile-boundary rings in tile units
   (FIXTURES.md §2) — the spatial-join dimension table
+- ``point_features``: one MVT point feature per image row (the
+  ``encode_tiles`` input of the flagship, job, stream and bench)
 - ``decode_tiles``: tiles DF → features DF via the batch MVT kernel
   (mapInArrow; one kernel call per Arrow BATCH, every mode)
 - ``encode_tiles``: per-(zoom,x,y) feature groups → MVT binary
@@ -66,27 +68,35 @@ def tile_pyramid(
     )
 
 
-def tile_polygons(
-    spark: SparkSession,
-    zoom: int,
-    col_range: tuple[int, int],
-    row_range: tuple[int, int],
-    extent: int = 4096,
-    inset: int = 0,
-) -> DataFrame:
-    """Tile-boundary rings in tile units (closed, first==last — the
-    decoded-ring convention, DecodeGeometry.cs:76-82). ``inset`` shrinks
-    the ring for PIP-edge-case fixtures (FIXTURES.md §2)."""
-    lo, hi = inset, extent - inset
-    ring_x = F.array(*[F.lit(v).cast("long") for v in (lo, hi, hi, lo, lo)])
-    ring_y = F.array(*[F.lit(v).cast("long") for v in (lo, lo, hi, hi, lo)])
-    return tile_pyramid(spark, zoom, col_range, row_range).select(
-        "zoom",
-        "x",
-        "y",
+def tile_polygons(keys: DataFrame, extent: int = 4096) -> DataFrame:
+    """The spatial-join dimension: each (zoom, x, y) key of ``keys``
+    with its tile extent and tile-boundary ring in tile units, the
+    rectangle (0, 0)-(extent, extent) closed first == last (the
+    decoded-ring convention, DecodeGeometry.cs:76-82). Columns: zoom,
+    x, y, extent, ring_x, ring_y."""
+    corners = lambda vs: F.array(*[F.lit(v).cast("long") for v in vs])
+    return keys.select(
+        "zoom", "x", "y",
         F.lit(extent).alias("extent"),
-        ring_x.alias("ring_x"),
-        ring_y.alias("ring_y"),
+        corners((0, extent, extent, 0, 0)).alias("ring_x"),
+        corners((0, 0, extent, extent, 0)).alias("ring_y"),
+    )
+
+
+def point_features(points: DataFrame) -> DataFrame:
+    """One MVT point feature per image row, in the column layout
+    :func:`encode_tiles` takes: the in-tile pixel (px, py) as a
+    one-vertex part, a stable feature id hashed from ``image_id`` (63
+    bits, non-negative) and the caption as JSON props. ``points``
+    carries zoom, x, y, extent, image_id, px, py and caption."""
+    return points.select(
+        "zoom", "x", "y", "extent",
+        F.xxhash64("image_id").bitwiseAND(F.lit((1 << 62) - 1)).alias("feature_id"),
+        F.lit(1).alias("geom_type"),
+        F.array(F.lit(0), F.lit(1)).cast("array<int>").alias("part_offsets"),
+        F.array(F.col("px")).alias("xs"),
+        F.array(F.col("py")).alias("ys"),
+        F.to_json(F.struct("caption")).alias("props"),
     )
 
 

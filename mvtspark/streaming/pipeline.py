@@ -137,25 +137,14 @@ def make_epoch_batch_writer(
     crash-replay matrix directly (tests/test_streaming.py).
     """
     from ..sources.checkpoint import write_stage_checkpoint
-    from ..sources.tiles import encode_tiles
+    from ..sources.tiles import encode_tiles, point_features
 
     def _batch(df: DataFrame, epoch_id: int) -> None:
         stage = f"epoch={epoch_id}"
         if _epoch_committed(df.sparkSession, checkpoint_path, job_id, stage):
             return  # replay of a committed epoch: exactly-once no-op
-        assigned = assign_tiles(df, zoom=zoom)
-        feats = assigned.select(
-            "zoom", "x", "y", F.lit(4096).alias("extent"),
-            F.xxhash64("image_id").bitwiseAND(F.lit((1 << 62) - 1)).alias(
-                "feature_id"
-            ),
-            F.lit(1).alias("geom_type"),
-            F.array(F.lit(0), F.lit(1)).cast("array<int>").alias("part_offsets"),
-            F.array(F.col("px")).alias("xs"),
-            F.array(F.col("py")).alias("ys"),
-            F.to_json(F.struct("caption")).alias("props"),
-        )
-        tiles = encode_tiles(feats, layer_name="images").cache()
+        assigned = assign_tiles(df, zoom=zoom).withColumn("extent", F.lit(4096))
+        tiles = encode_tiles(point_features(assigned), layer_name="images").cache()
         try:
             tiles.write.mode("overwrite").parquet(
                 os.path.join(tiles_path, stage)

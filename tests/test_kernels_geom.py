@@ -12,6 +12,8 @@ Goldens mirrored from:
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from mvtspark.kernels import geom
 
@@ -111,6 +113,81 @@ def test_point_in_concave_polygon():
         np.array([5, 5, 1], dtype=np.int64), np.array([5, 1, 5], dtype=np.int64), rx, ry
     )
     assert res.tolist() == [0, 1, 1]  # middle of the U notch is outside
+
+
+def test_point_in_polygon_degenerate_ring_ignores_batch_neighbours():
+    """A closed ring with two distinct vertices contains nothing, not
+    even its own segment, whatever rings share the batch: the answer of
+    a (point, ring) row must not depend on its batch neighbours."""
+    seg_x, seg_y = [0, 10, 0], [0, 0, 0]
+    tri_x, tri_y = [0, 10, 0, 0], [0, 0, 10, 0]
+    quad_x, quad_y = [0, 10, 10, 0, 0], [0, 0, 10, 10, 0]
+    alone = geom.point_in_polygon_multi([5], [0], [0], [0, 3], seg_x, seg_y)
+    assert alone.tolist() == [0]
+    for ox, oy in ((tri_x, tri_y), (quad_x, quad_y), (seg_x, seg_y)):
+        rx = np.r_[ox, seg_x]
+        ry = np.r_[oy, seg_y]
+        offsets = [0, len(ox), len(ox) + 3]
+        got = geom.point_in_polygon_multi([1, 5], [1, 0], [0, 1], offsets, rx, ry)
+        assert got[1] == alone[0], (ox, got)
+
+
+def test_point_in_polygon_enforces_int64_bound():
+    """Cross products are int64-exact only while |c| < 2^30: a point or
+    a tested ring vertex at the bound raises instead of overflowing."""
+    lim = geom.PIP_COORD_LIMIT
+    assert lim == 1 << 30
+    big = lim - 1
+    ring_x = np.array([-big, big, big, -big], dtype=np.int64)
+    ring_y = np.array([-big, -big, big, big], dtype=np.int64)
+    assert geom.point_in_polygon(
+        [0, big, -big], [0, 0, big], ring_x, ring_y).tolist() == [1, -1, -1]
+    with pytest.raises(ValueError, match="2\\*\\*30"):
+        geom.point_in_polygon([lim], [0], ring_x, ring_y)
+    with pytest.raises(ValueError, match="2\\*\\*30"):
+        geom.point_in_polygon([0], [-lim], ring_x, ring_y)
+    with pytest.raises(ValueError, match="2\\*\\*30"):
+        geom.point_in_polygon([0], [0], ring_x * 2, ring_y)
+
+
+@st.composite
+def _ragged_rings(draw):
+    """A ring set of mixed sizes (open or closed, possibly degenerate or
+    self-intersecting) and points, some on vertices, each naming its ring."""
+    coord = st.integers(-20, 20)
+    rings = []
+    for _ in range(draw(st.integers(1, 6))):
+        xs = draw(st.lists(coord, min_size=0, max_size=9))
+        ys = draw(st.lists(coord, min_size=len(xs), max_size=len(xs)))
+        if xs and draw(st.booleans()):
+            xs, ys = xs + xs[:1], ys + ys[:1]
+        rings.append((np.array(xs, dtype=np.int64), np.array(ys, dtype=np.int64)))
+    pts = draw(st.lists(st.tuples(coord, coord, st.integers(0, len(rings) - 1)),
+                        max_size=40))
+    return rings, pts
+
+
+@given(_ragged_rings())
+@settings(max_examples=200, deadline=None)
+def test_point_in_polygon_multi_matches_reference_ragged(case):
+    from pip_reference import point_in_polygon as reference
+
+    rings, pts = case
+    offsets = np.r_[0, np.cumsum([r[0].size for r in rings])]
+    rxf = np.concatenate([r[0] for r in rings])
+    ryf = np.concatenate([r[1] for r in rings])
+    # a third of the points sit on a vertex of their ring
+    px = np.array([p[0] for p in pts], dtype=np.int64)
+    py = np.array([p[1] for p in pts], dtype=np.int64)
+    ri = np.array([p[2] for p in pts], dtype=np.int64)
+    for i in range(0, len(pts), 3):
+        rx, ry = rings[ri[i]]
+        if rx.size:
+            px[i], py[i] = rx[i % rx.size], ry[i % rx.size]
+    got = geom.point_in_polygon_multi(px, py, ri, offsets, rxf, ryf)
+    exp = [reference(px[i:i + 1], py[i:i + 1], *rings[ri[i]])[0]
+           for i in range(len(pts))]
+    assert got.tolist() == [int(e) for e in exp]
 
 
 def test_clip_points():

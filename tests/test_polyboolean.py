@@ -311,6 +311,34 @@ def test_offset_rectilinear_random_rectilinear_rings(spark):
         assert got[rid].offset_area2 == 2 * _brute_offset_area(xs, ys, 2), rid
 
 
+def test_offset_and_buffer_pass_double_radius_through(spark):
+    """A DOUBLE radius reaches the kernel unrounded: 2.0 measures
+    exactly as the integer radius 2, while 2.5 raises the kernel's
+    integer-coordinate error instead of being truncated to 2."""
+    from pyspark.errors import PythonException
+
+    from mvtspark.operators.boolean import polyline_buffer_square, square_offset_any
+
+    def run(radius, rtype):
+        rings = spark.createDataFrame(
+            [(1, L_XS, L_YS, radius)],
+            f"ring_id long, xs array<int>, ys array<int>, radius {rtype}")
+        lines = spark.createDataFrame(
+            [(1, [0, 8, 8], [0, 0, 6], radius)],
+            f"line_id long, xs array<int>, ys array<int>, radius {rtype}")
+        return (tuple(square_offset_any(rings).collect()[0]),
+                tuple(polyline_buffer_square(lines).collect()[0]))
+
+    assert run(2.0, "double") == run(2, "int")
+    for op in (square_offset_any, polyline_buffer_square):
+        key = "ring_id" if op is square_offset_any else "line_id"
+        df = spark.createDataFrame(
+            [(1, L_XS, L_YS, 2.5)],
+            f"{key} long, xs array<int>, ys array<int>, radius double")
+        with pytest.raises(PythonException, match="must be integers"):
+            op(df).collect()
+
+
 # ------------------------------------------------------------- minkowski
 
 

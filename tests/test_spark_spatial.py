@@ -10,6 +10,7 @@ from mvtspark.kernels.image import synth_latlng
 from mvtspark.kernels.proj import lnglat_to_tile
 from mvtspark.operators.spatial import assign_tiles, salted_tile_counts, spatial_join_pip
 from mvtspark.sources.images import synth_images
+from mvtspark.sources.tiles import tile_polygons, tile_pyramid
 
 N = 400
 ZOOM = 8
@@ -47,15 +48,24 @@ def test_assign_tiles_matches_numpy_oracle(spark, images):
 def test_spatial_join_pip_full_coverage(spark, images):
     """Every point falls in its own tile's rect ring (boundary counts)."""
     assigned = assign_tiles(images, ZOOM)
-    ring_x = F.array(*[F.lit(v).cast("long") for v in (0, 4096, 4096, 0, 0)])
-    ring_y = F.array(*[F.lit(v).cast("long") for v in (0, 0, 4096, 4096, 0)])
-    polys = (
-        assigned.select("zoom", "x", "y").distinct()
-        .withColumns({"extent": F.lit(4096), "ring_x": ring_x, "ring_y": ring_y})
-    )
+    polys = tile_polygons(assigned.select("zoom", "x", "y").distinct())
     joined = spatial_join_pip(assigned, polys)
     assert joined.count() == N
     assert joined.where(F.col("pip") == 0).count() == 0
+
+
+def test_tile_polygons_over_pyramid_grid(spark):
+    """tile_polygons decorates each key of a tile_pyramid grid with its
+    closed (0, 0)-(extent, extent) boundary ring."""
+    dim = tile_polygons(tile_pyramid(spark, 3, (1, 2), (5, 7)), extent=512)
+    assert dim.columns == ["zoom", "x", "y", "extent", "ring_x", "ring_y"]
+    rows = dim.collect()
+    assert sorted((r.x, r.y) for r in rows) == [
+        (x, y) for x in (1, 2) for y in (5, 6, 7)]
+    for r in rows:
+        assert (r.zoom, r.extent) == (3, 512)
+        assert r.ring_x == [0, 512, 512, 0, 0]
+        assert r.ring_y == [0, 0, 512, 512, 0]
 
 
 def test_spatial_join_pip_subtile_polygon(spark, images):
@@ -102,33 +112,101 @@ def test_spatial_join_pip_rows_mode_matches_broadcast(spark, images):
     assert len(a) > 0
 
 
+def test_spatial_join_pip_rows_mode_matches_broadcast_degenerate_ring(spark):
+    """On a dim mixing a degenerate ring (two distinct vertices, closed)
+    with a rect and an open triangle, the rows path (broadcast_dim=False,
+    one kernel call per Arrow batch) equals the broadcast path row for
+    row; the degenerate ring contains nothing, even on its segment."""
+    mk = "zoom int, x long, y long, extent int, ring_x array<long>, ring_y array<long>"
+    polys = spark.createDataFrame([
+        (4, 0, 0, 4096, [0, 4096, 0], [0, 0, 0]),
+        (4, 1, 0, 4096, [0, 4096, 4096, 0, 0], [0, 0, 4096, 4096, 0]),
+        (4, 2, 0, 4096, [0, 4096, 2048], [0, 0, 4096]),
+    ], mk)
+    pts = [(i, 4, x, 0, px, py) for i, (x, px, py) in enumerate([
+        (0, 5, 0), (0, 0, 0), (0, 4096, 0), (0, 100, 100),
+        (1, 0, 0), (1, 2048, 2048), (1, 4096, 17), (1, 5000, 5),
+        (2, 2048, 10), (2, 1024, 2048), (2, 0, 0), (2, 4000, 4000),
+        (3, 1, 1),
+    ])]
+    points = spark.createDataFrame(
+        pts, "image_id long, zoom int, x long, y long, px long, py long")
+    cols = ["image_id", "pip"]
+    a = sorted(map(tuple, spatial_join_pip(points, polys, broadcast_dim=True)
+                   .select(*cols).collect()))
+    b = sorted(map(tuple, spatial_join_pip(points, polys, broadcast_dim=False)
+                   .select(*cols).collect()))
+    assert a == b
+    assert a == [(4, -1), (5, 1), (6, -1), (8, 1), (9, -1), (10, -1)]
+
+
+def test_pip_rows_batch_reads_sliced_list_offsets():
+    """The rows-path batch function takes ring spans from the ListArray
+    offsets; a sliced batch (nonzero offset into the values buffer)
+    gives the one-ring reference's answer on each row's own ring."""
+    import pyarrow as pa
+    from pip_reference import point_in_polygon as reference
+
+    from mvtspark.functions.udfs import _pip_rows
+
+    rx = [[9, 9, 9], [0, 10, 0], [0, 10, 10, 0, 0], [0, 10, 5], [0, 10, 10, 0]]
+    ry = [[9, 9, 9], [0, 0, 0], [0, 0, 10, 10, 0], [0, 0, 10], [0, 0, 10, 10]]
+    px = [0, 5, 5, 5, 10]
+    py = [0, 0, 5, 0, 5]
+    t = pa.list_(pa.int64())
+    got = _pip_rows(
+        pa.array(px, pa.int64()).slice(1), pa.array(py, pa.int64()).slice(1),
+        pa.array(rx, t).slice(1), pa.array(ry, t).slice(1),
+    )
+    assert got.type == pa.int8()
+    exp = [int(reference([x], [y], np.array(a), np.array(b))[0])
+           for x, y, a, b in zip(px[1:], py[1:], rx[1:], ry[1:])]
+    assert got.to_pylist() == exp == [0, 1, -1, -1]
+
+
 def test_point_in_polygon_multi_matches_single():
-    """Vectorized multi-ring kernel ≡ per-ring kernel, uniform + ragged."""
+    """Multi-ring kernel ≡ the one-ring reference (tests/pip_reference.py)
+    on uniform and ragged ring sets: closed and open rings, a concave U,
+    degenerate rings (fewer than 3 vertices once the closing duplicate
+    is dropped) and an empty batch."""
     import numpy as np
+    from pip_reference import point_in_polygon as reference
 
     from mvtspark.kernels import geom
 
     rng = np.random.default_rng(7)
-    # ring 0: rect (closed); ring 1: triangle (closed) -> ragged sizes
-    rects = [
-        (np.array([0, 100, 100, 0, 0]), np.array([0, 0, 100, 100, 0])),
-        (np.array([10, 90, 50, 10]), np.array([10, 10, 90, 10])),
-        (np.array([20, 80, 80, 20, 20]), np.array([20, 20, 80, 80, 20])),
+    R = lambda xs, ys: (np.array(xs), np.array(ys))
+    rings = [
+        R([0, 100, 100, 0, 0], [0, 0, 100, 100, 0]),        # closed rect
+        R([10, 90, 50, 10], [10, 10, 90, 10]),              # closed triangle
+        R([20, 80, 80, 20, 20], [20, 20, 80, 80, 20]),      # closed rect
+        R([0, 100, 100, 0], [0, 0, 100, 100]),              # open rect
+        R([5, 95, 50], [5, 5, 95]),                         # open triangle
+        R([0, 100, 100, 80, 80, 20, 20, 0, 0],              # concave U
+          [0, 0, 100, 100, 20, 20, 100, 100, 0]),
+        R([0, 100, 0], [0, 0, 0]),                          # 2 distinct, closed
+        R([0, 100], [50, 50]),                              # open segment
+        R([40], [40]),                                      # one vertex
+        R([], []),                                          # empty ring
     ]
-    for use in ([0, 2], [0, 1, 2]):  # uniform-size path, ragged path
-        rings = [rects[i] for i in use]
-        offsets = np.r_[0, np.cumsum([r[0].size for r in rings])]
-        rxf = np.concatenate([r[0] for r in rings])
-        ryf = np.concatenate([r[1] for r in rings])
+    for use in ([0, 2], [3], [0, 1, 2], [5], [6], [0, 6], list(range(10))):
+        sub = [rings[i] for i in use]
+        offsets = np.r_[0, np.cumsum([r[0].size for r in sub])]
+        rxf = np.concatenate([r[0] for r in sub]).astype(np.int64)
+        ryf = np.concatenate([r[1] for r in sub]).astype(np.int64)
         n = 500
-        px = rng.integers(-10, 110, n)
-        py = rng.integers(-10, 110, n)
-        ri = rng.integers(0, len(rings), n)
+        px = rng.integers(-10, 111, n)
+        py = rng.integers(-10, 111, n)
+        ri = rng.integers(0, len(sub), n)
         got = geom.point_in_polygon_multi(px, py, ri, offsets, rxf, ryf)
-        for r, (rx, ry) in enumerate(rings):
+        assert got.dtype == np.int8
+        for r, (rx, ry) in enumerate(sub):
             sel = ri == r
-            exp = geom.point_in_polygon(px[sel], py[sel], rx, ry)
+            exp = reference(px[sel], py[sel], rx, ry)
             assert (got[sel] == exp).all(), f"ring {r} (set {use})"
+        none = np.array([], dtype=np.int64)
+        assert geom.point_in_polygon_multi(
+            none, none, none, offsets, rxf, ryf).shape == (0,)
 
 
 def test_clip_features_boundary_and_noop(spark):
