@@ -3145,17 +3145,32 @@ def poly_xor_components(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------- registry
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering is intentional: driver correctness sampling is
-    # time-budgeted and walks dict order. Round 5 fronts (a) the six
-    # NEW slab-sweep queries (general booleans, arbitrary offset,
-    # non-convex Minkowski, grouped fence union, open-path buffer,
-    # trapezoid result geometry) plus the queries whose code changed
-    # this round (snap cover slack, adaptive integer-div unpack,
-    # raster overrun guard, JFIF/4:2:0, snap top-k), then (b) the 52
-    # queries last driver-sampled in rounds 1-3 (none in
-    # CORRECTNESS_r04.json) so their hard signal is renewed on HEAD,
-    # then (c) the queries r4 already confirmed.
+    # Ordering is intentional: correctness sampling is time-budgeted
+    # and walks dict order. The front holds the 19 queries checked least
+    # recently, then raster_passthrough (the one query calling
+    # kernels.geom.encode_commands, the one-feature call of the batch
+    # encoder), then the rest in their earlier order.
     return {
+        "image_roundtrip_invariants": image_roundtrip_invariants,
+        "text_stats": text_stats,
+        "lang_id_counts": lang_id_counts,
+        "exact_dedup_prefix": exact_dedup_prefix,
+        "ngram_jaccard": ngram_jaccard,
+        "minhash_lsh": minhash_lsh,
+        "simhash_pairs": simhash_pairs,
+        "embedding_cosine_pairs": embedding_cosine_pairs,
+        "ann_topk": ann_topk,
+        "ann_topk_ivf": ann_topk_ivf,
+        "polygon_area_orientation": polygon_area_orientation,
+        "asof_join_clicks": asof_join_clicks,
+        "zigzag_varint_sql": zigzag_varint_sql,
+        "validate_tiles_corpus": validate_tiles_corpus,
+        "mvt_roundtrip_lines": mvt_roundtrip_lines,
+        "mvt_roundtrip_polys": mvt_roundtrip_polys,
+        "tile_parity_diff": tile_parity_diff,
+        "mvt_clip_roundtrip": mvt_clip_roundtrip,
+        "thumbnail_resize": thumbnail_resize,
+        "raster_passthrough": raster_passthrough,
         "poly_boolean_sweep": poly_boolean_sweep,
         "offset_sweep_square": offset_sweep_square,
         "minkowski_nonconvex_sum": minkowski_nonconvex_sum,
@@ -3173,7 +3188,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "offset_rectilinear_square": offset_rectilinear_square,
         "snap_nearest_segment": snap_nearest_segment,
         "adaptive_cover_events": adaptive_cover_events,
-        "raster_passthrough": raster_passthrough,
         "distinct_users_by_type": distinct_users_by_type,
         "events_hourly": events_hourly,
         "sessionize_events": sessionize_events,
@@ -3206,26 +3220,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mercator_roundtrip": mercator_roundtrip,
         "mvt_roundtrip": mvt_roundtrip,
         "flagship_mvt_pipeline": flagship_mvt_pipeline,
-        "image_roundtrip_invariants": image_roundtrip_invariants,
-        "text_stats": text_stats,
-        "lang_id_counts": lang_id_counts,
-        "exact_dedup_prefix": exact_dedup_prefix,
-        "ngram_jaccard": ngram_jaccard,
-        "minhash_lsh": minhash_lsh,
-        "simhash_pairs": simhash_pairs,
-        "embedding_cosine_pairs": embedding_cosine_pairs,
-        "ann_topk": ann_topk,
-        "ann_topk_ivf": ann_topk_ivf,
-        "polygon_area_orientation": polygon_area_orientation,
-        "asof_join_clicks": asof_join_clicks,
-        "zigzag_varint_sql": zigzag_varint_sql,
-        "validate_tiles_corpus": validate_tiles_corpus,
         "approx_distinct_users": approx_distinct_users,
-        "mvt_roundtrip_lines": mvt_roundtrip_lines,
-        "mvt_roundtrip_polys": mvt_roundtrip_polys,
-        "tile_parity_diff": tile_parity_diff,
-        "mvt_clip_roundtrip": mvt_clip_roundtrip,
-        "thumbnail_resize": thumbnail_resize,
         "frame_sample": frame_sample,
         "geojson_points": geojson_points,
         "streaming_geofence_alerts": streaming_geofence_alerts,

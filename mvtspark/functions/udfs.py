@@ -133,6 +133,8 @@ def broadcast_rings(spark, tile_polys):
     """
     import numpy as np
 
+    from mvtspark.kernels.geom import pip_coords
+
     # Arrow-native build: list-array offsets/values come out as flat
     # numpy arrays directly — zero per-ring Python, O(n) vectorized.
     tbl = tile_polys.select("zoom", "x", "y", "ring_x", "ring_y").toArrow()
@@ -147,8 +149,8 @@ def broadcast_rings(spark, tile_polys):
     rx = tbl.column("ring_x").combine_chunks()
     ry = tbl.column("ring_y").combine_chunks()
     offsets = rx.offsets.to_numpy().astype(np.int64)
-    rx_flat = rx.values.to_numpy().astype(np.int64)
-    ry_flat = ry.values.to_numpy().astype(np.int64)
+    rx_flat = pip_coords(rx.values.to_numpy())
+    ry_flat = pip_coords(ry.values.to_numpy())
     # sort only the KEY index; rings stay in arrival order and lookups
     # go through the permutation (sorted pos -> original ring index)
     perm = np.argsort(keys).astype(np.int64)
@@ -241,8 +243,7 @@ def pip_contains_bcast(
         if hit.any():
             hi = np.flatnonzero(hit)
             out[hi] = point_in_polygon_multi(
-                px_s.to_numpy(dtype=np.int64, copy=False)[hi],
-                py_s.to_numpy(dtype=np.int64, copy=False)[hi],
+                px_s.to_numpy()[hi], py_s.to_numpy()[hi],
                 perm[pos[hi]], offsets, rx_flat, ry_flat,
             )
         return pd.Series(out)

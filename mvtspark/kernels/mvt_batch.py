@@ -2,10 +2,14 @@
 batch in one call, so numpy and Arrow compute amortize across the whole
 batch instead of paying per tile, layer or feature.
 
-Byte-compatible with the per-tile oracle in kernels/mvt.py +
-kernels/geom.py (tests assert parity); semantics are the reference's
+Byte-compatible with the per-tile oracle in kernels/mvt.py (tests
+assert parity); semantics are the reference's
 (src/Geometry/DecodeGeometry.cs:31-91 command streams,
 src/VectorTileReader/VectorTileReader.cs:148-375 message layout).
+:func:`decode_geometries_batch` and :func:`encode_geometries_batch` are
+the one command-stream codec: kernels/geom.py's decode_commands and
+encode_commands are their one-feature calls, and the per-feature loops
+they replaced are the test-side reference in tests/geom_reference.py.
 
 Design:
 
@@ -105,42 +109,30 @@ def encode_geometries_batch(
     geom_type: np.ndarray,     # int64 per feature
 ) -> tuple[np.ndarray, np.ndarray]:
     """→ (command stream uint64 for the whole batch, per-feature int spans
-    (nfeat+1)). Mirrors kernels.geom.encode_commands exactly (points: one
-    multipoint MoveTo; polygons: closed rings in → ClosePath out)."""
+    (nfeat+1)). Points: one multipoint MoveTo (none for a point with no
+    vertex); polygons: closed rings in → ClosePath out; the cursor
+    carries across a feature's parts. The one encoder:
+    kernels.geom.encode_commands is its one-feature call."""
     nfeat = vert_off.size - 1
     if nfeat == 0:
         return np.empty(0, np.uint64), np.zeros(1, np.int64)
 
-    # ---- emission units: one per feature for points, one per part else
+    # ---- emission units, feature-contiguous: one per point feature (all
+    # its vertices), one per part else; a part ends where the next one
+    # starts, a feature's last part at the feature's vertex end
     is_pt_feat = geom_type == GEOM_POINT
     parts_per_feat = np.diff(feat_part_off)
+    part_end = np.roll(part_off, -1)
+    has = parts_per_feat > 0
+    part_end[feat_part_off[1:][has] - 1] = vert_off[1:][has]
     n_units_per_feat = np.where(is_pt_feat, 1, parts_per_feat)
     unit_feat = np.repeat(np.arange(nfeat), n_units_per_feat)
-    n_units = unit_feat.size
-    unit_off_in_feat = np.arange(n_units) - np.repeat(
-        np.concatenate(([0], np.cumsum(n_units_per_feat)))[:-1], n_units_per_feat
-    )
-    # unit vertex spans
-    u_start = np.where(
-        is_pt_feat[unit_feat],
-        vert_off[unit_feat],
-        # part start: part_off[feat_part_off[f] + k]
-        part_off[
-            np.minimum(
-                feat_part_off[unit_feat] + unit_off_in_feat, feat_part_off[-1] - 0
-            ).clip(0, part_off.size - 1)
-        ] if part_off.size else vert_off[unit_feat],
-    )
-    part_idx = feat_part_off[unit_feat] + unit_off_in_feat
-    if part_off.size:
-        next_bound = np.where(
-            part_idx + 1 < feat_part_off[unit_feat + 1],
-            part_off[np.minimum(part_idx + 1, part_off.size - 1)],
-            vert_off[unit_feat + 1],
-        )
-    else:
-        next_bound = vert_off[unit_feat + 1]
-    u_end = np.where(is_pt_feat[unit_feat], vert_off[unit_feat + 1], next_bound)
+    pt = is_pt_feat[unit_feat]
+    first_unit = np.cumsum(n_units_per_feat) - n_units_per_feat
+    pidx = np.where(pt, part_off.size, feat_part_off[unit_feat]
+                    + np.arange(unit_feat.size) - first_unit[unit_feat])
+    u_start = np.where(pt, vert_off[unit_feat], np.append(part_off, 0)[pidx])
+    u_end = np.where(pt, vert_off[unit_feat + 1], np.append(part_end, 0)[pidx])
 
     u_gtype = geom_type[unit_feat]
     is_poly = u_gtype == GEOM_POLYGON
@@ -167,8 +159,7 @@ def encode_geometries_batch(
     v_feat = unit_feat[v_unit]
     dx = np.diff(vx, prepend=0)
     dy = np.diff(vy, prepend=0)
-    feat_first = np.ones(nv, dtype=bool)
-    feat_first[1:] = v_feat[1:] != v_feat[:-1]
+    feat_first = _firsts(v_feat)
     dx[feat_first] = vx[feat_first]
     dy[feat_first] = vy[feat_first]
     zx = zigzag_encode(dx).astype(np.uint64)
@@ -832,10 +823,12 @@ def decode_geometries_batch(
     """Decode command streams for nfeat features at once.
 
     Returns (xs, ys, part_off_global, feat_part_off, faults) in the
-    closed-ring convention of kernels.geom.decode_commands. ``faults``
-    maps each feature whose stream decode_commands would reject to its
-    message; such a feature decodes to no parts, so the caller can drop
-    its tile instead of losing the whole batch.
+    closed-ring convention (a ClosePath re-appends its part's first
+    vertex). ``faults`` maps each feature whose stream is invalid
+    (unknown command, overrun, ClosePath with no open part or on an
+    empty part) to its message; such a feature decodes to no parts, so
+    the caller can drop its tile instead of losing the whole batch. The
+    one decoder: kernels.geom.decode_commands is its one-feature call.
     """
     nfeat = feat_span.size - 1
     g = np.asarray(geom_streams, dtype=np.uint64)
@@ -887,20 +880,15 @@ def decode_geometries_batch(
     vals = _gather_concat(g, up[pv_units] + 1, 2 * pcounts).astype(np.int64)
     dx = zigzag_decode(vals[0::2])
     dy = zigzag_decode(vals[1::2])
-    nv = dx.size
-    v_feat = np.repeat(uf[pv_units], pcounts)
-    # per-feature cumsum (reset at feature starts)
-    cx = np.cumsum(dx)
-    cy = np.cumsum(dy)
-    base_idx = np.flatnonzero(_firsts(v_feat))
-    run = np.repeat(np.arange(base_idx.size), np.diff(np.append(base_idx, nv)))
-    prev = base_idx - 1
-    carry_x = np.where(prev[run] >= 0, cx[np.maximum(prev[run], 0)], 0)
-    carry_y = np.where(prev[run] >= 0, cy[np.maximum(prev[run], 0)], 0)
-    xs_all = cx - carry_x
-    ys_all = cy - carry_y
+    # per-feature cursor: the running sum less its value before the
+    # feature's first vertex
+    first = _firsts(np.repeat(uf[pv_units], pcounts))
+    start, run = np.flatnonzero(first), np.cumsum(first) - 1
+    cx, cy = np.cumsum(dx), np.cumsum(dy)
+    xs_all = cx - (cx[start] - dx[start])[run]
+    ys_all = cy - (cy[start] - dy[start])[run]
 
-    # --- parts (mirror decode_commands): a ClosePath closes its part with
+    # --- parts: a ClosePath closes its part with
     # an appended first vertex; each part runs until the next one opens or
     # its feature ends
     w0 = np.cumsum(un) - un  # first vertex of each unit

@@ -11,9 +11,10 @@ the largest perpendicular distance iff
     cross^2 > eps^2 * |AB|^2        (cross = (B-A) × (P-A))
 
 — all int64 (|cross| <= 2*4096^2, squared < 2^51), so the engine, the
-naive recursive twin, and the DuckDB recursive-CTE oracle agree
-bit-for-bit with no float distances anywhere. Ties (several interior
-points at the max) break to the LOWEST index on every implementation.
+naive recursive twin (tests/simplify_reference.py) and the DuckDB
+recursive-CTE oracle agree bit-for-bit with no float distances
+anywhere. Ties (several interior points at the max) break to the
+LOWEST index on every implementation.
 
 ``dp_mask_batch`` is the engine path: ALL parts of an Arrow batch are
 simplified together with a flat worklist of (start, end) segment pairs
@@ -37,38 +38,6 @@ from __future__ import annotations
 import numpy as np
 
 _I64MAX = np.iinfo(np.int64).max
-
-
-def dp_mask_naive(xs: np.ndarray, ys: np.ndarray, eps: int) -> np.ndarray:
-    """Textbook recursive DP over ONE part — the independent cross-check
-    twin for tests (the engine never calls this)."""
-    xs = np.asarray(xs, dtype=np.int64)
-    ys = np.asarray(ys, dtype=np.int64)
-    n = len(xs)
-    keep = np.zeros(n, dtype=bool)
-    if n == 0:
-        return keep
-    keep[0] = keep[-1] = True
-    eps2 = int(eps) * int(eps)
-
-    def rec(a: int, b: int) -> None:
-        if b - a < 2:
-            return
-        ax, ay, bx, by = int(xs[a]), int(ys[a]), int(xs[b]), int(ys[b])
-        dx, dy = bx - ax, by - ay
-        best, best_i = -1, -1
-        for i in range(a + 1, b):
-            cr = dx * (int(ys[i]) - ay) - dy * (int(xs[i]) - ax)
-            c2 = cr * cr
-            if c2 > best:
-                best, best_i = c2, i
-        if best > eps2 * (dx * dx + dy * dy):
-            keep[best_i] = True
-            rec(a, best_i)
-            rec(best_i, b)
-
-    rec(0, n - 1)
-    return keep
 
 
 def dp_mask_batch(

@@ -35,14 +35,6 @@ _TM = np.uint64(TOKEN_MULT)
 _SM = np.uint64(SHINGLE_MULT)
 
 
-def token_hash_scalar(w: str) -> int:
-    """Reference scalar form (tests + documentation of the contract)."""
-    h = TOKEN_SEED
-    for c in w:
-        h = (h * TOKEN_MULT + ord(c)) % U64
-    return h
-
-
 def _pow_table(base: np.uint64, n: int) -> np.ndarray:
     with np.errstate(over="ignore"):  # uint64 wrap IS the mod-2^64 math
         p = np.empty(n + 1, dtype=np.uint64)

@@ -99,6 +99,31 @@ def _epoch_committed(
     )
 
 
+def _epoch_writer(build, out_path: str, checkpoint_path: str, job_id: str,
+                  lineage: str):
+    """The exactly-once foreachBatch function over ``build`` (micro-batch
+    frame → the frame to write): skip an epoch whose lineage marker
+    exists, else cache ``build(df)``, overwrite ``epoch=<id>/`` under
+    ``out_path``, write the marker last and unpersist."""
+    from ..sources.checkpoint import write_stage_checkpoint
+
+    def _batch(df: DataFrame, epoch_id: int) -> None:
+        stage = f"epoch={epoch_id}"
+        if _epoch_committed(df.sparkSession, checkpoint_path, job_id, stage):
+            return  # replay of a committed epoch: exactly-once no-op
+        out = build(df).cache()
+        try:
+            out.write.mode("overwrite").parquet(os.path.join(out_path, stage))
+            write_stage_checkpoint(
+                out, checkpoint_path, job_id=job_id,
+                stage=stage, lineage=f"{lineage} epoch {epoch_id}",
+            )
+        finally:
+            out.unpersist()
+
+    return _batch
+
+
 def make_epoch_batch_writer(
     zoom: int,
     tiles_path: str,
@@ -136,27 +161,13 @@ def make_epoch_batch_writer(
     Exposed separately from the stream wiring so tests can drive the
     crash-replay matrix directly (tests/test_streaming.py).
     """
-    from ..sources.checkpoint import write_stage_checkpoint
     from ..sources.tiles import encode_tiles, point_features
 
-    def _batch(df: DataFrame, epoch_id: int) -> None:
-        stage = f"epoch={epoch_id}"
-        if _epoch_committed(df.sparkSession, checkpoint_path, job_id, stage):
-            return  # replay of a committed epoch: exactly-once no-op
+    def _tiles(df: DataFrame) -> DataFrame:
         assigned = assign_tiles(df, zoom=zoom).withColumn("extent", F.lit(4096))
-        tiles = encode_tiles(point_features(assigned), layer_name="images").cache()
-        try:
-            tiles.write.mode("overwrite").parquet(
-                os.path.join(tiles_path, stage)
-            )
-            write_stage_checkpoint(
-                tiles, checkpoint_path, job_id=job_id,
-                stage=stage, lineage=f"stream epoch {epoch_id}",
-            )
-        finally:
-            tiles.unpersist()
+        return encode_tiles(point_features(assigned), layer_name="images")
 
-    return _batch
+    return _epoch_writer(_tiles, tiles_path, checkpoint_path, job_id, "stream")
 
 
 def stream_encode_sink(
@@ -203,32 +214,17 @@ def make_counts_maintenance_writer(
     semantically.
     """
     from ..operators.incremental import tile_count_deltas
-    from ..sources.checkpoint import write_stage_checkpoint
 
-    def _batch(df: DataFrame, epoch_id: int) -> None:
-        stage = f"epoch={epoch_id}"
-        if _epoch_committed(df.sparkSession, checkpoint_path, job_id, stage):
-            return
-        assigned = assign_tiles(df, zoom=zoom)
-        changes = assigned.select(
+    def _deltas(df: DataFrame) -> DataFrame:
+        changes = assign_tiles(df, zoom=zoom).select(
             F.lit(None).cast("int").alias("old_x"),
             F.lit(None).cast("int").alias("old_y"),
             F.col("x").cast("int").alias("new_x"),
             F.col("y").cast("int").alias("new_y"),
         )
-        deltas = tile_count_deltas(changes, zoom, levels).cache()
-        try:
-            deltas.write.mode("overwrite").parquet(
-                os.path.join(counts_path, stage)
-            )
-            write_stage_checkpoint(
-                deltas, checkpoint_path, job_id=job_id,
-                stage=stage, lineage=f"counts epoch {epoch_id}",
-            )
-        finally:
-            deltas.unpersist()
+        return tile_count_deltas(changes, zoom, levels)
 
-    return _batch
+    return _epoch_writer(_deltas, counts_path, checkpoint_path, job_id, "counts")
 
 
 def read_stream_tiles(

@@ -1,5 +1,6 @@
 """Dense and edge-case parity of the batch MVT codec (kernels/mvt_batch.py)
-against the per-tile oracle (kernels/mvt.py + kernels/geom.py).
+against the per-tile oracle (kernels/mvt.py, with the per-feature
+command-stream loops of tests/geom_reference.py).
 
 The decode batch holds a layer of 2,400 point features, 1,200 one-feature
 tiles (points, lines, two-ring polygons, some with a raster payload),
@@ -8,13 +9,21 @@ sint, float, double, bool and NaN values, a null blob and an empty blob.
 In every mode the batch decode must give the rows the oracle gives tile
 by tile. The encode batch holds a tile of 2,400 points and 1,000
 one-feature tiles with the same kinds of props; it must give the bytes
-mvt.encode_tile gives tile by tile."""
+mvt.encode_tile gives tile by tile.
+
+The one-feature codec calls (kernels/geom.py::decode_commands and
+encode_commands) must equal the reference loops on random command streams
+(every fault kind) and ragged feature sets, apart from two documented
+no-vertex cases where they give what decode_tiles/encode_tiles give."""
 
 import json
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
+import geom_reference as ref
 from mvtspark.kernels import geom, mvt, mvt_batch
 
 NAN = float("nan")  # one object, as json.loads hands out one NaN object
@@ -71,7 +80,7 @@ def _oracle(blobs, validate, layers, typed, raster):
             if layers is not None and name not in layers:
                 continue
             for f in lyr.features:
-                xs, ys, off = geom.decode_commands(f.geometry, f.geom_type)
+                xs, ys, off = ref.decode_commands(f.geometry, f.geom_type)
                 row = (t, name, lyr.extent, int(f.id), int(f.geom_type), off.tolist(),
                        xs.tolist(), ys.tolist(), json.dumps(lyr.properties(f), default=str))
                 if typed:
@@ -164,9 +173,118 @@ def test_batch_encode_matches_encode_tile():
                     vidx[tv] = len(values)
                     values.append(tv)
                 tags += [kidx[k], vidx[tv]]
-            cmds = geom.encode_commands(px[i:i + 1], py[i:i + 1], np.array([0, 1]), 1)
+            cmds = ref.encode_commands(px[i:i + 1], py[i:i + 1], np.array([0, 1]), 1)
             feats.append(_feature(i, 1, cmds, tags))
         expected.append(mvt.encode_tile([mvt.Layer(
             name="pts", version=2, extent=int(extents[t]), keys=keys,
             values=values, features=feats)]))
     _assert_same(blobs.to_pylist(), expected)
+
+
+def _outcome(fn, *args):
+    """(lists of the outputs) or the GeometryError message of one call."""
+    try:
+        out = fn(*args)
+    except geom.GeometryError as e:
+        return str(e)
+    return [a.tolist() for a in out] if isinstance(out, tuple) else out.tolist()
+
+
+@st.composite
+def _streams(draw):
+    """A command stream of MoveTo/LineTo/ClosePath headers (counts 0-3)
+    with an unknown command now and then and possibly cut short, so every
+    fault kind occurs: unknown command, overrun, ClosePath with no open
+    part and ClosePath on an empty part."""
+    out = []
+    for _ in range(draw(st.integers(0, 6))):
+        cmd = draw(st.sampled_from([1, 1, 1, 2, 2, 2, 7, 7, 0, 3]))
+        count = draw(st.integers(0, 3))
+        out.append((count << 3) | cmd)
+        if cmd in (1, 2):
+            out += draw(st.lists(st.integers(0, 2**20), min_size=2 * count,
+                                 max_size=2 * count))
+    cut = draw(st.integers(0, 2))
+    return out[:len(out) - cut] if draw(st.booleans()) else out
+
+
+@given(_streams())
+@settings(max_examples=400, deadline=None)
+def test_decode_commands_matches_reference(stream):
+    got = _outcome(geom.decode_commands, stream, geom.GEOM_POLYGON)
+    exp = _outcome(ref.decode_commands, stream, geom.GEOM_POLYGON)
+    if exp == [[], [], [0]] and got != exp:
+        # no vertex at all: the batch keeps the opened (empty) parts
+        assert got[:2] == [[], []] and set(got[2]) == {0}, stream
+    else:
+        assert got == exp, stream
+
+
+@st.composite
+def _features(draw):
+    """One feature of geom type 0-3: ragged parts of 0-4 vertices;
+    polygon rings closed except now and then, so the closure fault
+    occurs too."""
+    gt = draw(st.integers(0, 3))
+    xs, ys, off = [], [], [0]
+    coord = st.integers(-2**20, 2**20)
+    for _ in range(draw(st.integers(0, 3))):
+        n = draw(st.integers(0, 4))
+        px = draw(st.lists(coord, min_size=n, max_size=n))
+        py = draw(st.lists(coord, min_size=n, max_size=n))
+        if gt == geom.GEOM_POLYGON and px and draw(st.integers(0, 9)):
+            px, py = px + px[:1], py + py[:1]
+        xs += px
+        ys += py
+        off.append(len(xs))
+    return (np.array(xs, np.int64), np.array(ys, np.int64),
+            np.array(off, np.int64), gt)
+
+
+@given(st.lists(_features(), min_size=1, max_size=6))
+@settings(max_examples=300, deadline=None)
+def test_encode_commands_matches_reference(feats):
+    streams = []
+    for xs, ys, off, gt in feats:
+        got = _outcome(geom.encode_commands, xs, ys, off, gt)
+        exp = _outcome(ref.encode_commands, xs, ys, off, gt)
+        if gt == geom.GEOM_POINT and xs.size == 0:
+            assert exp == [1] and got == []  # an empty point emits nothing
+        else:
+            assert got == exp, (xs, ys, off, gt)
+        streams.append(got)
+    if any(isinstance(s, str) for s in streams):
+        return
+    # the whole ragged set in one batch call: the same per-feature streams
+    vert_off = np.r_[0, np.cumsum([f[0].size for f in feats])]
+    part_off = np.concatenate([f[2][:-1] + v for f, v in zip(feats, vert_off)])
+    stream, span = mvt_batch.encode_geometries_batch(
+        np.concatenate([f[0] for f in feats]), np.concatenate([f[1] for f in feats]),
+        vert_off, part_off.astype(np.int64),
+        np.r_[0, np.cumsum([f[2].size - 1 for f in feats])],
+        np.array([f[3] for f in feats], np.int64))
+    assert [stream[a:b].tolist() for a, b in zip(span[:-1], span[1:])] == streams
+
+
+def test_no_vertex_cases_match_decode_and_encode_tiles(spark):
+    """decode_commands([MoveTo(0)]) keeps its one empty part, as a
+    decode_tiles row does, and a point feature with no vertex encodes to
+    no command at all, as encode_tiles writes it."""
+    from mvtspark.sources.tiles import decode_tiles, encode_tiles
+
+    xs, ys, off = geom.decode_commands([1], geom.GEOM_POINT)
+    assert (xs.tolist(), ys.tolist(), off.tolist()) == ([], [], [0, 0])
+    blob = mvt.encode_tile([mvt.Layer(name="l", version=2, keys=[], values=[],
+                                      features=[_feature(1, 1, [1], [])])])
+    row = decode_tiles(spark.createDataFrame(
+        [(0, 0, 0, bytearray(blob))], "zoom int, x int, y int, mvt binary")).first()
+    assert (list(row.xs), list(row.ys), list(row.part_offsets)) == ([], [], off.tolist())
+
+    assert geom.encode_commands([], [], [0, 0], geom.GEOM_POINT).tolist() == []
+    feats = spark.createDataFrame(
+        [(0, 0, 0, 4096, 1, 1, [0, 0], [], [], None)],
+        "zoom int, x int, y int, extent int, feature_id long, geom_type int, "
+        "part_offsets array<int>, xs array<long>, ys array<long>, props string")
+    (tile,) = encode_tiles(feats, layer_name="l").collect()
+    (f,) = mvt.decode_tile(bytes(tile.mvt))["l"].features
+    assert f.geometry.tolist() == []

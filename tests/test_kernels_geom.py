@@ -150,6 +150,26 @@ def test_point_in_polygon_enforces_int64_bound():
         geom.point_in_polygon([0], [0], ring_x * 2, ring_y)
 
 
+def test_point_in_polygon_rejects_non_integral_coordinates():
+    """A float coordinate used to be truncated toward zero: (0.5, 5) read
+    as the square's left edge (-1), and the ring (0.9, 0.9) ... (0.9, 10)
+    read as (0, 0) ... (0, 10), putting (0, 0) on its boundary. Both
+    raise now, as do NaN and infinities; integer-valued floats pass."""
+    sq_x, sq_y = [0, 10, 10, 0, 0], [0, 0, 10, 10, 0]
+    with pytest.raises(ValueError, match="finite integers"):
+        geom.point_in_polygon([0.5], [5], sq_x, sq_y)
+    ring_x = np.array([0.9, 10, 10, 0.9])
+    ring_y = np.array([0.9, 0.9, 10, 10])
+    with pytest.raises(ValueError, match="finite integers"):
+        geom.point_in_polygon([0], [0], ring_x, ring_y)
+    for bad in (np.nan, np.inf):
+        with pytest.raises(ValueError, match="finite integers"):
+            geom.point_in_polygon_multi([0], [bad], [0], [0, 5], sq_x, sq_y)
+    assert geom.point_in_polygon(
+        [5.0, 0.0, 15.0], [5.0, 5.0, 5.0], np.array(sq_x, float), np.array(sq_y, float)
+    ).tolist() == [1, -1, 0]
+
+
 @st.composite
 def _ragged_rings(draw):
     """A ring set of mixed sizes (open or closed, possibly degenerate or

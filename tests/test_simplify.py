@@ -3,7 +3,8 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from mvtspark.kernels.simplify import dp_mask_batch, dp_mask_naive
+from mvtspark.kernels.simplify import dp_mask_batch
+from simplify_reference import dp_mask_naive
 
 
 def _rand_parts(seed=7, n=120):

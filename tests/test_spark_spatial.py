@@ -364,3 +364,18 @@ def test_connected_components_chain_and_singleton(spark):
         1: (1, 4), 2: (1, 4), 3: (1, 4), 7: (1, 4),
         10: (10, 2), 11: (10, 2),
     }
+
+
+def test_broadcast_rings_rejects_non_integral_vertices(spark):
+    """The broadcast build used to truncate double ring vertices to
+    int64; a non-integral vertex raises now, an integer-valued one passes."""
+    from mvtspark.functions.udfs import broadcast_rings
+
+    schema = "zoom int, x long, y long, ring_x array<double>, ring_y array<double>"
+    ok = spark.createDataFrame(
+        [(4, 1, 1, [0.0, 10.0, 10.0, 0.0, 0.0], [0.0, 0.0, 10.0, 10.0, 0.0])], schema)
+    assert broadcast_rings(spark, ok).kind == "rect"
+    bad = spark.createDataFrame(
+        [(4, 1, 1, [0.9, 10.0, 10.0, 0.9, 0.9], [0.9, 0.9, 10.0, 10.0, 0.9])], schema)
+    with pytest.raises(ValueError, match="finite integers"):
+        broadcast_rings(spark, bad)

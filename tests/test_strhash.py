@@ -1,5 +1,5 @@
 """kernels/strhash parity tests: the vectorized batch hashers must match
-the scalar contract (token_hash_scalar / explicit folds) on every edge
+the scalar contract (tests/strhash_reference.py / explicit folds) on every edge
 the tokenizer can hit — unicode whitespace classes, empty/whitespace-only
 docs, astral-plane code points beyond the whitespace table, and short
 docs below the shingle width. DuckDB reproducibility is covered by the
@@ -16,9 +16,9 @@ from mvtspark.kernels.strhash import (
     U64,
     shingle_hashes_batch,
     simhash_batch,
-    token_hash_scalar,
     token_hashes_batch,
 )
+from strhash_reference import token_hash_scalar
 
 EDGE_TEXTS = [
     "Hello World foo",
