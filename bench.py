@@ -108,59 +108,47 @@ def gen_points(spark, n: int, path: str) -> None:
 _RINGS_CACHE: dict = {}
 
 
-def spatial_job(spark, points_path: str):
-    """The north-star job: tile assignment (D19, native) → broadcast PIP
-    spatial join (J4) → salted per-tile aggregation (A7). Returns
-    (n_rows_in, n_tiles_out).
+def _tile_counts(spark, points, points_path: str):
+    """The shared tail of both spatial jobs: :func:`tile_plan` counts of
+    ``points`` at z10 against the ring catalog written next to
+    ``points_path``. Returns (n_rows_in, n_tiles_out).
 
-    The ring broadcast (static tile catalog) is built once per process
-    and reused across runs — the steady-state shape of a long job; the
-    first (warm-up, discarded) run pays the build."""
+    The ring broadcast (static tile catalog) is built once per process,
+    keyed by the catalog path, and reused across runs — the steady-state
+    shape of a long job; the first (warm-up, discarded) run pays the
+    build."""
     from pyspark.sql import functions as F
 
     from mvtspark.functions.udfs import broadcast_rings
-    from mvtspark.operators.spatial import (
-        assign_tiles, salted_tile_counts, spatial_join_pip,
-    )
+    from mvtspark.plans.flagship import tile_plan
 
-    pts = spark.read.parquet(points_path)
-    assigned = assign_tiles(pts, zoom=10)
-    polys = spark.read.parquet(points_path.rstrip("/") + "_polys")
-    rings = _RINGS_CACHE.get(points_path)
+    polys_path = points_path.rstrip("/") + "_polys"
+    rings = _RINGS_CACHE.get(polys_path)
     if rings is None:
-        rings = _RINGS_CACHE[points_path] = broadcast_rings(spark, polys)
-    joined = spatial_join_pip(
-        assigned, polys, broadcast_dim=True, rings=rings, attach_payload=False
-    )
-    counts = salted_tile_counts(joined, salt_buckets=16)
-    row = counts.agg(
+        rings = _RINGS_CACHE[polys_path] = broadcast_rings(
+            spark, spark.read.parquet(polys_path))
+    row = tile_plan(points, zoom=10, rings=rings).counts.agg(
         F.sum("image_count").alias("rows"), F.count(F.lit(1)).alias("tiles")
     ).collect()[0]
     return int(row.rows), int(row.tiles)
 
 
+def spatial_job(spark, points_path: str):
+    """The north-star job: tile assignment (D19, native) → broadcast PIP
+    spatial join (J4) → salted per-tile aggregation (A7) over the points
+    parquet."""
+    return _tile_counts(spark, spark.read.parquet(points_path), points_path)
+
+
 def spatial_core_job(spark, points_path: str, n: int):
     """Compute-bound variant of the north-star job: identical operator
-    pipeline (synth → D19 assign → J4 broadcast PIP → A7 salted agg) but
-    the fact rows are synthesized inside the map tasks instead of read
-    from parquet — isolating the ENGINE's scaling from the single-box
-    storage/memory-bus ceiling (see BENCH.md saturation analysis). Only the ring
-    catalog comes from disk (built once, cached)."""
-    from pyspark.sql import functions as F
-
-    from mvtspark.functions.udfs import broadcast_rings
-    from mvtspark.operators.spatial import (
-        assign_tiles, salted_tile_counts, spatial_join_pip,
-    )
-    polys_path = points_path.rstrip("/") + "_polys"
-    rings = _RINGS_CACHE.get(polys_path)
-    if rings is None:
-        polys = spark.read.parquet(polys_path)
-        rings = _RINGS_CACHE[polys_path] = broadcast_rings(spark, polys)
+    pipeline, but the fact rows are synthesized inside the map tasks
+    instead of read from parquet — isolating the ENGINE's scaling from
+    the single-box storage/memory-bus ceiling (see BENCH.md saturation
+    analysis). Only the ring catalog comes from disk."""
     cores = spark.sparkContext.defaultParallelism
 
     def _geo(batches):
-        import numpy as np
         import pandas as pd
 
         from mvtspark.kernels.image import synth_latlng
@@ -175,15 +163,7 @@ def spatial_core_job(spark, points_path: str, n: int):
     pts = spark.range(0, n, numPartitions=cores * 8).mapInPandas(
         _geo, schema="image_id long, lat double, lng double"
     )
-    assigned = assign_tiles(pts, zoom=10)
-    joined = spatial_join_pip(
-        assigned, None, broadcast_dim=True, rings=rings, attach_payload=False
-    )
-    counts = salted_tile_counts(joined, salt_buckets=16)
-    row = counts.agg(
-        F.sum("image_count").alias("rows"), F.count(F.lit(1)).alias("tiles")
-    ).collect()[0]
-    return int(row.rows), int(row.tiles)
+    return _tile_counts(spark, pts, points_path)
 
 
 _REF_TILES_CACHE: dict = {}

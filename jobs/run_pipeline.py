@@ -22,13 +22,16 @@ Local (sandbox) smoke:
     python jobs/run_pipeline.py --images synth:20000 --zoom 8 \
         --tiles-out /tmp/mvt_out/tiles --checkpoint /tmp/mvt_out/ckpt
 
-Stages (each records per-partition lineage + row counts in the
-checkpoint table; --resume anti-joins planned tiles against completed
-ones so a killed job restarts at partition granularity):
+The plan is ``mvtspark.plans.flagship.tile_plan``, the builder the
+flagship and ``bench.py`` share:
   1. assign   — native Web-Mercator tile assignment (D19, codegen)
   2. join     — broadcast PIP spatial join against tile rings (J4)
   3. agg      — salted two-stage per-tile counts (A7)
   4. encode   — per-(zoom,x,y) MVT protobuf encode (S9) + decode-parity
+The agg and encode stages record per-partition lineage + row counts in
+the checkpoint table; --resume anti-joins the assigned rows against the
+tiles the killed run's encode stage recorded, so it restarts at tile
+granularity.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ import argparse
 import os
 import sys
 import uuid
+from functools import partial
 
 # local fallback: on a cluster --py-files ships mvtspark; running the file
 # directly needs the repo root on the DRIVER's sys.path and — because
@@ -52,7 +56,7 @@ from pyspark.sql import SparkSession, functions as F
 from mvtspark.session import PYTHON_DAEMON_CONF
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--images", required=True,
                     help="parquet/iceberg path, or synth:N for the generator")
@@ -63,21 +67,17 @@ def main() -> None:
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--job-id", default=None)
     ap.add_argument("--resume", action="store_true")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     spark = (SparkSession.builder.appName("mvtspark-pipeline")
              .config(*PYTHON_DAEMON_CONF).getOrCreate())
 
-    from mvtspark.operators.spatial import (
-        assign_tiles, salted_tile_counts, spatial_join_pip,
-    )
+    from mvtspark.plans.flagship import tile_plan
     from mvtspark.sources.checkpoint import (
         pending_work, read_checkpoint, write_stage_checkpoint,
     )
     from mvtspark.sources.images import synth_points
-    from mvtspark.sources.tiles import (
-        decode_tiles, encode_tiles, point_features, tile_polygons,
-    )
+    from mvtspark.sources.tiles import decode_tiles
 
     if args.resume and not args.job_id:
         # a fresh random id would match NO checkpoint rows: the anti-join
@@ -96,26 +96,19 @@ def main() -> None:
             else reader.parquet(args.images)
         )
 
-    assigned = assign_tiles(images, zoom=args.zoom, extent=args.extent)
-
+    pending = None
     if args.resume:
-        ckpt = read_checkpoint(spark, args.checkpoint)
-        planned = assigned.select("zoom", "x", "y").distinct()
-        todo = pending_work(planned, ckpt, job_id=job_id, stage="encode",
-                            keys=("zoom", "x", "y"))
-        assigned = assigned.join(F.broadcast(todo), ["zoom", "x", "y"], "left_semi")
+        pending = partial(pending_work,
+                          checkpoint=read_checkpoint(spark, args.checkpoint),
+                          job_id=job_id, stage="encode", keys=("zoom", "x", "y"))
+    plan = tile_plan(images, args.zoom, extent=args.extent,
+                     salt_buckets=args.salt_buckets, pending=pending)
 
-    polys = tile_polygons(assigned.select("zoom", "x", "y").distinct(),
-                          extent=args.extent)
-    joined = spatial_join_pip(assigned, polys, broadcast_dim=True)
-
-    counts = salted_tile_counts(joined, salt_buckets=args.salt_buckets)
-    write_stage_checkpoint(counts, args.checkpoint, job_id=job_id,
+    write_stage_checkpoint(plan.counts, args.checkpoint, job_id=job_id,
                            stage="agg", lineage="salted_tile_counts",
                            part_cols=("zoom",))
 
-    tiles = encode_tiles(point_features(joined), layer_name="images")
-    tiles.write.mode("append").parquet(args.tiles_out)
+    plan.tiles.write.mode("append").parquet(args.tiles_out)
 
     written = spark.read.parquet(args.tiles_out)
     write_stage_checkpoint(written, args.checkpoint, job_id=job_id,

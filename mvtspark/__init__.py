@@ -9,7 +9,8 @@ capabilities of mapbox/vector-tile-cs, re-expressed Spark-first:
                  checkpoint/lineage table)
 - ``operators/`` relational/spatial operators (cell join, PIP refine,
                  kNN ring join, salted agg, dedup, ANN, text analysis)
-- ``plans/``     end-to-end pipelines (flagship images→tiles→MVT)
+- ``plans/``     the north-star plan builder ``tile_plan`` (assign → PIP
+                 join → salted counts → MVT encode) and the flagship
 - ``streaming/`` Structured Streaming wrappers over the same kernels
 
 Reference parity citations use ``/root/reference`` file:line form, e.g.

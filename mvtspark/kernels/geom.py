@@ -82,17 +82,17 @@ def encode_commands(
     (uint32): the one-feature call of
     :func:`mvtspark.kernels.mvt_batch.encode_geometries_batch`.
 
-    Accepts parts in the decoded convention (polygon rings explicitly
-    closed, first == last); drops the duplicate closing vertex and emits
-    ClosePath, so encode∘decode round-trips byte-exactly.
+    Accepts parts in the decoded convention (``offsets`` = the part
+    starts, then len(xs); ys as long as xs, else ValueError; polygon
+    rings explicitly closed, first == last); drops the duplicate closing
+    vertex and emits ClosePath, so encode∘decode round-trips byte-exactly.
     """
     from .mvt_batch import encode_geometries_batch
 
-    xs = np.asarray(xs, dtype=np.int64)
     offsets = np.asarray(offsets, dtype=np.int64)
     stream, _ = encode_geometries_batch(
-        xs, np.asarray(ys, dtype=np.int64),
-        np.array([0, xs.size], dtype=np.int64), offsets[:-1],
+        np.asarray(xs, dtype=np.int64), np.asarray(ys, dtype=np.int64),
+        np.array([0, offsets[-1]], dtype=np.int64), offsets[:-1],
         np.array([0, offsets.size - 1], dtype=np.int64),
         np.array([geom_type], dtype=np.int64))
     return stream.astype(np.uint32)

@@ -112,10 +112,24 @@ def encode_geometries_batch(
     (nfeat+1)). Points: one multipoint MoveTo (none for a point with no
     vertex); polygons: closed rings in → ClosePath out; the cursor
     carries across a feature's parts. The one encoder:
-    kernels.geom.encode_commands is its one-feature call."""
+    kernels.geom.encode_commands is its one-feature call.
+
+    Input contract (ValueError otherwise): xs and ys hold exactly the
+    vertices the feature spans cover, and each feature's part starts are
+    monotone inside its own vertex span."""
     nfeat = vert_off.size - 1
     if nfeat == 0:
         return np.empty(0, np.uint64), np.zeros(1, np.int64)
+    if not xs.size == ys.size == vert_off[-1]:
+        raise ValueError(
+            f"{xs.size} xs and {ys.size} ys for {vert_off[-1]} feature vertices")
+    part_feat = np.repeat(np.arange(nfeat), np.diff(feat_part_off))
+    if (part_feat.size != part_off.size
+            or (part_off < vert_off[part_feat]).any()
+            or (part_off > vert_off[part_feat + 1]).any()
+            or (np.diff(part_off)[np.diff(part_feat) == 0] < 0).any()):
+        raise ValueError("part offsets must be monotone inside each "
+                         "feature's vertex span")
 
     # ---- emission units, feature-contiguous: one per point feature (all
     # its vertices), one per part else; a part ends where the next one
@@ -1485,6 +1499,8 @@ def encode_tile_rows_flat(
     # structs {k, tag, s, f, d, i, u, si, b} (list or Arrow); overrides
     # props_json and preserves Float/Double/UInt/SInt/Bool type identity
     # that a JSON round-trip cannot (SURVEY §1.3; VectorTileReader.cs:166-214)
+    ys_off: np.ndarray | None = None,  # ys list spans, when ys was
+    # flattened apart from xs: must equal vert_off
 ) -> pa.Array:
     """Encode features (sorted + grouped by tile via tile_bounds) into one
     MVT blob per tile, returned as an Arrow binary array, fed directly
@@ -1495,6 +1511,8 @@ def encode_tile_rows_flat(
     encodes each distinct key and value once. Byte-identical to
     mvt.encode_tile over the same layers (asserted in tests)."""
     nfeat = feature_id.size
+    if ys_off is not None and not np.array_equal(ys_off, vert_off):
+        raise ValueError("every feature needs as many ys as xs")
     pc_ = np.diff(po_off)
     pcounts = np.maximum(pc_ - 1, 0)
     feat_part_off = np.zeros(nfeat + 1, dtype=np.int64)

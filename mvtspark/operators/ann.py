@@ -1,9 +1,9 @@
 """Similarity search over embedding columns (array<float>).
 
 - brute_force_topk: exact cosine top-k for a query set — the
-  correctness baseline. Query side is broadcast (it's small by
-  definition); similarity is native zip_with/aggregate (codegen), top-k
-  via window row_number (Spark's TakeOrderedAndProject shape).
+  correctness baseline. The query matrix ships to every corpus batch
+  (it's small by definition); each batch emits its local top-k, and a
+  window row_number picks the global top-k.
 - ivf_topk: the scale path — coarse quantizer (IVF): vectors are
   bucketed to their nearest of C centroids (computed once, broadcast);
   queries probe ``nprobe`` nearest buckets only. At 10^12 vectors the
@@ -31,58 +31,6 @@ def _dot(a, b):
     )
 
 
-def brute_force_topk(
-    emb: DataFrame, queries: DataFrame, k: int = 5, use_arrow: bool = True
-) -> DataFrame:
-    """Exact cosine top-k: for each query vector, the k most similar
-    corpus vectors (excluding itself when ids collide).
-
-    ``use_arrow`` (default): the query matrix is collected (queries are
-    small by definition) and shipped inside a ``mapInPandas`` closure;
-    each corpus Arrow batch is scored against ALL queries with numpy and
-    emits only its LOCAL top-k per query, so the final global window
-    sees ≤ k × n_batches × n_queries rows instead of |corpus| × |queries|.
-    The per-pair arithmetic runs dimension-sequentially (acc += a_d·b_d),
-    bit-identical to the relational left-fold (and the DuckDB oracle's
-    list_sum), so both paths hash-match. This is the 10^12-row shape:
-    corpus scanned once, nothing but top-k crosses a shuffle.
-
-    ``use_arrow=False``: pure-relational reference path (broadcast
-    nested-loop cross join + native higher-order-function fold).
-
-    Output: (query_id, vec_id, cosine, rank).
-    """
-    if use_arrow:
-        return _brute_force_topk_arrow(emb, queries, k)
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_norm"),
-        )
-    )
-    c = emb.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("c_norm")
-    )
-    scored = (
-        c.crossJoin(q)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_norm") * F.col("c_norm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
-    )
-
-
 def _seq_fold_dots(M, Q):
     """Per-pair dot products + norms with DIMENSION-SEQUENTIAL float64
     accumulation — the same operation order as a relational left fold,
@@ -100,7 +48,22 @@ def _seq_fold_dots(M, Q):
     return dots, np.sqrt(m_norm2)
 
 
-def _brute_force_topk_arrow(emb: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Exact cosine top-k: for each query vector, the k most similar
+    corpus vectors (excluding itself when ids collide).
+
+    The query matrix is collected (queries are small by definition) and
+    shipped inside a ``mapInPandas`` closure; each corpus Arrow batch is
+    scored against ALL queries with numpy and emits only its LOCAL top-k
+    per query, so the final global window sees ≤ k × n_batches ×
+    n_queries rows instead of |corpus| × |queries|. The per-pair
+    arithmetic runs dimension-sequentially (acc += a_d·b_d), bit-identical
+    to a relational left-fold (and the DuckDB oracle's list_sum). This is
+    the 10^12-row shape: corpus scanned once, nothing but top-k crosses a
+    shuffle.
+
+    Output: (query_id, vec_id, cosine, rank).
+    """
     import numpy as np
 
     q_rows = sorted(

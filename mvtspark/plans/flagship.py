@@ -1,8 +1,8 @@
-"""Flagship pipeline (SURVEY §3.3 "Spark analog"):
-
-images → project lat/lng to tiles (D19, native codegen) → PIP spatial
-join against tile polygons (J4) → salted per-tile aggregation (A6/A7) →
-MVT encode (S9) → decode-back parity (D1-D8) → per-tile summary.
+"""The north-star plan (SURVEY §3.3 "Spark analog"): images → project
+lat/lng to tiles (D19, native codegen) → PIP spatial join against tile
+polygons (J4) → salted per-tile aggregation (A6/A7) → MVT encode (S9),
+built by :func:`tile_plan` for the job, the flagship and ``bench.py``;
+:func:`flagship` adds decode-back parity (D1-D8) → per-tile summary.
 
 Shuffle budget: exactly two wide stages — the (zoom,x,y) aggregation and
 the per-tile encode group-by (they share partitioning, so AQE reuses the
@@ -14,6 +14,8 @@ bounds any single reducer's key volume.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,15 +26,46 @@ from ..sources.tiles import (
 )
 
 
-def flagship(
-    spark: SparkSession,
-    n_images: int = 1000,
-    zoom: int = 8,
-    salt_buckets: int = 16,
-    with_bytes: bool = False,
-) -> DataFrame:
-    """Returns the decoded-tile summary DF:
-    (zoom, x, y, feature_count, decoded_features, parity_ok).
+class TilePlan(NamedTuple):
+    assigned: DataFrame
+    joined: DataFrame
+    counts: DataFrame
+
+    @property
+    def tiles(self) -> DataFrame:
+        """Built on request only: point features need a ``caption``,
+        which count-only callers do not carry."""
+        return encode_tiles(point_features(self.joined), layer_name="images")
+
+
+def tile_plan(points: DataFrame, zoom: int, extent: int = 4096,
+              salt_buckets: int = 16, rings=None,
+              pending: Callable[[DataFrame], DataFrame] | None = None) -> TilePlan:
+    """The stage frames of the north-star plan over ``points`` (lat,
+    lng; image_id and caption to encode).
+
+    ``rings``: a prebuilt :func:`broadcast_rings` tile catalog. Without
+    it the dimension is the tiles the data actually hits, derived from
+    ``assigned`` — small and broadcastable at any zoom (never the full
+    4^zoom grid). Its only payload is ``extent``, which ``joined`` gets
+    as a literal. ``pending`` keeps the assigned rows still to do (the
+    job's resume: :func:`pending_work` over its checkpoint).
+    """
+    assigned = assign_tiles(points, zoom=zoom, extent=extent)
+    if pending is not None:
+        assigned = pending(assigned)
+    polys = None if rings is not None else tile_polygons(
+        assigned.select("zoom", "x", "y").distinct(), extent=extent)
+    joined = spatial_join_pip(
+        assigned, polys, broadcast_dim=True, rings=rings, attach_payload=False
+    ).withColumn("extent", F.lit(extent))
+    return TilePlan(assigned, joined, salted_tile_counts(joined, salt_buckets))
+
+
+def flagship(spark: SparkSession, n_images: int = 1000, zoom: int = 8) -> DataFrame:
+    """Returns the decoded-tile summary DF of :func:`tile_plan` over
+    synthetic images: (zoom, x, y, image_count, feature_count,
+    decoded_features, parity_ok).
 
     ``parity_ok`` is the decode-back check: every encoded tile re-decodes
     with our D1-D8 kernels to the same feature count (byte-level geometry
@@ -40,26 +73,11 @@ def flagship(
     re-reads its own sink output, the reference's bulk-decode test shape,
     TestMvtInBulk.cs:41-69).
     """
-    images = synth_images(spark, n_images, with_bytes=with_bytes)
-    assigned = assign_tiles(images, zoom=zoom)
-
-    # dimension: tiles the data actually hits (small — bounded by the
-    # city clusters), decorated with their boundary rings. In production
-    # this is the pre-built tile-catalog table; deriving it from the fact
-    # side keeps the dimension broadcastable at any zoom (never the full
-    # 4^zoom grid).
-    polys = tile_polygons(assigned.select("zoom", "x", "y").distinct())
-
-    joined = spatial_join_pip(assigned, polys, broadcast_dim=True)
-    counts = salted_tile_counts(joined, salt_buckets=salt_buckets)
-
-    # per-tile feature set: one point feature per image (id = stable row
-    # number within the tile, W2 deterministic ordering), props = caption
-    tiles = encode_tiles(point_features(joined), layer_name="images")
-
-    decoded = decode_tiles(tiles.select("zoom", "x", "y", "mvt"))
+    plan = tile_plan(synth_images(spark, n_images, with_bytes=False), zoom)
+    tiles = plan.tiles
     decoded_counts = (
-        decoded.where(F.col("decode_error").isNull())
+        decode_tiles(tiles.select("zoom", "x", "y", "mvt"))
+        .where(F.col("decode_error").isNull())
         .groupBy("zoom", "x", "y")
         .agg(F.count(F.lit(1)).alias("decoded_features"))
     )
@@ -67,7 +85,7 @@ def flagship(
     return (
         tiles.select("zoom", "x", "y", "feature_count")
         .join(decoded_counts, ["zoom", "x", "y"], "left")
-        .join(counts, ["zoom", "x", "y"], "left")
+        .join(plan.counts, ["zoom", "x", "y"], "left")
         .withColumn(
             "parity_ok", F.col("feature_count") == F.col("decoded_features")
         )

@@ -6,8 +6,9 @@ parquet directory — identical schema (FIXTURES.md §5), identical resume
 logic (left-anti join of planned work units vs completed keys). The
 storage backend is a one-line switch.
 
-Schema: job_id string, stage string, zoom int, part_id int,
-        row_count long, lineage string, ts timestamp
+Schema: job_id string, stage string, zoom int, x int, y int,
+        part_id int, row_count long, lineage string, ts timestamp
+(x and y are null on the rows of stages recorded per zoom only).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CHECKPOINT_SCHEMA = (
-    "job_id string, stage string, zoom int, part_id int, "
+    "job_id string, stage string, zoom int, x int, y int, part_id int, "
     "row_count long, lineage string, ts timestamp"
 )
 
@@ -54,7 +55,10 @@ def write_stage_checkpoint(
 
 
 def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
-    """Empty-on-absent read of the lineage table.
+    """Empty-on-absent read of the lineage table, always in
+    ``CHECKPOINT_SCHEMA``: stages write different partition columns (the
+    job's ``agg`` rows have no x/y), so an inferred schema would depend
+    on which part file Spark happens to sample.
 
     Storage-agnostic: a local-only ``os.path.exists`` probe would make
     every absence check silently succeed on object-store paths
@@ -64,7 +68,7 @@ def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
     if "://" not in path and not os.path.exists(path):
         return spark.createDataFrame([], CHECKPOINT_SCHEMA)
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
     except Exception as e:  # AnalysisException PATH_NOT_FOUND
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return spark.createDataFrame([], CHECKPOINT_SCHEMA)

@@ -28,30 +28,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# (shift, mask) rounds that spread a 16-bit int onto even bit positions;
-# identical constants to kernels/cells._interleave_bits.
-_SPREAD_ROUNDS = (
-    (8, 0x00FF00FF),
-    (4, 0x0F0F0F0F),
-    (2, 0x33333333),
-    (1, 0x55555555),
-)
-
-
-def _spread(c: Column) -> Column:
-    c = c.cast("long").bitwiseAND(F.lit(0xFFFF))
-    for shift, mask in _SPREAD_ROUNDS:
-        c = c.bitwiseOR(F.shiftleft(c, shift)).bitwiseAND(F.lit(mask))
-    return c
+from ..functions.geodesy import _spread64
 
 
 def zvalue(x: Column, y: Column) -> Column:
     """Morton z-value of two 16-bit grid coordinates (native codegen).
 
     Supports zoom <= 16 tile addresses (the reference's own fixture
-    zooms); larger grids would move to the 32-bit spread variant.
+    zooms): both inputs are masked to 16 bits before the spread.
     """
-    return _spread(x).bitwiseOR(F.shiftleft(_spread(y), 1)).alias("z")
+    x16, y16 = (c.cast("long").bitwiseAND(F.lit(0xFFFF)) for c in (x, y))
+    return _spread64(x16).bitwiseOR(F.shiftleft(_spread64(y16), 1)).alias("z")
 
 
 def write_zordered(

@@ -379,7 +379,7 @@ def encode_tiles(
             return arr.flatten().to_numpy(zero_copy_only=False), off
 
         xs_f, vert_off = _flat("xs")
-        ys_f, _ = _flat("ys")
+        ys_f, ys_off = _flat("ys")
         po_f, po_off = _flat("part_offsets")
         blobs = encode_tile_rows_flat(
             tile_bounds,
@@ -394,6 +394,7 @@ def encode_tiles(
             # Float/Double/UInt/SInt/Bool identity losslessly
             props_typed=tbl.column("props_t")
             if "props_t" in tbl.schema.names else None,
+            ys_off=ys_off,
         )
         return pa.RecordBatch.from_arrays(
             [

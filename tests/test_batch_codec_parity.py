@@ -181,6 +181,29 @@ def test_batch_encode_matches_encode_tile():
     _assert_same(blobs.to_pylist(), expected)
 
 
+@pytest.mark.parametrize("xs, ys, off", [
+    ([0, 1], [0, 1], [0, 3]),           # the part runs past the vertices
+    ([0, 1, 2], [0, 1], [0, 3]),        # fewer ys than xs
+    ([0, 1, 2], [0, 1, 2], [0, 2, 1, 3]),  # part starts out of order
+])
+def test_encode_commands_rejects_malformed_spans(xs, ys, off):
+    with pytest.raises(ValueError):
+        geom.encode_commands(xs, ys, off, geom.GEOM_LINESTRING)
+
+
+def test_encode_tile_rows_flat_rejects_ragged_ys():
+    """Two features with 1+2 xs but 2+1 ys: the totals agree, the
+    per-feature spans do not."""
+    xs = ys = np.array([5, 6, 7], np.int64)
+    with pytest.raises(ValueError):
+        mvt_batch.encode_tile_rows_flat(
+            np.array([0, 2], np.int64), np.array([1, 2], np.int64),
+            np.array([2, 2], np.int64), xs, ys, np.array([0, 1, 3], np.int64),
+            np.array([0, 1, 0, 2], np.int32), np.array([0, 2, 4], np.int64),
+            [None, None], "l", np.array([4096], np.int64),
+            ys_off=np.array([0, 2, 3], np.int64))
+
+
 def _outcome(fn, *args):
     """(lists of the outputs) or the GeometryError message of one call."""
     try:
